@@ -1,4 +1,6 @@
 package graft
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every registry query end-to-end and emits machine-
@@ -25,17 +27,15 @@ import org.apache.spark.sql.SparkSession
   * same dev filter Verify honors.
   */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val nRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    // repo-root default (round-9 verdict: BENCH_r*.json tail-capture
-    // truncates the per-query dict — 81 of 177 gates visible — making
-    // cross-round per-gate regression analysis lossy; a working-tree file
-    // is committed by the driver's end-of-round sweep and survives intact)
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_times.json")
+  /** The engine's one session profile: every main and the test suite
+    * build their session here, with `cpus` local cores and as many
+    * shuffle partitions. Three environment knobs remain, each defaulting
+    * to a non-stock value in use: `SPARK_GRAFT_CKPT_FM_LOCAL`,
+    * `SPARK_GRAFT_AQE_MIN_PART` and `SPARK_GRAFT_ROCKSDB_CHANGELOG`.
+    * Calling it again on a live session reapplies the runtime confs and
+    * leaves the optimizer rule installed once.
+    */
+  def session(cpus: Int): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -70,25 +70,7 @@ object Bench {
           "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
         else
           "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager")
-      // r20 AQE-coalescing experiment knob (guide §2.2 / r19-verdict
-      // scaling block): SPARK_GRAFT_AQE_COALESCE=size switches partition
-      // coalescing from the parallelism-first default to size-based
-      // (parallelismFirst=false, advisory SPARK_GRAFT_ADVISORY_PART,
-      // cached-plan re-optimization on). Measured r20 full-board A/B at
-      // sf0.1/local[32]: size-based is a NET LOSS here (geomean 1.12,
-      // worst gates +2.4 s) — the tiny-SF stages are fixed-cost/compute-
-      // bound, so folding byte-small exchanges serializes kernel and
-      // cached-frame stages; measurement details in OPTIMIZATION_r20.md.
-      // On a real cluster with advisory 64-256m and byte-bound stages,
-      // size-based is the standard setting — flip the env there.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        if (sys.env.getOrElse("SPARK_GRAFT_AQE_COALESCE", "parallel") == "size")
-          "false" else "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PART", "64m"))
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        if (sys.env.getOrElse("SPARK_GRAFT_AQE_COALESCE", "parallel") == "size")
-          "true" else "false")
+      // size-based AQE coalescing lost at sf0.1 (geomean 1.12×): OPTIMIZATION_r20.md
       // r20 (StageProbe measurement, guide §1): parallelism-first AQE
       // coalescing still floors partitions at minPartitionSize (1m
       // default), which folded CPU-DENSE small-byte exchanges — the
@@ -134,9 +116,32 @@ object Bench {
       .config("spark.sql.codegen.cache.maxEntries", "4000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // engine optimizer rules (length prefilter for jaccard thresholds)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.JaccardLengthFilter
+    // the registry's bounded windows (e.g. the offsets step of a prefix
+    // sum) trip WindowExec's unpartitioned-window WARN on every run; the
+    // real rule is enforced by the plan audits of PlanAuditSpec and
+    // PrefixSpec, so only this logger is muted
+    Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec", Level.ERROR)
+    // engine optimizer rules (length prefilter for jaccard thresholds);
+    // reinstalling on a live session must not stack a second copy
+    if (!spark.experimental.extraOptimizations.contains(graft.plans.JaccardLengthFilter))
+      spark.experimental.extraOptimizations =
+        spark.experimental.extraOptimizations :+ graft.plans.JaccardLengthFilter
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val nRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    // repo-root default (round-9 verdict: BENCH_r*.json tail-capture
+    // truncates the per-query dict — 81 of 177 gates visible — making
+    // cross-round per-gate regression analysis lossy; a working-tree file
+    // is committed by the driver's end-of-round sweep and survives intact)
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_times.json")
+    val spark = session(cpus)
     // Warm up codegen/JIT/parquet-reader paths so the first timed query
     // doesn't absorb one-time session costs.
     spark.range(1000000).selectExpr("sum(id)").collect()

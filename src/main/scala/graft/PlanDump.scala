@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{ExtendedMode, FormattedMode}
 
 /** Plan-audit utility: print the extended (or formatted) explain of any
@@ -17,19 +16,15 @@ object PlanDump {
       s"per query instead of stdout; queries: " +
       s"${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
+    // reject every unknown name up front, before any session or dump
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"PlanDump: unknown queries: ${unknown.mkString(", ")}")
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
     val mode = if (args.length > 2 && args(2) == "formatted") FormattedMode else ExtendedMode
     // out spec "plans/r20/before" → plans/r20/<query>_before.txt (one JVM
     // for a whole batch of dumps — per-query sbt startup dwarfs the dump)
     val outSpec = sys.env.get("SPARK_GRAFT_PLAN_OUT")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.debug.maxToStringFields", "2000")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.JaccardLengthFilter
+    val spark = Bench.session(4)
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       val text = df.queryExecution.explainString(mode)

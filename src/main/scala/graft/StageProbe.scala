@@ -2,42 +2,21 @@ package graft
 
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-stage cost probe (guide §1 empirical loop, headless): run one
   * registry gate warm and print every stage of the timed execution —
   * wall ms, summed executor run/CPU ms, task count, shuffle read/write
   * bytes — so "where does this gate spend its time" is a measurement,
   * not a plan-shape guess. `runMain graft.StageProbe <query> [sfDir]
-  * [cpus]`. Bench-identical session config (same AQE/shuffle knobs).
+  * [cpus]`. Runs on the engine session profile, [[Bench.session]].
   */
 object StageProbe {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: StageProbe <query> [sfDir] [cpus]")
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = if (args.length > 2) args(2) else "32"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.debug.maxToStringFields", "2000")
-      // mirror Bench's AQE knobs so probed stages match benched stages
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        if (sys.env.getOrElse("SPARK_GRAFT_AQE_COALESCE", "parallel") == "size")
-          "false" else "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PART", "64m"))
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        if (sys.env.getOrElse("SPARK_GRAFT_AQE_COALESCE", "parallel") == "size")
-          "true" else "false")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PART", "64k"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.JaccardLengthFilter
+    val cpus = if (args.length > 2) args(2).toInt else 32
+    val spark = Bench.session(cpus)
     val fn = SparkEntry.queries(name)
     // warm pass: codegen/JIT/broadcast machinery, same as Bench pass-0
     fn(spark, sfDir).write.format("noop").mode("overwrite").save()

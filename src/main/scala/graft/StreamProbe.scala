@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** r19 measurement utility (guide §1): run one streaming registry gate
@@ -17,33 +16,8 @@ object StreamProbe {
     require(args.nonEmpty, "usage: StreamProbe <gate> [sfDir] [cpus]")
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = if (args.length > 2) args(2) else "32"
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.debug.maxToStringFields", "2000")
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "10000")
-      // bench-identical checkpoint manager (see Bench.scala) — without
-      // this the probe measures the FileContext layer the bench no
-      // longer uses
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        if (sys.env.getOrElse("SPARK_GRAFT_CKPT_FM_LOCAL", "1") == "1")
-          "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
-        else
-          "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PART", "64k"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // experiment passthrough: SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" — A/B a
-    // candidate session conf without recompiling the probe
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      spark.conf.set(k.trim, v.trim)
-    })
-    spark.sparkContext.setLogLevel("WARN")
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.JaccardLengthFilter
+    val cpus = if (args.length > 2) args(2).toInt else 32
+    val spark = Bench.session(cpus)
     val sb = new StringBuilder
     spark.streams.addListener(new StreamingQueryListener {
       override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =

@@ -1,49 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // wide FHIR structs exceed the default 25-field print cap
-      .config("spark.sql.debug.maxToStringFields", "2000")
-      // driver-side listing for small path batches (see Bench.scala)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "10000")
-      // local-FS checkpoint file manager — see the measured rationale in
-      // Bench.scala (same env override)
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        if (sys.env.getOrElse("SPARK_GRAFT_CKPT_FM_LOCAL", "1") == "1")
-          "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
-        else
-          "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager")
-      // AQE partition-coalescing mode — see the measured rationale in
-      // Bench.scala (same env override)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        if (sys.env.getOrElse("SPARK_GRAFT_AQE_COALESCE", "parallel") == "size")
-          "false" else "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PART", "64m"))
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        if (sys.env.getOrElse("SPARK_GRAFT_AQE_COALESCE", "parallel") == "size")
-          "true" else "false")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MIN_PART", "64k"))
-      // RocksDB changelog checkpointing — measured rationale in Bench.scala
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        if (sys.env.getOrElse("SPARK_GRAFT_ROCKSDB_CHANGELOG", "1") == "1")
-          "true" else "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // engine optimizer rules (length prefilter for jaccard thresholds)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.JaccardLengthFilter
+    val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     // Pin the SF-scoped oracle paths to THIS run's input before anything
     // dumps or runs: oracleSql is def-evaluated at the end of main, and
@@ -141,18 +103,25 @@ object Verify {
     // Dev-loop filter: SPARK_GRAFT_ONLY=name1,name2 runs a subset without
     // paying for the full registry. Unset (driver runs) = everything.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    SparkEntry.queries
+    val failed = SparkEntry.queries.toSeq
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+      .flatMap { case (name, fn) =>
       // near-dup operators persist intermediates by design; drop them
-      // between queries so 41 queries don't stack cache evictions
+      // between queries so they don't stack cache evictions. releaseAll
+      // first, as in Bench.timeOne: clearCache alone leaves the
+      // CachedFrames registry pinning every released Dataset's plan.
+      graft.CachedFrames.releaseAll()
       spark.catalog.clearCache()
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
+    if (failed.nonEmpty)
+      System.err.println(s"[verify] ${failed.size} gate(s) failed: ${failed.sorted.mkString(", ")}")
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -23,8 +23,9 @@ import graft.functions.expressions.JaccardSorted
   *
   * Runs in the operator-optimization fixed point, so it must be
   * idempotent: conjuncts already present (semantically) are not re-added.
-  * Activate with `spark.experimental.extraOptimizations` (done by
-  * Verify/Bench) or `SparkSessionExtensions.injectOptimizerRule`
+  * Activate with `spark.experimental.extraOptimizations` (done by the
+  * session profile, [[graft.Bench.session]]) or
+  * `SparkSessionExtensions.injectOptimizerRule`
   * ([[graft.functions.GraftExtensions]]).
   */
 object JaccardLengthFilter extends Rule[LogicalPlan] with PredicateHelper {

@@ -4,7 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session — Spark
-  * session startup is ~5 s, so suites must not each build their own).
+  * session startup is ~5 s, so suites must not each build their own),
+  * built on the engine's session profile at a fixed `local[4]`, so the
+  * suite exercises the same confs and optimizer rule as Verify and Bench.
   */
 object SparkSpec {
   lazy val spark: SparkSession = {
@@ -16,15 +18,7 @@ object SparkSpec {
       new java.io.File("target").mkdirs()
       System.setProperty("derby.stream.error.file", "target/derby.log")
     }
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    Bench.session(4)
   }
 }
 

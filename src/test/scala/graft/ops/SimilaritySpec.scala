@@ -297,6 +297,29 @@ class SimilaritySpec extends SparkSpec {
       again.exceptAll(codes).count() == 0L, "PQ must be deterministic")
   }
 
+  test("pqTrain: one failed subspace fails the call, and no sibling job starts after it") {
+    // element 0 is not a number, so only subspace 0's slice fails its
+    // (ANSI) cast; subspaces 1-3 would otherwise keep training
+    val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+      .select(col("vec_id"), expr(
+        "transform(embedding, (x, i) -> if(i = 0, 'nan?', cast(x as string)))")
+        .as("embedding"))
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        starts.add(e.time)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      intercept[Exception](Similarity.pqTrain(emb, "vec_id", "embedding",
+        dim = 64, numSubspaces = 4, numCentroids = 8, iters = 3))
+      val failedAt = System.currentTimeMillis()
+      Thread.sleep(1500)
+      val late = starts.toArray.count(_.asInstanceOf[Long] > failedAt)
+      assert(late == 0, s"$late jobs started after the call failed")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("quantizedTopK: int8-code search recall vs exact meets a high floor") {
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     val recall = Similarity.quantizedRecall(

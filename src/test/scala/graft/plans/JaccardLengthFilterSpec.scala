@@ -3,6 +3,8 @@ package graft.plans
 import graft.SparkSpec
 import graft.functions._
 import graft.ops.Dedup
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions._
 
 class JaccardLengthFilterSpec extends SparkSpec {
@@ -15,13 +17,18 @@ class JaccardLengthFilterSpec extends SparkSpec {
     (4L, "q r s t u v w x y z"))
     .toDF("doc_id", "text")
 
-  private def withRule[T](body: => T): T = {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ JaccardLengthFilter
+  // The shared session already carries the rule (session profile), so
+  // each arm sets the rule list explicitly and restores the exact prior
+  // list afterwards: no suite running later sees it added or stripped.
+  private def withRules[T](rules: Seq[Rule[LogicalPlan]])(body: => T): T = {
+    val prior = spark.experimental.extraOptimizations
+    spark.experimental.extraOptimizations = rules
     try body
-    finally spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == JaccardLengthFilter)
+    finally spark.experimental.extraOptimizations = prior
   }
+  private def otherRules = spark.experimental.extraOptimizations.filterNot(_ == JaccardLengthFilter)
+  private def withRule[T](body: => T): T = withRules(otherRules :+ JaccardLengthFilter)(body)
+  private def withoutRule[T](body: => T): T = withRules(otherRules)(body)
 
   test("rule injects size() length filters into jaccard threshold filters, idempotently") {
     withRule {
@@ -70,7 +77,7 @@ class JaccardLengthFilterSpec extends SparkSpec {
     Seq(0.25, 0.4, 0.5).foreach { t =>
       def run() = Dedup.ngramJaccardPairs(pairs, "text", "doc_id", n = 1, threshold = t)
         .as[(Long, Long, Double)].collect().toSet
-      val without = run()
+      val without = withoutRule(run())
       val withR = withRule(run())
       assert(without == withR, s"threshold $t")
     }
@@ -79,7 +86,7 @@ class JaccardLengthFilterSpec extends SparkSpec {
   test("results identical with and without the rule") {
     def run() = Dedup.ngramJaccardPairs(docs, "text", "doc_id", n = 2, threshold = 0.5)
       .as[(Long, Long, Double)].collect().toSet
-    val without = run()
+    val without = withoutRule(run())
     val withR = withRule(run())
     assert(without == withR)
     assert(without.contains((1L, 2L, 1.0)))
