@@ -414,11 +414,11 @@ object SparkEntry {
       .select(docsSchema.fields.toSeq.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
   }
 
-  // per-JVM scratch root for the jsonl_roundtrip gate's write half; keyed
-  // by the input dir so two frames built before execution can't clobber
-  // each other's export
+  // per-JVM scratch root for the round-trip gates' write halves (deleted
+  // at JVM exit); keyed by the input dir so two frames built before
+  // execution can't clobber each other's export
   private lazy val jsonlScratchRoot: String =
-    java.nio.file.Files.createTempDirectory("graft_jsonl").toString
+    TempRoots.create("graft_jsonl").toString
   private def pathKey(dir: String): String = {
     // key by md5 of the full path: 32-bit String.hashCode collisions
     // between two input dirs in one JVM would silently clobber the other's
@@ -432,8 +432,6 @@ object SparkEntry {
     jsonlScratchRoot + "/csv-" + pathKey(dir)
   private def orcScratchDir(dir: String): String =
     jsonlScratchRoot + "/orc-" + pathKey(dir)
-  private def mergeScratchDir(dir: String): String =
-    jsonlScratchRoot + "/merge-" + pathKey(dir)
   // embedded-Derby scratch database for the jdbc_roundtrip gate — one DB
   // per (JVM, input dir), same clobber-isolation contract as the
   // csv/jsonl/orc scratch dirs. Routing derby.log into the scratch root
@@ -477,6 +475,10 @@ object SparkEntry {
     * signature kernel itself stays spec-pinned (TextKernels specs).
     */
   def simhashDumpDir(dir: String): String = verifyDumpDir("simhash-sigs", dir)
+
+  /** Where the schema_merge gate writes its v1/v2 documents snapshots,
+    * which its oracle SQL reads back with union_by_name. */
+  def schemaMergeDumpDir(dir: String): String = verifyDumpDir("schema-merge", dir)
 
   /** Stable (survives the Verify JVM — the DuckDB oracle runs later in
     * another process), SF-SCOPED dump path under target/. Keyed by
@@ -550,13 +552,7 @@ object SparkEntry {
       }
       val marker = new java.io.File(root, s"_complete_$digest")
       if (!marker.exists()) {
-        if (root.exists()) {
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-            f.delete()
-          }
-          rm(root)
-        }
+        TempRoots.deleteRecursively(root)
         root.mkdirs()
         slices.foreach { case (name, df, codec, blockSize) =>
           val tmp = new java.io.File(root, s"_tmp_$name")
@@ -574,11 +570,7 @@ object SparkEntry {
           java.nio.file.Files.move(part.toPath,
             new java.io.File(root, s"$name.parquet").toPath,
             java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-            f.delete()
-          }
-          rm(tmp)
+          TempRoots.deleteRecursively(tmp)
         }
         java.nio.file.Files.writeString(marker.toPath, digest)
       }
@@ -598,13 +590,7 @@ object SparkEntry {
       }
       val marker = new java.io.File(root, s"_complete_${ids.length}_$idDigest")
       if (!marker.exists()) {
-        if (root.exists()) {
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-            f.delete()
-          }
-          rm(root)
-        }
+        TempRoots.deleteRecursively(root)
         root.mkdirs()
         ids.foreach { id =>
           java.nio.file.Files.write(
@@ -1883,14 +1869,14 @@ object SparkEntry {
     // into one frame via mergeSchema. Pre-evolution rows must surface
     // the late columns as null in BOTH engines (DuckDB union_by_name
     // reads the same files), pinning the backfill contract end-to-end.
-    // Scratch is SF-SCOPED like the jsonl/csv/orc round-trips (r16: the
-    // static path let a later run at another SF clobber the files the
-    // dumped oracle reads — harmless in driver order, a landmine for
-    // any out-of-order re-compare); the oracle resolves the same dir
-    // through verifySfDir, set here like `provenance` does.
+    // The snapshots are a verify dump: SF-SCOPED (r16: a static path let
+    // a later run at another SF clobber the files the dumped oracle
+    // reads) and under target/, because DuckDB reads them after this
+    // JVM exits; the oracle resolves the same dir through verifySfDir,
+    // set here like `provenance` does.
     "schema_merge" -> ((s, dir) => {
       verifySfDir = dir
-      val scratch = mergeScratchDir(dir)
+      val scratch = schemaMergeDumpDir(dir)
       val docs = t(s, dir, "documents").filter(col("doc_id").isNotNull)
       graft.sinks.Sinks.writeParquet(
         docs.filter(pmod(col("doc_id"), lit(2)) === 0)
@@ -6787,8 +6773,8 @@ object SparkEntry {
     "schema_merge" ->
       s"""SELECT doc_id, text, source, lang, n_chars
          |FROM read_parquet(
-         |  ['${mergeScratchDir(verifySfDir)}/v1/*.parquet',
-         |   '${mergeScratchDir(verifySfDir)}/v2/*.parquet'],
+         |  ['${schemaMergeDumpDir(verifySfDir)}/v1/*.parquet',
+         |   '${schemaMergeDumpDir(verifySfDir)}/v2/*.parquet'],
          |  union_by_name=true)
          |ORDER BY doc_id""".stripMargin,
 

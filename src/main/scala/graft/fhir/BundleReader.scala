@@ -116,8 +116,8 @@ object BundleReader {
   /** Staging compaction — the 100 TB answer to per-patient bundle files.
     * multiLine JSON is whole-file-per-record and unsplittable: every
     * downstream pass over a raw bundle directory re-pays listing + one
-    * JSON parse per small file (ScaleProbe `fhirIngest`: the small-files
-    * tax is sublinear but real). Compacting once to columnar parquet of
+    * JSON parse per small file (a 1×/8× ingest probe measured the
+    * small-files tax as sublinear but real). Compacting once to columnar parquet of
     * NORMALIZED entries makes every later read splittable, predicate/
     * projection-prunable (each extractor reads only its resource
     * branches), and ~10× smaller on the wire. Run it at ingest time —

@@ -92,13 +92,12 @@ object FhirFixtures {
   /** Both fixture bundles written to ONE per-JVM temp directory — the
     * registry queries (`fhir_pipeline`, `fhir_tables`) and any spec can
     * share it instead of leaking a fresh directory per invocation in
-    * long-lived sessions.
+    * long-lived sessions; it is deleted at JVM exit.
     */
   lazy val fixtureDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_fhir_fixtures")
+    val dir = graft.TempRoots.create("graft_fhir_fixtures")
     java.nio.file.Files.writeString(dir.resolve("b1.json"), bundle1)
     java.nio.file.Files.writeString(dir.resolve("b2.json"), bundle2)
-    dir.toFile.deleteOnExit()
     dir.toString
   }
 

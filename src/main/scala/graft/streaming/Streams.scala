@@ -1590,24 +1590,6 @@ object Streams {
     // for real deployments with large state.
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete()
-  }
-
-  /** Replay temp roots awaiting JVM-exit cleanup: one static set + ONE
-    * lazily-installed shutdown hook, instead of a hook per
-    * [[stageEventTimeReplay]] call — and roots are enrolled immediately
-    * after creation, so the failure paths (null-event-time refusal,
-    * mtime refusal) no longer leak a half-staged tree.
-    */
-  private val replayRoots =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
-  private lazy val replayReaper: Unit = {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      replayRoots.forEach(p => deleteRecursively(p.toFile))))
-  }
-
   /** Stage a bounded frame as a DETERMINISTIC event-time backlog replay:
     * one parquet file per non-empty `bucketUs` bucket of `microsCol`,
     * modification times ascending in bucket order, so a file-source
@@ -1642,9 +1624,7 @@ object Streams {
     require(n <= maxRows,
       s"stageEventTimeReplay is a single-writer replay harness: $n rows " +
         s"exceeds the $maxRows cap — stream the source directly instead")
-    val root = java.nio.file.Files.createTempDirectory("graft_replay")
-    replayRoots.add(root) // enroll BEFORE any failure path can throw
-    replayReaper // install the single JVM-exit reaper (idempotent)
+    val root = graft.TempRoots.create("graft_replay")
     val byBucket = root.resolve("by_bucket").toString
     df.withColumn("__b",
         org.apache.spark.sql.functions.expr(s"CAST(`$microsCol` DIV $bucketUs AS LONG)"))
@@ -1681,8 +1661,8 @@ object Streams {
     // the emptied staging tree is dead weight once the chunks are moved;
     // the chunks themselves must outlive this call (memoized per JVM and
     // re-read every bench pass), so the root stays enrolled in
-    // [[replayRoots]] and is reaped by the single JVM-exit hook
-    deleteRecursively(new java.io.File(byBucket))
+    // [[graft.TempRoots]] and is reaped at JVM exit
+    graft.TempRoots.deleteRecursively(new java.io.File(byBucket))
     out.toString
   }
 
@@ -1721,9 +1701,7 @@ object Streams {
     val split = if (splitAt > 0) splitAt else chunkFiles.length / 2
     require(split > 0 && split < chunkFiles.length,
       s"need a two-phase split: $split of ${chunkFiles.length} chunks")
-    val root = java.nio.file.Files.createTempDirectory("graft_restart")
-    replayRoots.add(root)
-    replayReaper
+    val root = graft.TempRoots.create("graft_restart")
     val src = root.resolve("src").toFile
     val out = root.resolve("out").toString
     val ckpt = root.resolve("ckpt").toString

@@ -44,7 +44,7 @@ class PlanAuditSpec extends SparkSpec {
       // residual PQ codebooks in the builder
       "ann_ivf", "ann_ivf_recall", "ann_ivfpq", "ann_ivfpq_recall",
       // builders write the JSONL/CSV/parquet exports before reading them
-      // back; schema_merge's snapshots live at a STATIC path (the oracle
+      // back; schema_merge's snapshots live at a stable path under target/ (the oracle
       // reads the same files), so auditing it here would clobber a
       // concurrent Verify run's export mid-compare
       "jsonl_roundtrip", "csv_roundtrip", "csv_roundtrip_docs",

@@ -27,7 +27,8 @@ class VerifyDumpSpec extends SparkSpec {
       SparkEntry.simhashDumpDir, SparkEntry.neardupBandsDumpDir,
       SparkEntry.bpeMergesDumpDir, SparkEntry.pqDumpDir,
       SparkEntry.lshKeysDumpDir, SparkEntry.scaledLshDumpDir,
-      SparkEntry.fingerprintDumpDir, SparkEntry.compressionDumpDir)
+      SparkEntry.fingerprintDumpDir, SparkEntry.compressionDumpDir,
+      SparkEntry.schemaMergeDumpDir)
     dirs.foreach { f =>
       assert(f("/root/testdata/sf0.001") != f("/root/testdata/sf0.01"),
         "dump dir must be keyed by the input dir")
@@ -35,8 +36,18 @@ class VerifyDumpSpec extends SparkSpec {
       // the run and must resolve the same path the writer used)
       assert(f(sfDir) == f(sfDir))
     }
-    // all eight live under distinct roots for one dir (no cross-op clobber)
+    // all nine live under distinct roots for one dir (no cross-op clobber)
     assert(dirs.map(_(sfDir)).distinct.size == dirs.size)
+  }
+
+  test("schema_merge's oracle reads its snapshots under target/, not a per-JVM temp dir") {
+    val prior = SparkEntry.verifySfDir
+    SparkEntry.verifySfDir = sfDir
+    val sql = try SparkEntry.oracleSql("schema_merge") finally SparkEntry.verifySfDir = prior
+    val target = new java.io.File("target").getAbsolutePath
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir")).getAbsolutePath
+    assert(sql.contains(SparkEntry.schemaMergeDumpDir(sfDir)) && sql.contains(target + "/"))
+    assert(!sql.contains(tmp + "/"), s"oracle SQL names a path under $tmp:\n$sql")
   }
 
   test("band dump day d ≡ the staged replay's delivered ts bucket, doc by doc") {

@@ -12,9 +12,8 @@ class FhirCorpusSpec extends SparkSpec {
   private val N = 300
 
   private lazy val dir: String = {
-    val p = java.nio.file.Files.createTempDirectory("graft_fhir_corpus_spec")
+    val p = graft.TempRoots.create("graft_fhir_corpus_spec")
     FhirCorpus.generate(p, N)
-    p.toFile.deleteOnExit()
     p.toString
   }
 
