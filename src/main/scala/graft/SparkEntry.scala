@@ -2548,9 +2548,9 @@ object SparkEntry {
 
     // §2.11 curation — sequence packing: global token offset of every doc
     // in the id-ordered concatenated stream (capacity-512 training
-    // sequences). Distributed two-phase prefix sum — the only single-task
-    // step is a window over O(partitions) rows; the oracle is the naive
-    // global window cumsum.
+    // sequences). Distributed prefix sum (Prefix.exclusiveSums) — no
+    // single-task step over the data; the oracle is the naive global
+    // window cumsum.
     "sequence_pack" -> ((s, dir) =>
       Curation.packSequences(
         t(s, dir, "documents")
@@ -2922,8 +2922,8 @@ object SparkEntry {
     // KS drift on the SAME synthetic shift as drift_psi (user parity
     // split, current side scaled+shifted): binning-free complement —
     // top-10 ECDF gap points localize where the distributions diverge;
-    // row 1's ks_gap is the KS statistic. Distributed two-phase prefix
-    // sum, never a single-task global window.
+    // row 1's ks_gap is the KS statistic. Distributed prefix sum
+    // (Prefix.exclusiveSums), never a single-task global window.
     "ks_drift" -> ((s, dir) => {
       val ev = t(s, dir, "events")
       graft.ops.Profiling.ksDrift(

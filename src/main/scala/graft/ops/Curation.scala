@@ -34,8 +34,8 @@ import org.apache.spark.sql.functions._
   *     corpus-grained. For a single giant group, cap rows first
   *     (e.g. topk by priority) or raise the budget granularity.
   *   - `packSequences`/`shuffleOrder` need a global total order — they
-  *     use a distributed two-phase prefix sum whose only single-task step
-  *     is over O(partitions) rows, never the data.
+  *     run [[Prefix.exclusiveSums]], whose only driver step is over
+  *     #partitions totals, never the data.
   *   - `chunkDocuments`/`epochMixture` fan out executor-side via
   *     `explode(sequence)` — never a driver loop; output rows inherit the
   *     input partitioning.
@@ -410,84 +410,36 @@ object Curation {
     * sequences; `spans_boundary` marks docs crossing a sequence edge.
     *
     * The naive form is a GLOBAL cumulative sum — a single-partition window
-    * that serializes the whole corpus through one task. This
-    * implementation is the distributed two-phase prefix sum:
-    *   1. range-partition by id (deterministic bounds), cumsum WITHIN each
-    *      partition in parallel;
-    *   2. per-partition token totals (one tiny row per partition) get an
-    *      exclusive prefix on the driver-side-small frame, broadcast back.
-    * Output values are partitioning-independent: the offset is defined by
-    * the total order on `idCol` alone (ids must be unique).
+    * that serializes the whole corpus through one task. This runs
+    * [[Prefix.exclusiveSums]] over the id order instead (`numPartitions`
+    * fixes its range partition count; 0 = the session's choice). Output
+    * values are partitioning-independent: the offset is defined by the
+    * total order on `idCol` alone (ids must be unique); a null token
+    * count adds 0.
     */
   def packSequences(
       df: DataFrame, idCol: String, tokenCol: String,
       capacity: Long, numPartitions: Int = 0): DataFrame = {
     require(capacity > 0, s"capacity=$capacity")
-    exclusivePrefixSum(df, Seq(col(idCol)), col(tokenCol).cast("long"),
-        numPartitions, "start_offset")
+    Prefix.exclusiveSums(df, Seq(col(idCol)),
+        Seq("start_offset" -> col(tokenCol)), numPartitions)
       .withColumn("seq_id", expr(s"start_offset DIV $capacity"))
       .withColumn("seq_pos", pmod(col("start_offset"), lit(capacity)))
       .withColumn("spans_boundary",
         expr(s"(start_offset + `$tokenCol` - 1) DIV $capacity") > col("seq_id"))
   }
 
-  /** Distributed exclusive prefix sum of `value` over the total order
-    * `orderCols` (must be a key — unique): adds `outCol` = sum of `value`
-    * over all strictly-preceding rows. Two phases: range-partition on the
-    * order, cumsum within each partition in parallel, then an exclusive
-    * prefix over the per-partition totals (O(partitions) rows — that tiny
-    * window is the only single-task step) broadcast back. Output values
-    * depend on the total order alone, not the partitioning.
-    */
-  private def exclusivePrefixSum(
-      df: DataFrame, orderCols: Seq[Column], value: Column,
-      numPartitions: Int, outCol: String): DataFrame = {
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else df.sparkSession.sessionState.conf.numShufflePartitions
-    // persist the ranged frame: BOTH the cumsum branch and the totals
-    // branch read it, and without the cache each branch re-scans and
-    // re-range-shuffles the input (verified in the physical plan) — 2×
-    // cost AND each branch would derive `__pid` from an independent
-    // range-sampling pass, silently corrupting offsets if the two
-    // partitionings ever diverged. Same documented caching contract as
-    // the near-dup family (Dedup.scala): callers batch-running many ops
-    // should `graft.CachedFrames.releaseAll()` between them.
-    val ranged = df
-      .repartitionByRange(parts, orderCols: _*)
-      .withColumn("__val", value)
-      .withColumn("__pid", spark_partition_id())
-      .transform(graft.CachedFrames.cached)
-    val withinW = Window.partitionBy(col("__pid")).orderBy(orderCols: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val within = ranged.withColumn("__cum_in", sum(col("__val")).over(withinW))
-    val offsets = ranged.groupBy(col("__pid"))
-      .agg(sum(col("__val")).as("__ptotal"))
-      .withColumn("__poffset",
-        coalesce(
-          sum(col("__ptotal")).over(
-            Window.orderBy(col("__pid")).rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-      .select(col("__pid"), col("__poffset"))
-    within.join(broadcast(offsets), Seq("__pid"))
-      .withColumn(outCol, col("__poffset") + col("__cum_in") - col("__val"))
-      .drop("__pid", "__cum_in", "__poffset", "__val")
-  }
-
   /** 0-based dense global rank under `orderCols` (which must be a TOTAL
-    * order — include a unique tiebreak column), via the same two-phase
-    * distributed prefix sum as [[shuffleOrder]]: range-partition on the
-    * order, cumsum within partitions, broadcast the per-partition
-    * offsets. No single-task global window at any size. Same caching
-    * contract as [[shuffleOrder]] (the ranged frame persists past the
-    * call). Public seam for rank-based derivations — equi-depth binning
+    * order — include a unique tiebreak column): a count prefix through
+    * [[Prefix.exclusiveSums]], so no single-task global window at any
+    * size. Public seam for rank-based derivations — equi-depth binning
     * ([[Profiling.equidepthBins]]), exact ECDF positions, curriculum
     * ordering by a score column.
     */
   def rankByOrder(
       df: DataFrame, orderCols: Seq[Column],
       outCol: String = "rank"): DataFrame =
-    exclusivePrefixSum(df, orderCols, lit(1L), numPartitions = 0, outCol)
+    Prefix.exclusiveSums(df, orderCols, Seq(outCol -> lit(1L)))
 
   /** Source-interleaved training order: every source's documents are
     * shuffled WITHIN the source ([[mix60]], same machinery as
@@ -503,8 +455,7 @@ object Curation {
     *
     * Scale shape: one window by source (hash exchange + in-partition
     * sort) for positions, then the [[rankByOrder]] distributed prefix
-    * sum over (position, source, id) — no single-task global window;
-    * same caching contract as [[shuffleOrder]].
+    * sum over (position, source, id) — no single-task global window.
     */
   def interleaveBySource(
       df: DataFrame, idCol: String, sourceCol: String,
@@ -738,15 +689,14 @@ object Curation {
     * (id tiebreak only for ids ≥ 2^60 that wrap) — a coarse 10⁴-bucket
     * key would leave id-ordered runs of ~n/10⁴ consecutive rows, i.e.
     * chronological curriculum drift at corpus scale. The rank is a count
-    * prefix-sum via [[exclusivePrefixSum]], so no single-task global
+    * prefix sum via [[Prefix.exclusiveSums]], so no single-task global
     * window.
     */
   def shuffleOrder(df: DataFrame, idCol: String,
       salt: Long = ShuffleSalt): DataFrame =
-    exclusivePrefixSum(
+    Prefix.exclusiveSums(
       df.withColumn("__mix", mix60(col(idCol), salt)),
-      Seq(col("__mix"), col(idCol)), lit(1L),
-      numPartitions = 0, outCol = "shuffle_rank")
+      Seq(col("__mix"), col(idCol)), Seq("shuffle_rank" -> lit(1L)))
       .drop("__mix")
 
   /** Remove rows whose `keyCol` appears in `blocklist` (left anti-join) —

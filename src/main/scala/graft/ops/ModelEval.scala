@@ -39,8 +39,8 @@ object ModelEval {
     *
     * Scale shape: rows collapse map-side to one row per DISTINCT grid
     * score (count + positive count); the rank prefix runs over that
-    * distinct-score relation via the distributed two-phase pattern
-    * ([[Prefix.exclusiveSums]] — r20: the former unpartitioned window
+    * distinct-score relation via [[Prefix.exclusiveSums]] (one range
+    * shuffle, no window — r20: the former unpartitioned window
     * was a single-task sort, range-sized for open-ended score domains);
     * the result is a 1-row aggregate.
     */
@@ -62,7 +62,7 @@ object ModelEval {
     // r20: the rank prefix was a single-partition Window.orderBy over the
     // distinct-score relation — domain-bounded for fixed-range scores but
     // range-sized for open-ended ones; Prefix.exclusiveSums computes the
-    // identical exact int64 prefix with partitioned windows only
+    // identical exact int64 prefix over one range shuffle
     Prefix.exclusiveSums(perV, Seq(col("__x")), Seq("__c" -> col("__t")))
       .withColumn("__r1x2",
         col("__t1") * (lit(2L) * col("__c") + col("__t") + lit(1L)))
@@ -666,7 +666,7 @@ object ModelEval {
         round(vx * lit(scaleX.toDouble), 0).cast("long").as("__x"),
         round(vy * lit(scaleY.toDouble), 0).cast("long").as("__y"))
     def ranks(keyCol: String): DataFrame = {
-      // r20: per-axis rank prefix via the distributed two-phase pattern
+      // r20: per-axis rank prefix via the distributed Prefix pass
       // (was a single-partition Window.orderBy over the distinct grid)
       Prefix.exclusiveSums(
           rows.groupBy(col(keyCol)).agg(count(lit(1)).as("__t")),

@@ -1,89 +1,111 @@
 package graft.ops
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.FrameShim
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-/** Distributed prefix sums over a TOTAL order — the shared two-phase
-  * pattern behind [[Curation]]'s exclusivePrefixSum and [[Profiling]]'s
-  * ksDrift, extracted for the rank-statistics family (r19 verdict: their
-  * cumulative windows ran `Window.orderBy(...)` with NO partitionBy — a
-  * single-partition sort over the distinct-value relation. That relation
-  * is domain-bounded for fixed-range scores, but KEY-sized for per-entity
-  * totals (cost_concentration's cent totals) and range-sized for
-  * open-ended value columns — a genuine single-task scale-killer at
-  * 100 TB).
+/** Distributed prefix sums over a TOTAL order: the one primitive behind
+  * the rank statistics ([[ModelEval]], [[Profiling]]), `ksDrift`'s ECDFs
+  * and [[Curation]]'s sequence packing, ranks and shuffles. An
+  * unpartitioned cumulative window is one task holding the whole relation
+  * (KEY-sized for per-entity totals, range-sized for open-ended values);
+  * this is one range shuffle read by two jobs:
   *
-  * Phase 1 range-partitions on the order and cumsums WITHIN each
-  * partition in parallel; phase 2 takes an exclusive prefix over the
-  * per-partition totals (≤ #shuffle-partitions rows — that tiny window is
-  * the only single-task step, the same bounded exception as ksDrift's
-  * offsets frame) and broadcast-joins it back. Results depend on the
-  * total order alone, never on where the range sampler lands a boundary:
-  * every emitted sum is the same exact int64 fold the single-window form
-  * computed, so oracle hashes are unchanged by construction.
+  *  1. the value columns are projected as non-null `long` (a null adds
+  *     0), the relation is range-partitioned on the order and sorted
+  *     within partitions, and its RDD is taken once;
+  *  2. a job sums each partition and the driver scans those totals into
+  *     per-partition offsets. This job runs EAGERLY at call time, as
+  *     Lloyd rounds do; the driver array holds at most #partitions × k
+  *     longs for k value columns;
+  *  3. the returned frame adds each partition's offset to a running sum
+  *     over the same RDD, when the caller acts on it.
   *
-  * The ranged frame persists past the call (the cumsum branch and the
-  * totals branch both read it; an unpersisted lineage would re-shuffle
-  * AND re-sample the range bounds per branch, silently corrupting
-  * offsets if the two partitionings diverged) — the standard
-  * [[graft.CachedFrames]] release contract.
+  * Both passes read the same shuffle files, so the range bounds are
+  * sampled once and a row's partition cannot differ between them;
+  * nothing is persisted and no window runs. Sums use `Math.addExact`, so
+  * an int64 overflow raises `ArithmeticException` as the ANSI `sum` did.
+  * Every emitted sum is the exact int64 fold of the single-window form,
+  * whatever the partition count, AQE setting or input partitioning.
   */
 private[graft] object Prefix {
 
-  /** `df` plus one column per `(outName, value)` entry: the EXCLUSIVE
-    * prefix sum of `value` (an int64 expression) over all rows strictly
-    * preceding under `orderCols` (0 when none precede). `orderCols` must
-    * be a total order — unique per row, e.g. the key of a groupBy that
-    * produced `df`; pass `col(...).desc` entries for descending prefixes.
+  /** `df` plus one non-null `long` column per `(outName, value)` entry:
+    * the EXCLUSIVE prefix sum of `value` over all rows strictly preceding
+    * under `orderCols` (0 when none precede). `orderCols` must be a total
+    * order — unique per row, e.g. the key of a groupBy that produced
+    * `df`; pass `col(...).desc` entries for descending prefixes.
+    * `numPartitions` fixes the range partition count (0 = let the session
+    * choose, coalescing small relations).
     */
   def exclusiveSums(
-      df: DataFrame, orderCols: Seq[Column],
-      values: Seq[(String, Column)]): DataFrame = {
+      df: DataFrame, orderCols: Seq[Column], values: Seq[(String, Column)],
+      numPartitions: Int = 0): DataFrame =
+    exclusiveSumsAndTotals(df, orderCols, values, numPartitions)._1
+
+  /** [[exclusiveSums]] plus the grand total of each value column, which
+    * the driver's scan over the partition totals yields for free.
+    */
+  def exclusiveSumsAndTotals(
+      df: DataFrame, orderCols: Seq[Column], values: Seq[(String, Column)],
+      numPartitions: Int = 0): (DataFrame, Seq[Long]) = {
     require(values.nonEmpty, "exclusiveSums: no value columns")
-    val vcols = values.zipWithIndex.map { case ((out, v), i) =>
-      (out, s"__pv$i", v)
+    require(numPartitions >= 0, s"exclusiveSums: numPartitions=$numPartitions")
+    val n = df.columns.length
+    val k = values.size
+    val projected = df.select(col("*") +: values.zipWithIndex.map {
+      case ((_, v), i) => coalesce(v.cast("long"), lit(0L)).as(s"__pv$i")
+    }: _*)
+    val ranged =
+      (if (numPartitions > 0) projected.repartitionByRange(numPartitions, orderCols: _*)
+       else projected.repartitionByRange(orderCols: _*))
+        .sortWithinPartitions(orderCols: _*)
+    val sc = df.sparkSession.sparkContext
+    val (rows, totals) = described(sc, "Prefix.exclusiveSums: partition totals") {
+      val rows = ranged.queryExecution.toRdd
+      // per partition: k sums, then the row count
+      rows -> rows.mapPartitions { it =>
+        val t = new Array[Long](k + 1)
+        it.foreach { r =>
+          var j = 0
+          while (j < k) { t(j) = Math.addExact(t(j), r.getLong(n + j)); j += 1 }
+          t(k) += 1
+        }
+        Iterator.single(t)
+      }.collect()
     }
-    // cache the input relation BEFORE the range exchange: range
-    // partitioning executes its child once more for boundary sampling,
-    // and without this cache that second execution re-runs the caller's
-    // whole upstream aggregation (measured: the sampling pass, not the
-    // exchange, was the dominant cost of the r20 restructure)
-    val projected = graft.CachedFrames.cached(
-      vcols.foldLeft(df) { case (d, (_, tmp, v)) =>
-        d.withColumn(tmp, v)
-      })
-    // no explicit partition count: AQE stays free to coalesce the range
-    // exchange when the relation is small (REPARTITION_BY_COL origin)
-    val ranged = projected
-      .repartitionByRange(orderCols: _*)
-      .withColumn("__pid", spark_partition_id())
-      .transform(graft.CachedFrames.cached)
-    val wIn = Window.partitionBy(col("__pid")).orderBy(orderCols: _*)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val within = vcols.foldLeft(ranged) { case (d, (_, tmp, _)) =>
-      d.withColumn(s"__in$tmp",
-        coalesce(sum(col(tmp)).over(wIn), lit(0L)))
+    // offsets(p) = sums over partitions before p; offsets.last = totals
+    val offsets = totals.scanLeft(new Array[Long](k)) { (acc, t) =>
+      Array.tabulate(k)(j => Math.addExact(acc(j), t(j)))
     }
-    val totalAggs = vcols.map { case (_, tmp, _) =>
-      sum(col(tmp)).as(s"__t$tmp")
-    }
-    // the ONLY unpartitioned window: ≤ #shuffle-partitions rows
-    val wOff = Window.orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = vcols.foldLeft(
-      ranged.groupBy(col("__pid")).agg(totalAggs.head, totalAggs.tail: _*)
-    ) { case (d, (_, tmp, _)) =>
-      d.withColumn(s"__o$tmp",
-        coalesce(sum(col(s"__t$tmp")).over(wOff), lit(0L)))
-    }.select(col("__pid") +: vcols.map { case (_, tmp, _) => col(s"__o$tmp") }: _*)
-    val joined = within.join(broadcast(offsets), Seq("__pid"))
-    val withOuts = vcols.foldLeft(joined) { case (d, (out, tmp, _)) =>
-      d.withColumn(out, col(s"__o$tmp") + col(s"__in$tmp"))
-    }
-    withOuts.drop(
-      "__pid" +: vcols.flatMap { case (_, tmp, _) =>
-        Seq(tmp, s"__in$tmp", s"__o$tmp")
-      }: _*)
+    // each value slot is overwritten in place by its exclusive sum: every
+    // pass decodes its own rows from the shuffle, so no other reader sees it
+    val summed = rows.mapPartitionsWithIndex { (p, it) =>
+      val run = offsets(p).clone()
+      it.map { r =>
+        var j = 0
+        while (j < k) {
+          val v = r.getLong(n + j)
+          r.setLong(n + j, run(j))
+          run(j) = Math.addExact(run(j), v)
+          j += 1
+        }
+        r
+      }
+    }.setName("Prefix.exclusiveSums: offsets")
+    val schema = StructType(df.schema.fields ++ values.map { case (out, _) =>
+      StructField(out, LongType, nullable = false)
+    })
+    (FrameShim.fromRdd(df.sparkSession, summed, schema, totals.map(_(k)).sum),
+      offsets.last.toSeq)
+  }
+
+  /** Run `body` under job description `desc`, restoring the caller's. */
+  private def described[T](sc: SparkContext, desc: String)(body: => T): T = {
+    val prior = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body finally sc.setLocalProperty("spark.job.description", prior)
   }
 }

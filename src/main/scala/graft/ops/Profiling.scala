@@ -263,19 +263,14 @@ object Profiling {
     * stat); either side empty → empty output (no CDF to compare).
     *
     * Scale shape: the ECDFs need a global cumulative count in value
-    * order — the naive window is one task holding the whole corpus. This
-    * runs the same distributed two-phase prefix sum as the curation
-    * family (Curation.packSequences): per-value counts first (groupBy —
-    * map-side combined, so the shuffle carries distinct values, not
-    * rows), range-partition by value, in-partition running sums in
-    * parallel, then an exclusive prefix over the O(partitions)
-    * per-partition totals broadcast back. The final top-k is
-    * TakeOrderedAndProject (per-partition heads, never a global sort
-    * materialization). Output depends only on the data's total order by
-    * value, not the partitioning. Caching contract (same as the
-    * curation prefix-sum family): the ranged per-value frame persists
-    * past the call — batch-scoring sessions should
-    * `graft.CachedFrames.releaseAll()` between corpus-wide runs.
+    * order — the naive window is one task holding the whole corpus.
+    * Per-value counts come first (groupBy — map-side combined, so the
+    * shuffle carries distinct values, not rows); both cumulative counts
+    * and their totals then come from one [[Prefix.exclusiveSums]] pass
+    * over that relation. The final top-k is TakeOrderedAndProject
+    * (per-partition heads, never a global sort materialization). Output
+    * depends only on the data's total order by value, not the
+    * partitioning.
     */
   def ksDrift(base: DataFrame, current: DataFrame, valueCol: String,
       topGaps: Int = 10): DataFrame = {
@@ -287,41 +282,18 @@ object Profiling {
     val grp = side(base, 1, 0).unionByName(side(current, 0, 1))
       .groupBy("__v")
       .agg(sum(col("__nb")).as("__nb"), sum(col("__nc")).as("__nc"))
-    val parts = base.sparkSession.sessionState.conf.numShufflePartitions
-    // persist: the cumsum branch and the per-partition-totals branch both
-    // read the ranged frame; without the cache each would re-shuffle AND
-    // re-derive __pid from an independent range sampling (same contract
-    // as Curation.exclusivePrefixSum)
-    val ranged = grp.repartitionByRange(parts, col("__v"))
-      .withColumn("__pid", spark_partition_id())
-      .transform(graft.CachedFrames.cached)
-    val withinW = Window.partitionBy(col("__pid")).orderBy(col("__v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val within = ranged
-      .withColumn("__cb_in", sum(col("__nb")).over(withinW))
-      .withColumn("__cc_in", sum(col("__nc")).over(withinW))
-    val ptotals = ranged.groupBy(col("__pid"))
-      .agg(sum(col("__nb")).as("__tb"), sum(col("__nc")).as("__tc"))
-    val offsets = ptotals
-      .withColumn("__ob", coalesce(sum(col("__tb")).over(
-        Window.orderBy(col("__pid")).rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("__oc", coalesce(sum(col("__tc")).over(
-        Window.orderBy(col("__pid")).rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("__pid"), col("__ob"), col("__oc"))
-    val totals = ptotals.agg(
-      sum(col("__tb")).as("__totb"), sum(col("__tc")).as("__totc"))
-    within.join(broadcast(offsets), Seq("__pid"))
-      .crossJoin(broadcast(totals))
-      .filter(col("__totb") > 0 && col("__totc") > 0)
+    // ECDF numerators are INCLUSIVE: the exclusive prefix plus the row's
+    // own count; the denominators are the prefix pass's grand totals
+    val (ranked, Seq(totb, totc)) = Prefix.exclusiveSumsAndTotals(grp,
+      Seq(col("__v")), Seq("__cb" -> col("__nb"), "__cc" -> col("__nc")))
+    val baseCdf = (col("__cb") + col("__nb")).cast("double") / lit(totb)
+    val curCdf = (col("__cc") + col("__nc")).cast("double") / lit(totc)
+    ranked
+      .filter(lit(totb > 0 && totc > 0))
       .select(col("__v").as("value"),
-        round(((col("__ob") + col("__cb_in")).cast("double") / col("__totb")), 6)
-          .as("base_cdf"),
-        round(((col("__oc") + col("__cc_in")).cast("double") / col("__totc")), 6)
-          .as("cur_cdf"),
-        round(abs(
-          (col("__ob") + col("__cb_in")).cast("double") / col("__totb") -
-          (col("__oc") + col("__cc_in")).cast("double") / col("__totc")), 6)
-          .as("ks_gap"))
+        round(baseCdf, 6).as("base_cdf"),
+        round(curCdf, 6).as("cur_cdf"),
+        round(abs(baseCdf - curCdf), 6).as("ks_gap"))
       .orderBy(desc("ks_gap"), asc("value"))
       .limit(topGaps)
   }
@@ -462,7 +434,7 @@ object Profiling {
 
   /** Exact equi-depth (quantile) binning: every non-null value ranked
     * under the TOTAL order (value, tiebreak) by the distributed
-    * two-phase prefix sum ([[Curation.rankByOrder]] — no single-task
+    * prefix sum ([[Curation.rankByOrder]] — no single-task
     * global window), then assigned `bin = rank·k DIV n` — k near-equal
     * buckets whose sizes differ by at most one, the feature-engineering
     * binning that a fixed-width [[histogram]] can't give on skewed
@@ -473,11 +445,10 @@ object Profiling {
     * transforms need); join the ranked frame yourself when per-row bin
     * labels are wanted.
     *
-    * Scale shape: one range-exchange + in-partition cumsums + a
-    * broadcast of per-partition offsets (the [[Curation.shuffleOrder]]
-    * machinery), then a k-row map-side-combined aggregation. The
-    * 1-row total frame rides the same broadcast pattern as the other
-    * profile ops.
+    * Scale shape: one range exchange read by the two passes of
+    * [[Prefix.exclusiveSums]], then a k-row map-side-combined
+    * aggregation. The 1-row total frame rides the same broadcast
+    * pattern as the other profile ops.
     */
   def equidepthBins(
       df: DataFrame, valueCol: String, tiebreakCol: String,
@@ -711,7 +682,7 @@ object Profiling {
         sum(when(col("__g") === groupOne, 1L).otherwise(0L)).as("__t1"))
     // r20: rank prefix via Prefix.exclusiveSums (was a single-partition
     // Window.orderBy over the distinct grid — range-sized for open-ended
-    // value domains); same exact int64 prefix, partitioned windows only
+    // value domains); same exact int64 prefix, no window
     Prefix.exclusiveSums(perV, Seq(col("__x")), Seq("__c" -> col("__t")))
       // doubled midrank of this tie run, times its group-one members
       .withColumn("__r1x2",
@@ -1451,7 +1422,7 @@ object Profiling {
     // r20: the scaladoc's own caveat made this the one KEY-sized frame in
     // the rank family (cent totals are nearly all distinct) — the
     // single-partition window is gone; the two prefixes ride one
-    // distributed two-phase pass (Prefix.exclusiveSums), exact-identical
+    // distributed pass (Prefix.exclusiveSums), exact-identical
     val ranked = Prefix.exclusiveSums(runs, Seq(col("__x")),
       Seq("__c" -> col("__t"), "__cumv" -> (col("__x") * col("__t"))))
     val totals = ranked.agg(
@@ -1527,8 +1498,8 @@ object Profiling {
     *
     * Scale shape: one per-GROUP rank window (groups are source-grained
     * by contract — the [[Curation.tokenBudget]] caveat), the pooled
-    * rank via [[Curation.rankByOrder]]'s distributed two-phase prefix
-    * sum (no single-task global window), a 1-row total broadcast, and
+    * rank via [[Curation.rankByOrder]]'s distributed prefix sum (no
+    * single-task global window), a 1-row total broadcast, and
     * one equi-join on the selected index.
     */
   def quantileNormalize(df: DataFrame, groupCol: String, valueCol: String,

@@ -1,10 +1,15 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{classic, Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.types.StructType
 
 /** Bridge into Spark's `private[sql]` Column ↔ Expression plumbing.
   *
@@ -30,4 +35,24 @@ object ColumnShim {
         FunctionIdentifier(name),
         new ExpressionInfo("graft.functions.expressions", name),
         builder)
+}
+
+/** Bridge to `private[sql]` frame construction over an RDD of Catalyst
+  * rows, without `Row` boxing on either side.
+  */
+object FrameShim {
+  /** A frame over `rdd`, whose rows already match `schema`. The planner
+    * sizes it from `rows` as it sizes any relation, not as an unknown RDD
+    * (which it would never broadcast).
+    */
+  def fromRdd(
+      spark: SparkSession, rdd: RDD[InternalRow], schema: StructType,
+      rows: BigInt): DataFrame = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    val attrs = DataTypeUtils.toAttributes(schema)
+    val stats = Statistics(
+      sizeInBytes = EstimationUtils.getSizePerRow(attrs) * rows,
+      rowCount = Some(rows))
+    classic.Dataset.ofRows(session, LogicalRDD(attrs, rdd)(session, Some(stats)))
+  }
 }

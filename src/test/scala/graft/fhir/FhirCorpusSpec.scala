@@ -68,7 +68,7 @@ class FhirCorpusSpec extends SparkSpec {
   test("a truncated bundle in the corpus is quarantined, not fatal, and costs only itself") {
     // copy the corpus and wound one file — the PERMISSIVE read must keep
     // every other bundle and name the bad one
-    val wounded = java.nio.file.Files.createTempDirectory("graft_fhir_wounded")
+    val wounded = graft.TempRoots.create("graft_fhir_wounded")
     val src = java.nio.file.Paths.get(dir)
     import scala.jdk.CollectionConverters._
     val walk = java.nio.file.Files.walk(src)
@@ -94,7 +94,7 @@ class FhirCorpusSpec extends SparkSpec {
   }
 
   test("compacted staging read == direct bundle read, table by table") {
-    val out = java.nio.file.Files.createTempDirectory("graft_fhir_compact").toString
+    val out = graft.TempRoots.create("graft_fhir_compact").toString
     BundleReader.compactEntries(spark, dir, out, partitions = 2)
     val direct = Cleaning.all(Extractors.allTables(
       BundleReader.normalizedEntries(spark, dir)))

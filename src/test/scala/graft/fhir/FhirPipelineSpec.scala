@@ -15,7 +15,7 @@ class FhirPipelineSpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val tables: Map[String, org.apache.spark.sql.DataFrame] = {
-    val dir = Files.createTempDirectory("fhir_fixture")
+    val dir = graft.TempRoots.create("fhir_fixture")
     Files.writeString(dir.resolve("b1.json"), FhirFixtures.bundle1)
     Files.writeString(dir.resolve("b2.json"), FhirFixtures.bundle2)
     val entries = BundleReader.normalizedEntries(spark, dir.toString).cache()
@@ -59,7 +59,7 @@ class FhirPipelineSpec extends SparkSpec {
   }
 
   test("readEntriesWithCorrupt: malformed file quarantined, good bundles still parse") {
-    val dir = Files.createTempDirectory("fhir_corrupt")
+    val dir = graft.TempRoots.create("fhir_corrupt")
     Files.writeString(dir.resolve("good.json"), FhirFixtures.bundle1)
     Files.writeString(dir.resolve("bad.json"), "{ this is not json at all")
     val (entries, corrupt) = BundleReader.readEntriesWithCorrupt(spark, dir.toString)
@@ -74,7 +74,7 @@ class FhirPipelineSpec extends SparkSpec {
   }
 
   test("duplicate race extensions: LAST match wins (reference loop reassigns, json_pipeline.py:259-267)") {
-    val dir = Files.createTempDirectory("fhir_dup_ext")
+    val dir = graft.TempRoots.create("fhir_dup_ext")
     Files.writeString(dir.resolve("d.json"),
       """{"resourceType":"Bundle","type":"collection","entry":[
         |{"fullUrl":"urn:uuid:pat-9","resource":{
@@ -101,7 +101,7 @@ class FhirPipelineSpec extends SparkSpec {
         |  "resourceType":"Patient","id":"na-2","gender":"male",
         |  "address":[{"line":["9 Pine"],"city":"Salem","state":"OR","postalCode":"97301"}]}}
         |]}""".stripMargin
-    val dir = Files.createTempDirectory("fhir_noaddr")
+    val dir = graft.TempRoots.create("fhir_noaddr")
     Files.writeString(dir.resolve("b.json"), bundle)
     val entries = BundleReader.normalizedEntries(spark, dir.toString)
     val p = Extractors.patient(BundleReader.route(entries, "Patient"))
@@ -205,7 +205,7 @@ class FhirPipelineSpec extends SparkSpec {
   }
 
   test("csv sink roundtrip") {
-    val dir = Files.createTempDirectory("csv_out")
+    val dir = graft.TempRoots.create("csv_out")
     Sinks.writeCsv(Sinks.underscored(tables("condition")), s"$dir/condition")
     val back = spark.read.option("header", true).csv(s"$dir/condition")
     assert(back.count() == 1)

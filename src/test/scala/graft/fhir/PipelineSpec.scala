@@ -7,10 +7,10 @@ class PipelineSpec extends SparkSpec {
   import spark.implicits._
 
   test("runToDir: full pipeline writes 6 tables + 2 quality summaries; cleaning visible in QC delta") {
-    val in = Files.createTempDirectory("pipe_in")
+    val in = graft.TempRoots.create("pipe_in")
     Files.writeString(in.resolve("b1.json"), FhirFixtures.bundle1)
     Files.writeString(in.resolve("b2.json"), FhirFixtures.bundle2)
-    val out = Files.createTempDirectory("pipe_out")
+    val out = graft.TempRoots.create("pipe_out")
 
     val r = Pipeline.runToDir(spark, in.toString, out.toString)
 

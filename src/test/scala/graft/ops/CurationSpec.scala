@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 
@@ -220,12 +221,19 @@ class CurationSpec extends SparkSpec {
 
   test("packSequences: plan has no single-task global window over the data") {
     val df = (0L until 100L).map(i => (i, 5L)).toDF("id", "toks")
+    // structural audit: no Window with an empty partitionSpec anywhere in
+    // the optimized plan (a global cumsum window would be one)
+    def globalWindows(d: org.apache.spark.sql.DataFrame) =
+      d.queryExecution.optimizedPlan.collect {
+        case w: org.apache.spark.sql.catalyst.plans.logical.Window
+            if w.partitionSpec.isEmpty => w
+      }
     val plan = Curation.packSequences(df, "id", "toks", 64L)
-      .queryExecution.executedPlan.toString
-    // the data-bearing window must be partitioned (partitionBy __pid);
-    // an empty-partition global window over the full input would show as
-    // "Window [...], [id ASC" with no preceding partition spec
-    assert(plan.contains("__pid"), plan)
+    assert(globalWindows(plan).isEmpty, plan.queryExecution.optimizedPlan)
+    // the audit catches the naive form it guards against
+    val naive = df.withColumn("start_offset", coalesce(sum("toks").over(
+      Window.orderBy("id").rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+    assert(globalWindows(naive).nonEmpty)
   }
 
   test("epochMixture: whole weights replicate exactly, fractional adds ~frac share") {

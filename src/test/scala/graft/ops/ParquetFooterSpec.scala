@@ -120,7 +120,7 @@ class ParquetFooterSpec extends SparkSpec {
 
   test("real parquet-mr round-trip: Spark-written footer parses and agrees with Spark") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_pqfooter").toString
+    val dir = graft.TempRoots.create("graft_pqfooter").toString
     (1L to 40L).map(i => (i, s"t$i", i.toDouble))
       .toDF("id", "name", "score")
       .coalesce(1).write.mode("overwrite")
@@ -169,7 +169,7 @@ class ParquetFooterSpec extends SparkSpec {
 
   test("ranged-tail parse ≡ full parse, incl. the footer-outgrows-slice re-read path") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_pqtail").toString
+    val dir = graft.TempRoots.create("graft_pqtail").toString
     // several row groups → a footer comfortably larger than a 1 KiB
     // first slice, so the exact-size re-read path is exercised
     (1L to 400L).map(i => (i, s"name-$i", i * 0.5))

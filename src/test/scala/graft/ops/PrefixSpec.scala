@@ -85,6 +85,118 @@ class PrefixSpec extends SparkSpec {
     graft.CachedFrames.releaseAll()
   }
 
+  /** The old single-window form, as Spark plans it: the reference for
+    * null handling and null-key order. */
+  private def windowFold(df: org.apache.spark.sql.DataFrame,
+      order: org.apache.spark.sql.Column, v: String): Map[Option[Long], Long] =
+    df.withColumn("c", coalesce(sum(col(v)).over(Window.orderBy(order)
+        .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .select("k", "c").collect()
+      .map(r => Option(r.get(0)).map(_.asInstanceOf[Long]) -> r.getLong(1)).toMap
+
+  private def prefixOf(df: org.apache.spark.sql.DataFrame,
+      order: org.apache.spark.sql.Column, v: String): Map[Option[Long], Long] =
+    Prefix.exclusiveSums(df, Seq(order), Seq("c" -> col(v)))
+      .select("k", "c").collect()
+      .map(r => Option(r.get(0)).map(_.asInstanceOf[Long]) -> r.getLong(1)).toMap
+
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val prior = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("shuffle partitions 1 and 7, and AQE off, give the fold's sums") {
+    val df = rows.toDF("k", "v1", "v2")
+    val expected = reference(rows, desc = false).map { case (k, (c, _)) => Option(k) -> c }
+    Seq(
+      Seq("spark.sql.shuffle.partitions" -> "1"),
+      Seq("spark.sql.shuffle.partitions" -> "7"),
+      Seq("spark.sql.adaptive.enabled" -> "false")).foreach { conf =>
+      withConf(conf: _*) {
+        assert(prefixOf(df, col("k"), "v1") === expected, s"diverged under $conf")
+      }
+    }
+  }
+
+  test("a null value adds 0; null order keys sort as in the single-window fold") {
+    val df = (Seq[(Option[Long], Option[Long])](None -> Some(5L), Some(1L) -> None) ++
+      (2L to 300L).map(i => Some(i) -> (if (i % 17 == 0) None else Some(i % 11))))
+      .toDF("k", "v")
+    for (order <- Seq(col("k"), col("k").desc, col("k").asc_nulls_last,
+        col("k").desc_nulls_first)) {
+      assert(prefixOf(df, order, "v") === windowFold(df, order, "v"), s"order $order")
+    }
+    val out = Prefix.exclusiveSums(df, Seq(col("k")), Seq("c" -> col("v")))
+    assert(!out.schema("c").nullable && out.schema("c").dataType ==
+      org.apache.spark.sql.types.LongType)
+  }
+
+  test("an int64 overflow raises ArithmeticException") {
+    val df = Seq((1L, Long.MaxValue), (2L, 1L), (3L, 0L)).toDF("k", "v")
+    Seq(1, 3).foreach { parts =>
+      val e = intercept[Exception](
+        Prefix.exclusiveSums(df, Seq(col("k")), Seq("c" -> col("v")), parts)
+          .collect())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[ArithmeticException]), e.toString)
+    }
+  }
+
+  test("the call registers no CachedFrames entry") {
+    graft.CachedFrames.releaseAll()
+    Prefix.exclusiveSums(rows.toDF("k", "v1", "v2"), Seq(col("k")),
+      Seq("c" -> col("v1"))).collect()
+    assert(graft.CachedFrames.registeredCount === 0)
+  }
+
+  test("one call plus collect on a groupBy input runs at most 5 Spark jobs") {
+    val sc = spark.sparkContext
+    val group = s"prefix-jobs-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.add(e.properties.getProperty("spark.job.description", ""))
+          case Some(g) if g == s"$group-end" => sentinel.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      val perK = (1L to 2000L).map(i => (i % 257, i)).toDF("k", "v")
+        .groupBy("k").agg(sum("v").as("t"))
+      sc.setJobGroup(group, "prefix job count")
+      Prefix.exclusiveSums(perK, Seq(col("k")), Seq("c" -> col("t"))).collect()
+      // the listener bus is ordered: once the sentinel job is seen, every
+      // job of the group has been seen too
+      sc.setJobGroup(s"$group-end", "sentinel")
+      sc.parallelize(Seq(1)).count()
+      assert(sentinel.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      info(s"${jobs.size} jobs: ${jobs.toArray.mkString(" | ")}")
+      assert(jobs.size <= 5, s"${jobs.size} jobs: $jobs")
+      assert(jobs.toArray.contains("Prefix.exclusiveSums: partition totals"), jobs.toString)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("the caller's job description is restored after the call") {
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try {
+      Prefix.exclusiveSums(rows.toDF("k", "v1", "v2"), Seq(col("k")),
+        Seq("c" -> col("v1")))
+      assert(sc.getLocalProperty("spark.job.description") === "caller")
+    } finally sc.setJobDescription(null)
+  }
+
   test("empty input yields empty output") {
     val df = Seq.empty[(Long, Long, Long)].toDF("k", "v1", "v2")
     assert(Prefix.exclusiveSums(df, Seq(col("k")),

@@ -11,7 +11,7 @@ class FhirQualitySpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val summary: Map[(String, String), (Long, Double)] = {
-    val dir = Files.createTempDirectory("fhir_quality")
+    val dir = graft.TempRoots.create("fhir_quality")
     Files.writeString(dir.resolve("b1.json"), FhirFixtures.bundle1)
     Files.writeString(dir.resolve("b2.json"), FhirFixtures.bundle2)
     val entries = BundleReader.normalizedEntries(spark, dir.toString).cache()

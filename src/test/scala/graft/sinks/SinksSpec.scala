@@ -17,7 +17,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("S5/S6 JDBC write + read back (Derby embedded)") {
-    val dir = Files.createTempDirectory("derby_db")
+    val dir = graft.TempRoots.create("derby_db")
     val url = s"jdbc:derby:$dir/testdb;create=true"
     val props = new java.util.Properties()
     props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
@@ -34,7 +34,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("JDBC partitioned read-back: stride scan covers all rows across >=2 input partitions") {
-    val dir = Files.createTempDirectory("derby_db_rb")
+    val dir = graft.TempRoots.create("derby_db_rb")
     val url = s"jdbc:derby:$dir/testdb;create=true"
     val props = new java.util.Properties()
     props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
@@ -69,7 +69,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("JDBC auto-bounds: dialect-quoted identifiers round-trip mixed case; bad keys/fragments fail fast") {
-    val dir = Files.createTempDirectory("derby_db_mc")
+    val dir = graft.TempRoots.create("derby_db_mc")
     val url = s"jdbc:derby:$dir/testdb;create=true"
     val props = new java.util.Properties()
     props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
@@ -102,7 +102,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("JDBC auto-bounds: DECIMAL scale-0 keys stride (the Oracle/DB2 surrogate-key shape); fractional scales still fail fast") {
-    val dir = Files.createTempDirectory("derby_db_dec")
+    val dir = graft.TempRoots.create("derby_db_dec")
     val url = s"jdbc:derby:$dir/testdb;create=true"
     val props = new java.util.Properties()
     props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
@@ -142,7 +142,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("S7 FK-ordered multi-table read-back mirrors the load walk") {
-    val dir = Files.createTempDirectory("derby_db_rb2")
+    val dir = graft.TempRoots.create("derby_db_rb2")
     val url = s"jdbc:derby:$dir/testdb;create=true"
     val props = new java.util.Properties()
     props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
@@ -156,7 +156,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("S7 FK-ordered multi-table load") {
-    val dir = Files.createTempDirectory("derby_db2")
+    val dir = graft.TempRoots.create("derby_db2")
     val url = s"jdbc:derby:$dir/testdb;create=true"
     val props = new java.util.Properties()
     props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
@@ -168,12 +168,12 @@ class SinksSpec extends SparkSpec {
   }
 
   test("catalog registration: FHIR tables as external parquet tables, FK order, SQL-addressable, stats") {
-    val dir = Files.createTempDirectory("fhir_cat")
+    val dir = graft.TempRoots.create("fhir_cat")
     Files.writeString(dir.resolve("b1.json"), graft.fhir.FhirFixtures.bundle1)
     Files.writeString(dir.resolve("b2.json"), graft.fhir.FhirFixtures.bundle2)
     val entries = graft.fhir.BundleReader.normalizedEntries(spark, dir.toString)
     val tables = graft.fhir.Cleaning.all(graft.fhir.Extractors.allTables(entries))
-    val wh = Files.createTempDirectory("fhir_wh")
+    val wh = graft.TempRoots.create("fhir_wh")
     Sinks.registerAllCatalog(spark, tables, "graft_wh", wh.toString, analyze = true)
     // FK-ordered read-back by catalog NAME
     val back = Sinks.readAllCatalog(spark, "graft_wh")
@@ -215,7 +215,7 @@ class SinksSpec extends SparkSpec {
     // (255 ids / 4096 free text), Postgres FLOAT (=FLOAT8) → FLOAT4 via
     // the declared Spark FloatType, and NOT NULL where the cleaned
     // frame's schema proves the column never null (constant-fill C6).
-    val dir = Files.createTempDirectory("fhir_pg_ddl")
+    val dir = graft.TempRoots.create("fhir_pg_ddl")
     Files.writeString(dir.resolve("b1.json"), graft.fhir.FhirFixtures.bundle1)
     Files.writeString(dir.resolve("b2.json"), graft.fhir.FhirFixtures.bundle2)
     val entries = graft.fhir.BundleReader.normalizedEntries(spark, dir.toString)
@@ -279,7 +279,7 @@ class SinksSpec extends SparkSpec {
 
   test("ReferenceDdl: column sets match the cleaned tables; reference type quirks encoded") {
     // the DDL column lists must track the actual pipeline output schemas
-    val dir = Files.createTempDirectory("fhir_ddl")
+    val dir = graft.TempRoots.create("fhir_ddl")
     Files.writeString(dir.resolve("b1.json"), graft.fhir.FhirFixtures.bundle1)
     Files.writeString(dir.resolve("b2.json"), graft.fhir.FhirFixtures.bundle2)
     val entries = graft.fhir.BundleReader.normalizedEntries(spark, dir.toString)
@@ -301,7 +301,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("ReferenceDdl roundtrip: patient loads into Derby with typed columns") {
-    val dir = Files.createTempDirectory("fhir_ddl_db")
+    val dir = graft.TempRoots.create("fhir_ddl_db")
     Files.writeString(dir.resolve("b1.json"), graft.fhir.FhirFixtures.bundle1)
     Files.writeString(dir.resolve("b2.json"), graft.fhir.FhirFixtures.bundle2)
     val entries = graft.fhir.BundleReader.normalizedEntries(spark, dir.toString)
@@ -338,7 +338,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("compactParquet: fragmented table rewritten to few right-sized files, data intact") {
-    val dir = Files.createTempDirectory("compact")
+    val dir = graft.TempRoots.create("compact")
     val df = spark.range(10000).selectExpr("id", "id % 7 AS k")
     df.repartition(40).write.parquet(s"$dir/fragmented")
     def partFiles(p: String): Int =
@@ -354,7 +354,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("orc sink roundtrip with predicate pushdown") {
-    val dir = Files.createTempDirectory("orc_out")
+    val dir = graft.TempRoots.create("orc_out")
     val df = Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "a", 30.0))
       .toDF("id", "k", "v")
     Sinks.writeOrc(df, s"$dir/t")
@@ -371,7 +371,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("readParquetMerged: late columns surface as null on pre-evolution rows") {
-    val dir = Files.createTempDirectory("merge_out")
+    val dir = graft.TempRoots.create("merge_out")
     Sinks.writeParquet(Seq((1L, "a")).toDF("id", "x"), s"$dir/v1")
     Sinks.writeParquet(Seq((2L, "b", 9L)).toDF("id", "x", "extra"), s"$dir/v2")
     val merged = Sinks.readParquetMerged(spark, s"$dir/v1", s"$dir/v2")
@@ -381,7 +381,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("bucketed tables: equi-join on bucket keys runs with NO shuffle") {
-    val dir = Files.createTempDirectory("bucketed")
+    val dir = graft.TempRoots.create("bucketed")
     val orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
     val lineitem = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     Sinks.writeBucketed(orders, "b_orders", s"$dir/orders", 4,
@@ -410,7 +410,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("parquet sink with partitioning") {
-    val dir = Files.createTempDirectory("pq_out")
+    val dir = graft.TempRoots.create("pq_out")
     val df = Seq(("en", 1L), ("fr", 2L), ("en", 3L)).toDF("lang", "doc_id")
     Sinks.writeParquet(df, s"$dir/docs", partitionBy = Seq("lang"))
     assert(Files.exists(dir.resolve("docs/lang=en")), "hive-style partition dirs")
@@ -425,7 +425,7 @@ class SinksSpec extends SparkSpec {
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
-    val dir = Files.createTempDirectory("jsonl_spec")
+    val dir = graft.TempRoots.create("jsonl_spec")
     val docs = Seq(
       (1L, "plain"),
       (2L, "line one\nline two\t\"quoted\""),
@@ -447,7 +447,7 @@ class SinksSpec extends SparkSpec {
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
-    val dir = Files.createTempDirectory("jsonl_blank_spec")
+    val dir = graft.TempRoots.create("jsonl_blank_spec")
     Files.writeString(java.nio.file.Paths.get(s"$dir/in.json"),
       // blank variants: empty, space+tab, tab-only — trim() catches only
       // the first two; the \s-class filter must catch all three
@@ -462,7 +462,7 @@ class SinksSpec extends SparkSpec {
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
-    val dir = Files.createTempDirectory("csv_spec")
+    val dir = graft.TempRoots.create("csv_spec")
     val docs = Seq(
       (1L, "trailing space "),
       (2L, " leading, and \"quoted\" too"),

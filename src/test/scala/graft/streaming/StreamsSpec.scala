@@ -461,8 +461,8 @@ class StreamsSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     withRocksDb {
-      val ckpt = Files.createTempDirectory("tws_ckpt").toString
-      val out = Files.createTempDirectory("tws_ckpt_sink").toString
+      val ckpt = graft.TempRoots.create("tws_ckpt").toString
+      val out = graft.TempRoots.create("tws_ckpt_sink").toString
       val in = MemoryStream[Streams.ObsEvent]
       // foreachBatch → append parquet: a RECOVERABLE sink (the memory
       // sink refuses checkpoint restart), accumulating every emission
@@ -506,8 +506,8 @@ class StreamsSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     withRocksDb {
-      val ckpt = Files.createTempDirectory("eptws_ett_ckpt").toString
-      val out = Files.createTempDirectory("eptws_ett_sink").toString
+      val ckpt = graft.TempRoots.create("eptws_ett_ckpt").toString
+      val out = graft.TempRoots.create("eptws_ett_sink").toString
       val in = MemoryStream[Streams.IntervalRow]
       def start() = Streams.episodeStateTws(in.toDS(), gap = 2_000_000L,
         eventTimeIdleFlush = Some(java.time.Duration.ofSeconds(10))).toDF()
@@ -544,8 +544,8 @@ class StreamsSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     withRocksDb {
-      val ckpt = Files.createTempDirectory("twschg_ckpt").toString
-      val out = Files.createTempDirectory("twschg_sink").toString
+      val ckpt = graft.TempRoots.create("twschg_ckpt").toString
+      val out = graft.TempRoots.create("twschg_sink").toString
       val in = MemoryStream[Streams.ObsEvent]
       def start() = Streams.latestStateChangesTws(in.toDS(),
         java.time.Duration.ofSeconds(10)).toDF()
@@ -818,7 +818,7 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("readBundleStream: file-source FHIR ingest matches batch reader") {
-    val dir = Files.createTempDirectory("fhir_stream")
+    val dir = graft.TempRoots.create("fhir_stream")
     val bundle =
       """{"resourceType":"Bundle","type":"collection","entry":[
         |{"fullUrl":"urn:uuid:p1","resource":{"resourceType":"Patient","id":"p1","gender":"male"}},
@@ -840,9 +840,9 @@ class StreamsSpec extends SparkSpec {
     // restarted with the SAME checkpoint must neither reprocess files
     // already committed (duplicate rows) nor skip files that arrived
     // while it was down
-    val src = Files.createTempDirectory("fhir_ckpt_src")
-    val out = Files.createTempDirectory("fhir_ckpt_out")
-    val ckpt = Files.createTempDirectory("fhir_ckpt_loc")
+    val src = graft.TempRoots.create("fhir_ckpt_src")
+    val out = graft.TempRoots.create("fhir_ckpt_out")
+    val ckpt = graft.TempRoots.create("fhir_ckpt_loc")
     def bundle(pid: String) =
       s"""{"resourceType":"Bundle","type":"collection","entry":[
          |{"fullUrl":"urn:uuid:$pid","resource":{"resourceType":"Patient","id":"$pid","gender":"male"}}
