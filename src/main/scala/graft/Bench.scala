@@ -25,6 +25,14 @@ import org.apache.spark.sql.SparkSession
   * parseable copy with every query survives any output capture policy.
   * `SPARK_GRAFT_ONLY` (comma-separated query names) runs a subset — the
   * same dev filter Verify honors.
+  *
+  * The file also carries a third, `profile` line: per gate, the layer
+  * profile ([[Profiler]]) of the timed sample that set its min — jobs,
+  * stages, tasks, executor and shuffle totals, driver gap, planning
+  * phases, cached bytes, the slowest stages and, for streaming gates,
+  * median per-batch durations and state — with the gate's median and
+  * IQR, and an environment fingerprint. Each gate runs under a job
+  * description naming it.
   */
 object Bench {
   /** The engine's one session profile: every main and the test suite
@@ -238,6 +246,9 @@ object Bench {
           .unionByName(ivfpq.select(lit("ivfpq").as("family"), col("subspace"),
             col("centroid_id"), col("__cent").as("cv")))
       }
+    val profiler = new Profiler(spark)
+    // every timed sample: (seconds, succeeded, its window's profile)
+    var samples = Map.empty[String, Vector[(Double, Boolean, Profiler.Gate)]]
     var errors = Map.empty[String, String]
     // warmup-only failures: reported (warmup_errors field) but NOT fatal —
     // a transient hiccup in the untimed pass-0 must not fail a bench whose
@@ -263,6 +274,8 @@ object Bench {
       // driver across the pass.
       graft.CachedFrames.releaseAll()
       spark.catalog.clearCache()
+      spark.sparkContext.setJobDescription(name)
+      val w0 = System.currentTimeMillis()
       val t0 = System.nanoTime()
       // noop-format write: materializes every row end-to-end (projection
       // expressions, sorts, kernels) without sink I/O. A bare `.count()`
@@ -278,7 +291,11 @@ object Bench {
           else if (!errors.contains(name)) errors += name -> msg
           false
         }
-      ((System.nanoTime() - t0) / 1e9, ok)
+      val sec = (System.nanoTime() - t0) / 1e9
+      val gate = profiler.take(w0, System.currentTimeMillis())
+      spark.sparkContext.setJobDescription(null)
+      if (!warmup) samples += name -> (samples.getOrElse(name, Vector.empty) :+ ((sec, ok, gate)))
+      (sec, ok)
     }
     // Untimed warmup sweep (round-15 verdict #4): one pass-0 visit per
     // gate before any timed pass. The session-level warmups above cover
@@ -328,23 +345,16 @@ object Bench {
       (1 to 2).flatMap(_ => retimeSet.map(n => n -> timeOne(n, registry(n))))
         .collect { case (n, (sec, true)) => n -> sec }
         .groupMap(_._1)(_._2)
-    def f3(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
-    // min over SUCCESSFUL runs only: a fast-failing run must not report a
-    // near-zero "min" for a query that takes 10 s when it works. All-runs-
-    // failed falls back to the raw min (the error is in the errors map).
-    val minSecs = names.map { n =>
-      val all = runs.map(_(n))
-      val good = all.filter(_._2).map(_._1) ++ retimed.getOrElse(n, Nil)
-      n -> (if (good.nonEmpty) good.min else all.map(_._1).min)
+    import Profiler.f3, Verify.jstr
+    // min over SUCCESSFUL samples (passes and retimes) only: a fast-failing
+    // run must not report a near-zero "min" for a query that takes 10 s
+    // when it works. All-runs-failed falls back to the raw min (the error
+    // is in the errors map). The gate's profile is that sample's.
+    val best = names.map { n =>
+      val good = samples(n).filter(_._2)
+      n -> ((if (good.nonEmpty) good else samples(n)).minBy(_._1), good.map(_._1))
     }
+    val minSecs = best.map { case (n, ((sec, _, _), _)) => n -> sec }
     val qs = minSecs.map { case (k, v) => jstr(k) + ":" + f3(v) }.mkString("{", ",", "}")
     val perRun = names.map { n =>
       jstr(n) + ":" + runs.map(r => f3(r(n)._1)).mkString("[", ",", "]")
@@ -360,6 +370,10 @@ object Bench {
       jstr(n) + ":" + ts.map(f3).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     val detail = s"""{"metric":"bench_detail","unit":"sec","n_runs":$nRuns,"run_totals":$runTotals,"retimed":$retimedJson,"per_run":$perRun}"""
+    val gateProfiles = best.map { case (n, ((sec, _, gate), goodSecs)) =>
+      jstr(n) + ":" + Profiler.gateJson(sec, gate, goodSecs)
+    }.mkString("{", ",", "}")
+    val profile = s"""{"metric":"profile","env":${profiler.envJson},"gates":$gateProfiles}"""
     // canonical line FIRST (head-capture) and LAST (tail-capture), detail in
     // between, plus a file copy immune to either
     println(compact)
@@ -368,7 +382,7 @@ object Bench {
     try {
       val p = java.nio.file.Paths.get(outPath)
       if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
-      java.nio.file.Files.write(p, (compact + "\n" + detail + "\n").getBytes("UTF-8"))
+      java.nio.file.Files.write(p, Seq(compact, detail, profile).mkString("", "\n", "\n").getBytes("UTF-8"))
     } catch { case e: Throwable =>
       System.err.println(s"bench: could not write $outPath: $e")
     }

@@ -213,6 +213,8 @@ object SparkEntry {
   private val etReplayDirs =
     new java.util.concurrent.ConcurrentHashMap[(String, Boolean), String]()
 
+  private val EtReplayDayUs = 86_400_000_000L
+
   /** The replay PREFIX all `stream_*_et` gates stage: the first
     * [[EtReplayDays]] ts-days of the events table, measured from the
     * canonical replay epoch `d0` = min ts-day over (user_id, ts)
@@ -224,20 +226,28 @@ object SparkEntry {
     * carries / 147 tombstones / 148 flushes at sf0.01, 7/2/18/18 at
     * sf0.001, ~550/250/1370/1390 at sf0.1 — scripts/et_sim.py, which
     * also re-proves engine ≡ oracle closed form at this prefix at all
-    * three SFs; EtReplayDays is the margin-vs-evidence knob, priced in
-    * EtProbe. Trimmed 12 → 9 in r19 — the r18 streaming family cost
-    * ~55 s of a 203 s board, almost all of it this per-batch floor, and
-    * 9 days is the shortest prefix keeping every gate's eviction
-    * evidence nonzero at every SF including the sf0.001 smoke scale).
+    * three SFs; EtReplayDays is the margin-vs-evidence knob. Trimmed
+    * 12 → 9 in r19 — the r18 streaming family cost ~55 s of a 203 s
+    * board, almost all of it this per-batch floor, and 9 days is the
+    * shortest prefix keeping every gate's eviction evidence nonzero at
+    * every SF including the sf0.001 smoke scale).
     * The epoch read is one driver-side scalar aggregate (KB-scale),
-    * memoized per dir.
+    * memoized per dir. The _et oracle SQL strings interpolate it, so
+    * engine and oracle move as one when the knob moves.
+    *
+    * The replay design was priced at sf0.1 (r15, min of 3, the
+    * locfEnrich(eventTimeTtl) gate over the full ts range): one-day
+    * buckets took ≈ 10.5 s with 8 state partitions, ≈ 8 s with 2 and
+    * ≈ 7.3 s with 1; two-day buckets with 2 partitions took ≈ 4.3 s but
+    * gutted the eviction evidence (sf0.01 changed carries 110 → 10,
+    * sf0.001 → 0, et_sim.py); one-day buckets with 2 partitions over the
+    * r18 12-day prefix took ≈ 4 s (95 evictions at sf0.01; the 9-day
+    * prefix keeps 68). A fixed ~300 ms per micro-batch (trigger planning,
+    * offset/commit log, state commit) dominates, so batch COUNT is the
+    * lever: a shorter prefix keeps day-scale silences (common), where
+    * coarser buckets would need week-scale ones (rare).
     */
-  private val EtReplayDayUs = 86_400_000_000L
-  // private[graft]: EtProbe's pinned-prefix case reads the length
-  // through this accessor (r15 ADVICE — the probe's staged design cannot
-  // silently diverge from the gate's), and the _et oracle SQL strings
-  // interpolate it, so engine and oracle move as one when the knob moves.
-  private[graft] val EtReplayDays = 9L
+  private val EtReplayDays = 9L
   private val etReplayEpochs = new java.util.concurrent.ConcurrentHashMap[String, Long]()
   private def etReplayCutoffUs(spark: SparkSession, dir: String): Long = {
     val d0 = etReplayEpochs.computeIfAbsent(dir, _ =>
@@ -246,12 +256,8 @@ object SparkEntry {
         .agg(min(col("ts"))).head.getLong(0) / EtReplayDayUs)
     (d0 + EtReplayDays) * EtReplayDayUs
   }
-  /** The staged chunk directory behind [[etReplayStream]] — exposed
-    * `private[graft]` so the EtProbe mirror-contract spec can assert the
-    * probe's independently-derived staging is row-identical per chunk
-    * (the r15 drift risk becomes a failing test).
-    */
-  private[graft] def etReplayChunkDir(spark: SparkSession, dir: String,
+  /** The staged chunk directory behind [[etReplayStream]]. */
+  private def etReplayChunkDir(spark: SparkSession, dir: String,
       nullifyThirds: Boolean): String =
     etReplayDirs.computeIfAbsent((dir, nullifyThirds), _ => {
       val base = events(spark, dir)

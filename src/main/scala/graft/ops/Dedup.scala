@@ -626,34 +626,12 @@ object Dedup {
     * excluded.
     *
     * Caching contract: the (group, hash) frame is persisted (it feeds the
-    * size aggregate and both join sides) and stays cached until the
-    * session's `clearCache`. Long-lived sessions that can't clear between
-    * batches: use [[groupOverlapExactEager]], which releases it itself.
+    * size aggregate and both join sides) and stays cached until
+    * `CachedFrames.releaseAll()`; long-lived sessions scope a batch in
+    * `CachedFrames.withCached {}` to release it with the batch.
     */
   def groupOverlapExact(
-      df: DataFrame, groupCol: String, textCol: String, n: Int = 3): DataFrame =
-    groupOverlapExactWithShingles(df, groupCol, textCol, n)._1
-
-  /** [[groupOverlapExact]] without the caching contract: materializes the
-    * overlap result eagerly, releases the internal shingle cache before
-    * returning (try/finally — also on failure), and hands back a persisted
-    * result the CALLER owns (unpersist when done).
-    */
-  def groupOverlapExactEager(
       df: DataFrame, groupCol: String, textCol: String, n: Int = 3): DataFrame = {
-    val (result, sh) = groupOverlapExactWithShingles(df, groupCol, textCol, n)
-    val out = result.transform(graft.CachedFrames.cached)
-    try out.count()
-    catch {
-      case t: Throwable => out.unpersist(blocking = false); throw t
-    }
-    finally sh.unpersist(blocking = true)
-    out
-  }
-
-  private def groupOverlapExactWithShingles(
-      df: DataFrame, groupCol: String, textCol: String,
-      n: Int): (DataFrame, DataFrame) = {
     val sh = df
       .filter(col(groupCol).isNotNull)
       .select(
@@ -677,13 +655,12 @@ object Dedup {
       .select(
         col("a.__grp").as("group_a"), col("b.__grp").as("group_b"),
         col("a.__n").as("n_a"), col("b.__n").as("n_b"))
-    val result = pairs.join(inter, Seq("group_a", "group_b"), "left")
+    pairs.join(inter, Seq("group_a", "group_b"), "left")
       .select(
         col("group_a"), col("group_b"), col("n_a"), col("n_b"),
         coalesce(col("n_inter"), lit(0L)).as("n_inter"),
         round(coalesce(col("n_inter"), lit(0L)) * 1.0 /
           (col("n_a") + col("n_b") - coalesce(col("n_inter"), lit(0L))), 6).as("jaccard"))
-    (result, sh)
   }
 
   // --- SimHash ---------------------------------------------------------------

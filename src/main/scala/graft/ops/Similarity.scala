@@ -1017,64 +1017,6 @@ object Similarity {
         dim, k, numCentroids, nProbe, numSubspaces, pqCentroids, candK,
         trainIters, coarse, residualCodebooks))
 
-  /** Embedding near-duplicate pairs: all (a < b) with cosine ≥ threshold.
-    *
-    * Exact all-pairs is inherently O(n²) in similarity computations; the
-    * distribution strategy is block self-join: rows hash into `numBlocks`
-    * blocks by id, each block is packed into one chunk row, and the
-    * B·(B+1)/2 ordered chunk pairs (block_a ≤ block_b) fan out across
-    * executors, each running a tight double-precision dot-product kernel
-    * over its two chunks. Nothing ever collects to the driver, and every
-    * unordered row pair is examined exactly once (cross-block pairs live in
-    * exactly one ordered chunk pair; same-block pairs in the diagonal one).
-    * The declarative form (pair join + `zip_with`/`aggregate` cosine) is
-    * interpreted per element and ~100× slower than the kernel.
-    *
-    * Scale contract: two chunks (2·n/B vectors) must fit in one task's
-    * memory — grow `numBlocks` with the corpus (work per task shrinks as
-    * 1/B², task count grows as B²). The total compute is still O(n²):
-    * beyond ~10M vectors route through [[hyperplaneBucket]] / [[lshTopK]]
-    * (approximate) instead of exact all-pairs.
-    *
-    * Per-pair math matches the SQL/oracle formulation exactly: sequential
-    * double dot and norms, rounded half-up to 6 dp. Null ids/vectors are
-    * excluded (they have no well-defined similarity).
-    *
-    * Caching contract (same as the Dedup near-dup family): the packed
-    * chunks persist for the lifetime of the lazy result — they feed both
-    * sides of the chunk-pair join, and unpersisting before the caller's
-    * action would recompute the group+pack twice. Long-lived sessions
-    * issuing many calls should `graft.CachedFrames.releaseAll()` between
-    * batches (Verify/Bench use the blunter clearCache) — or use
-    * [[cosineNearDupPairsEager]], which releases the chunk cache itself.
-    */
-  def cosineNearDupPairs(
-      df: DataFrame, idCol: String, vecCol: String, threshold: Double,
-      numBlocks: Int = 16): DataFrame =
-    cosineNearDupPairsWithChunks(df, idCol, vecCol, threshold, numBlocks)._1
-
-  /** [[cosineNearDupPairs]] without the caching contract: materializes the
-    * pair result eagerly, releases the internal chunk cache before
-    * returning (try/finally — also on failure), and hands back a persisted
-    * result the CALLER owns (unpersist when done). The variant for
-    * long-lived sessions that can't clearCache between batches.
-    */
-  def cosineNearDupPairsEager(
-      df: DataFrame, idCol: String, vecCol: String, threshold: Double,
-      numBlocks: Int = 16): DataFrame = {
-    val (result, chunks) =
-      cosineNearDupPairsWithChunks(df, idCol, vecCol, threshold, numBlocks)
-    val out = result.transform(graft.CachedFrames.cached)
-    try out.count()
-    catch {
-      // on failure the caller never gets the handle — release it too, or
-      // each failed batch strands a persisted RDD for the session's life
-      case t: Throwable => out.unpersist(blocking = false); throw t
-    }
-    finally chunks.unpersist(blocking = true)
-    out
-  }
-
   /** Semantic cluster dedup (the SemDeDup-style curation step): connected
     * components over the embedding near-dup graph — [[cosineNearDupPairs]]
     * edges at `threshold`, then the same distributed min-label propagation
@@ -1175,9 +1117,39 @@ object Similarity {
         col("__pruned_id").isNotNull.as("pruned"))
   }
 
-  private def cosineNearDupPairsWithChunks(
+  /** Embedding near-duplicate pairs: all (a < b) with cosine ≥ threshold.
+    *
+    * Exact all-pairs is inherently O(n²) in similarity computations; the
+    * distribution strategy is block self-join: rows hash into `numBlocks`
+    * blocks by id, each block is packed into one chunk row, and the
+    * B·(B+1)/2 ordered chunk pairs (block_a ≤ block_b) fan out across
+    * executors, each running a tight double-precision dot-product kernel
+    * over its two chunks. Nothing ever collects to the driver, and every
+    * unordered row pair is examined exactly once (cross-block pairs live in
+    * exactly one ordered chunk pair; same-block pairs in the diagonal one).
+    * The declarative form (pair join + `zip_with`/`aggregate` cosine) is
+    * interpreted per element and ~100× slower than the kernel.
+    *
+    * Scale contract: two chunks (2·n/B vectors) must fit in one task's
+    * memory — grow `numBlocks` with the corpus (work per task shrinks as
+    * 1/B², task count grows as B²). The total compute is still O(n²):
+    * beyond ~10M vectors route through [[hyperplaneBucket]] / [[lshTopK]]
+    * (approximate) instead of exact all-pairs.
+    *
+    * Per-pair math matches the SQL/oracle formulation exactly: sequential
+    * double dot and norms, rounded half-up to 6 dp. Null ids/vectors are
+    * excluded (they have no well-defined similarity).
+    *
+    * Caching contract (same as the Dedup near-dup family): the packed
+    * chunks persist for the lifetime of the lazy result — they feed both
+    * sides of the chunk-pair join, and unpersisting before the caller's
+    * action would recompute the group+pack twice. Long-lived sessions
+    * issuing many calls should `graft.CachedFrames.releaseAll()` between
+    * batches, or scope each in `graft.CachedFrames.withCached {}`.
+    */
+  def cosineNearDupPairs(
       df: DataFrame, idCol: String, vecCol: String, threshold: Double,
-      numBlocks: Int): (DataFrame, DataFrame) = {
+      numBlocks: Int = 16): DataFrame = {
     require(numBlocks >= 1, s"numBlocks must be positive, got $numBlocks")
     // fail fast on non-integral ids: a silent cast("long") would turn
     // string ids into nulls AFTER the null filter has run, flooding the
@@ -1221,7 +1193,7 @@ object Similarity {
         col("__blk_a").as("_1"), col("__blk_b").as("_2"),
         col("__ra").as("_3"), col("__rb").as("_4"))
       .as[(Long, Long, Seq[(Long, Seq[Double])], Seq[(Long, Seq[Double])])]
-    val pairsOut = paired.mapPartitions { it =>
+    paired.mapPartitions { it =>
       def pack(rows: Seq[(Long, Seq[Double])]): (Array[Long], Array[Array[Double]], Array[Double]) = {
         val ids = new Array[Long](rows.size)
         val vs = new Array[Array[Double]](rows.size)
@@ -1263,6 +1235,5 @@ object Similarity {
         }
       }
     }.toDF("id_a", "id_b", "cosine_sim")
-    (pairsOut, chunks)
   }
 }

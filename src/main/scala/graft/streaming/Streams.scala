@@ -1568,27 +1568,31 @@ object Streams {
     * START, so wrap the `start()` call (runToMemory / writeStream),
     * not the transform construction.
     */
-  def withRocksDbProvider[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+  def withRocksDbProvider[T](spark: SparkSession)(body: => T): T =
+    // changelog checkpointing is a session conf, set in graft.Bench.session
+    withConfs(spark, "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
+
+  /** Run `body` with the session confs `kvs` set, then restore each one's
+    * prior value (or unset it).
+    */
+  private def withConfs[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T = {
+    val prior = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
-    finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
-    // Deliberately NOT set here: `spark.sql.streaming.stateStore.rocksdb
-    // .changelogCheckpointing.enabled`. At production state scale it is
-    // the right setting (per-batch commits ship the changelog; full
-    // snapshots move to background maintenance — commit cost stops
-    // scaling with store size), but it is a session-level deployment
-    // choice, and measured at gate scale (r16, the nine _tws gates,
-    // min-of-3 at sf0.1) it was neutral-to-negative (24.5 s -> 27.0 s):
-    // with KB-scale state the per-batch floor is trigger planning, and
-    // changelog files only add commit I/O. Enable it in the session conf
-    // for real deployments with large state.
   }
+
+  /** Spark plans every stateful micro-batch without AQE whatever the
+    * session says, and logs at start that AQE is unsupported in streaming
+    * whenever the session has it on. Starting with it off drops that WARN;
+    * stateless micro-batches, which Spark 4.1 would run with AQE, then
+    * plan without it too.
+    */
+  private val NoAqe = "spark.sql.adaptive.enabled" -> "false"
 
   /** Stage a bounded frame as a DETERMINISTIC event-time backlog replay:
     * one parquet file per non-empty `bucketUs` bucket of `microsCol`,
@@ -1714,10 +1718,7 @@ object Streams {
       require(dst.setLastModified(f.lastModified),
         s"could not preserve mtime on $dst")
     }
-    val key = "spark.sql.shuffle.partitions"
-    val prior = spark.conf.get(key)
-    spark.conf.set(key, statePartitions.toString)
-    try {
+    withConfs(spark, NoAqe, "spark.sql.shuffle.partitions" -> statePartitions.toString) {
       def incarnation(): Unit = {
         val q = transform(
           spark.readStream.schema(schema)
@@ -1729,13 +1730,15 @@ object Streams {
           .outputMode(OutputMode.Append())
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
-        try q.awaitTermination() finally q.stop()
+        // stopping a query that already ended cancels a job group with no
+        // jobs, which the scheduler logs as a WARN
+        try q.awaitTermination() finally if (q.isActive) q.stop()
       }
       arrive(chunkFiles.take(split))
       incarnation() // phase 1: partial backlog, then the query DIES
       arrive(chunkFiles.drop(split))
       incarnation() // phase 2: recovery from the checkpoint
-    } finally spark.conf.set(key, prior)
+    }
     spark.read.schema(transform(
       spark.readStream.schema(schema).parquet(src.toString)).schema)
       .parquet(out)
@@ -1758,10 +1761,8 @@ object Streams {
       statePartitions: Option[Int] = None,
       availableNow: Boolean = false): DataFrame = {
     val spark = df.sparkSession
-    val key = "spark.sql.shuffle.partitions"
-    val prior = spark.conf.get(key)
-    statePartitions.foreach(n => spark.conf.set(key, n.toString))
-    try {
+    withConfs(spark, NoAqe +:
+        statePartitions.map(n => "spark.sql.shuffle.partitions" -> n.toString).toSeq: _*) {
       val w = df.writeStream
         .format("memory")
         .queryName(name)
@@ -1779,8 +1780,8 @@ object Streams {
         else w).start()
       try {
         if (availableNow) q.awaitTermination() else q.processAllAvailable()
-      } finally q.stop()
-    } finally spark.conf.set(key, prior)
+      } finally if (q.isActive) q.stop()
+    }
     spark.table(name)
   }
 }

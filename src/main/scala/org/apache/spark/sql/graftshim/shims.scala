@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftshim
 
+import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{classic, Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
@@ -55,4 +56,14 @@ object FrameShim {
       rowCount = Some(rows))
     classic.Dataset.ofRows(session, LogicalRDD(attrs, rdd)(session, Some(stats)))
   }
+}
+
+/** Bridge to the `private[spark]` listener bus. */
+object ListenerShim {
+  /** Wait up to `timeoutMs` until every posted listener event has been
+    * delivered to every listener queue; on timeout, return anyway.
+    */
+  def drain(sc: SparkContext, timeoutMs: Long): Unit =
+    try sc.listenerBus.waitUntilEmpty(timeoutMs)
+    catch { case _: java.util.concurrent.TimeoutException => () }
 }

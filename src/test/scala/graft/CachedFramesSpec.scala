@@ -56,14 +56,13 @@ class CachedFramesSpec extends SparkSpec {
 
   test("double release is a safe no-op (ops that unpersist internally leave stale entries)") {
     CachedFrames.releaseAll()
-    val vecs = (1L to 20L).map(i => (i, Array.fill(4)((i % 5).toFloat + i)))
-      .toDF("vec_id", "embedding")
-    // the eager near-dup variant persists its chunk frame and releases it
-    // internally before returning — releaseAll afterwards must tolerate
-    // the stale (already-unpersisted) registry entry
-    val pairs = ops.Similarity.cosineNearDupPairsEager(
-      vecs, "vec_id", "embedding", threshold = 0.999, numBlocks = 2)
-    pairs.count()
+    // an operator that unpersists its own registered frame mid-call (the
+    // IVF trainer, the connected-components loop) leaves a stale entry
+    // behind — releaseAll afterwards must tolerate it
+    val frame = CachedFrames.cached(Seq((1L, 2L)).toDF("a", "b"))
+    frame.count()
+    frame.unpersist(blocking = true)
+    assert(CachedFrames.registeredCount == 1)
     CachedFrames.releaseAll()
     CachedFrames.releaseAll()
     assert(CachedFrames.registeredCount == 0)

@@ -155,36 +155,17 @@ class PrefixSpec extends SparkSpec {
   }
 
   test("one call plus collect on a groupBy input runs at most 5 Spark jobs") {
-    val sc = spark.sparkContext
-    val group = s"prefix-jobs-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val sentinel = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.add(e.properties.getProperty("spark.job.description", ""))
-          case Some(g) if g == s"$group-end" => sentinel.countDown()
-          case _ => ()
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      val perK = (1L to 2000L).map(i => (i % 257, i)).toDF("k", "v")
-        .groupBy("k").agg(sum("v").as("t"))
-      sc.setJobGroup(group, "prefix job count")
+    val perK = (1L to 2000L).map(i => (i % 257, i)).toDF("k", "v")
+      .groupBy("k").agg(sum("v").as("t"))
+    val profiler = new graft.Profiler(spark)
+    val jobs = try {
+      val t0 = System.currentTimeMillis()
       Prefix.exclusiveSums(perK, Seq(col("k")), Seq("c" -> col("t"))).collect()
-      // the listener bus is ordered: once the sentinel job is seen, every
-      // job of the group has been seen too
-      sc.setJobGroup(s"$group-end", "sentinel")
-      sc.parallelize(Seq(1)).count()
-      assert(sentinel.await(30, java.util.concurrent.TimeUnit.SECONDS))
-      info(s"${jobs.size} jobs: ${jobs.toArray.mkString(" | ")}")
-      assert(jobs.size <= 5, s"${jobs.size} jobs: $jobs")
-      assert(jobs.toArray.contains("Prefix.exclusiveSums: partition totals"), jobs.toString)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+      profiler.take(t0, System.currentTimeMillis()).jobs
+    } finally profiler.close()
+    info(s"${jobs.size} jobs: ${jobs.mkString(" | ")}")
+    assert(jobs.size <= 5, s"${jobs.size} jobs: $jobs")
+    assert(jobs.contains("Prefix.exclusiveSums: partition totals"), jobs.toString)
   }
 
   test("the caller's job description is restored after the call") {

@@ -103,28 +103,6 @@ class SimilaritySpec extends SparkSpec {
     assert(got == Map(0L -> 0L, 1L -> 0L, 2L -> 0L, 3L -> 3L, 4L -> 4L))
   }
 
-  test("cosineNearDupPairsEager: same pairs as lazy form, no chunk cache left behind") {
-    spark.catalog.clearCache()
-    val expected = Similarity.cosineNearDupPairs(vecs, "vec_id", "embedding", 0.5)
-      .as[(Long, Long, Double)].collect().toSet
-    spark.catalog.clearCache()
-    // compare RDD-ID SETS, not counts: persisted RDDs left by other
-    // suites (e.g. a CC result's final localCheckpoint) are reclaimed by
-    // the ContextCleaner on ITS schedule, so absolute counts race with GC
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val eager = Similarity.cosineNearDupPairsEager(vecs, "vec_id", "embedding", 0.5)
-    assert(eager.as[(Long, Long, Double)].collect().toSet == expected)
-    // only the caller-owned result may remain newly cached; the internal
-    // chunk frame must be gone the moment the call returns
-    val newAfterEager = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(newAfterEager.size == 1,
-      s"expected only the returned result newly cached, found ${newAfterEager.size}")
-    eager.unpersist(blocking = true)
-    val newAfterRelease = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(newAfterRelease.isEmpty,
-      s"released result still pinned: $newAfterRelease")
-  }
-
   test("certifyRecallFloor: attaches mean/floor/pass when met, raises when violated") {
     val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     val rec = Similarity.quantizedRecall(
@@ -304,20 +282,15 @@ class SimilaritySpec extends SparkSpec {
       .select(col("vec_id"), expr(
         "transform(embedding, (x, i) -> if(i = 0, 'nan?', cast(x as string)))")
         .as("embedding"))
-    val starts = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        starts.add(e.time)
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val profiler = new graft.Profiler(spark)
     try {
       intercept[Exception](Similarity.pqTrain(emb, "vec_id", "embedding",
         dim = 64, numSubspaces = 4, numCentroids = 8, iters = 3))
       val failedAt = System.currentTimeMillis()
       Thread.sleep(1500)
-      val late = starts.toArray.count(_.asInstanceOf[Long] > failedAt)
-      assert(late == 0, s"$late jobs started after the call failed")
-    } finally spark.sparkContext.removeSparkListener(listener)
+      val late = profiler.take(failedAt + 1, System.currentTimeMillis()).jobs
+      assert(late.isEmpty, s"${late.size} jobs started after the call failed")
+    } finally profiler.close()
   }
 
   test("quantizedTopK: int8-code search recall vs exact meets a high floor") {

@@ -1192,6 +1192,35 @@ class StreamsSpec extends SparkSpec {
     assert(e.getMessage.contains("nulls"), e.getMessage)
   }
 
+  test("runToMemory and drainWithCheckpointRestart log none of Spark's streaming start/stop WARNs") {
+    import spark.implicits._
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val spy = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "streams-warn-spy", null, null, true, Array.empty) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    spy.start()
+    ctx.getConfiguration.getRootLogger.addAppender(spy, Level.WARN, null)
+    ctx.updateLoggers()
+    try {
+      val df = (0L until 6L).map(i => (i % 2, i, i * 100L, i.toDouble))
+        .toDF("user_id", "event_id", "ts", "value")
+      val dir = Streams.stageEventTimeReplay(df, "ts", bucketUs = 100L)
+      val replay = spark.readStream.schema(df.schema).option("maxFilesPerTrigger", 1).parquet(dir)
+      assert(Streams.runToMemory(replay, "warn_spy_out", availableNow = true).count() == 6L)
+      assert(Streams.drainWithCheckpointRestart(spark, dir, df.schema, 2)(identity).count() == 6L)
+    } finally {
+      ctx.getConfiguration.getRootLogger.removeAppender(spy.getName)
+      ctx.updateLoggers()
+    }
+    val noise = seen.toArray.map(_.toString).filter(m => Seq("Failed to cancel job group",
+      "spark.sql.adaptive.enabled is not supported", "Disabling AQE").exists(m.contains))
+    assert(noise.isEmpty, noise.mkString("\n"))
+  }
+
   test("latestStateChanges: expiry emits a DELETE tombstone carrying the dying winner") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
