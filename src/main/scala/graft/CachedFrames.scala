@@ -57,6 +57,17 @@ object CachedFrames {
     frames.clear()
   }
 
+  /** Unpersist `ds` and drop them from the registry — for a caller that
+    * knows when its own persists are no longer read.
+    */
+  def release(ds: Dataset[_]*): Unit = synchronized {
+    ds.foreach { d =>
+      try d.unpersist(blocking = false)
+      catch { case scala.util.control.NonFatal(_) => () }
+      frames.filterInPlace(_ ne d)
+    }
+  }
+
   /** Run `body`, then release the internal frames registered DURING it.
     * Materialize results inside the block — a lazy frame returned out of
     * the scope recomputes the released intermediates if acted on later.

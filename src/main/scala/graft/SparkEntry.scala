@@ -3065,26 +3065,13 @@ object SparkEntry {
     // never through Spark's JSON reader). Catches multiLine-scan, explode,
     // extractor, cleaner, dropna, dedup, and parity-FK regressions that
     // the 2-bundle fixture gates would only see one instance of.
-    "fhir_scale" -> ((s, _) => {
-      // eager: the 33k-entry parse is cached for the six table passes and
-      // UNPERSISTED before returning — the result is 6 rows, so collect
-      // them rather than pin a corpus-sized cache for the rest of the JVM
-      // (the persist-outlives-call contract is fine for library ops, not
-      // for a gate that runs inside every Verify/bench pass).
-      // coalesce (r20): the 5k-small-file scan splits into ~157
-      // partitions; the six cached passes would each launch 157 near-
-      // empty tasks (StageProbe: ~0.6 s wall per pass in task launches)
-      val entries = graft.fhir.BundleReader
-        .normalizedEntries(s, graft.fhir.FhirCorpus.corpusDir)
-        .coalesce(s.sparkContext.defaultParallelism).cache()
-      // materialize ONCE before the union collect (r20, StageProbe): the
-      // six aggregate branches run as concurrent subtrees of one job, and
-      // each subtree re-parses the whole corpus when the cache blocks
-      // don't exist yet — measured as 6 × ~13 s of executor time where
-      // one parse suffices (the Dedup.connectedComponents sym.count()
-      // lesson, applied here)
-      entries.count()
-      try {
+    "fhir_scale" -> ((s, _) =>
+      // eager: the 33k-entry parse is persisted once for the six table
+      // passes and released before returning — the result is 6 rows, so
+      // collect them rather than pin a corpus-sized cache for the rest of
+      // the JVM (the persist-outlives-call contract is fine for library
+      // ops, not for a gate that runs inside every Verify/bench pass)
+      graft.fhir.BundleReader.withParsedEntries(s, graft.fhir.FhirCorpus.corpusDir) { entries =>
         val tables = graft.fhir.Cleaning.all(graft.fhir.Extractors.allTables(entries))
         val agg = Seq(
           fhirScaleAgg(tables("patient"), "patient", "resource.birthDate",
@@ -3106,8 +3093,7 @@ object SparkEntry {
         val schema = agg.schema
         s.createDataFrame(java.util.Arrays.asList(agg.collect(): _*), schema)
           .orderBy("table")
-      } finally entries.unpersist()
-    }),
+      }),
 
     // §2.11 — ANN quality gate: deterministic recall of the LSH path vs
     // the exact brute-force ground truth (both sides pinned elsewhere:

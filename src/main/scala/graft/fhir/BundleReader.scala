@@ -1,6 +1,7 @@
 package graft.fhir
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 /** FHIR Bundle ingest (SURVEY.md §2.1 S1–S3, §2.2 F1–F4).
@@ -9,9 +10,8 @@ import org.apache.spark.sql.functions._
   * with per-row `pd.concat` (`json_pipeline.py:100-118, 59-94`). Here the
   * whole directory is ONE schema'd `json` scan — Spark lists and splits
   * files across executors — and the per-entry rowization is a single
-  * `explode`. The resourceType router becomes six filters over one cached
-  * plan, so Catalyst pushes both the type predicate and the per-resource
-  * column pruning into the scan.
+  * `explode`, parsed once into a persisted frame ([[withParsedEntries]]).
+  * The resourceType router becomes six filters over that frame.
   */
 object BundleReader {
 
@@ -92,8 +92,8 @@ object BundleReader {
         col("resource.subject.reference"), col("resource.patient.reference"))))
 
   /** F2 router — one filter per resource type over the shared entry scan.
-    * Callers should `.cache()` the entries DataFrame before fanning out six
-    * ways so the JSON parse happens once.
+    * Route over [[withParsedEntries]]' persisted frame, so the six routed
+    * tables read memory and the JSON parse happens once.
     */
   def route(entries: DataFrame, fhirResourceType: String): DataFrame =
     entries.filter(col("resource.resourceType") === fhirResourceType)
@@ -104,6 +104,42 @@ object BundleReader {
     */
   def normalizedEntries(spark: SparkSession, path: String): DataFrame =
     normalize(readEntries(spark, path))
+
+  /** Parse once: [[normalizedEntries]] coalesced to [[parsePartitions]],
+    * persisted through [[graft.CachedFrames.cached]] and materialized
+    * (job description `fhir parse`) BEFORE `body` fans out over it —
+    * concurrent branches over a cache that does not exist yet each
+    * re-parse the whole directory. The frame is released when `body`
+    * returns, so materialize inside `body` whatever it returns.
+    */
+  def withParsedEntries[T](spark: SparkSession, path: String)(body: DataFrame => T): T = {
+    val scan = normalizedEntries(spark, path)
+    val entries = graft.CachedFrames.cached(scan.coalesce(parsePartitions(scan)))
+    try {
+      graft.FanOut.described(spark.sparkContext, "fhir parse")(entries.count())
+      body(entries)
+    } finally graft.CachedFrames.release(entries)
+  }
+
+  /** Partitions for a persisted parse of `scan`: one per core, or one per
+    * `spark.sql.files.maxPartitionBytes` of input files when that is more.
+    * The scan pads every small file to `openCostInBytes` when it packs
+    * splits (32 splits for 1,000 3-KB bundles on 4 cores), so each pass
+    * over a persisted parse would otherwise launch mostly empty tasks.
+    * `coalesce` never adds partitions: the scan's own count caps this.
+    */
+  private def parsePartitions(scan: DataFrame): Int = {
+    val qe = scan.queryExecution
+    val bytes = qe.analyzed.collectLeaves().collect {
+      case l: LogicalRelation => l.relation match {
+        case h: HadoopFsRelation => h.location.sizeInBytes
+        case _ => 0L
+      }
+    }.sum
+    val perPartition = qe.sparkSession.sessionState.conf.filesMaxPartitionBytes
+    math.max(qe.sparkSession.sparkContext.defaultParallelism,
+      ((bytes + perPartition - 1) / perPartition).toInt)
+  }
 
   /** Normalization applied to an already-read entry frame (exposed
     * separately so tests can inject in-memory bundles).

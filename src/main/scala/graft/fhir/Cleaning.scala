@@ -104,18 +104,19 @@ object Cleaning {
         Seq("resource.encounter.reference", "resource.patient.reference"))),
       DateColumns)
 
-  /** Clean all six tables with their table-specific pipelines, threading a
-    * per-table instrumentation tap (see [[Tap]]).
+  /** Clean one table, by name, with its pipeline, threading an
+    * instrumentation tap (see [[Tap]]).
     */
-  def allTapped(tables: Map[String, DataFrame], tapFor: String => Tap): Map[String, DataFrame] = Map(
-    "patient" -> patient(tables("patient"), tapFor("patient")),
-    "encounter" -> encounter(tables("encounter"), tapFor("encounter")),
-    "condition" -> condition(tables("condition"), tapFor("condition")),
-    "observation" -> observation(tables("observation"), tapFor("observation")),
-    "immunization" -> immunization(tables("immunization"), tapFor("immunization")),
-    "careplan" -> careplan(tables("careplan"), tapFor("careplan")))
+  def table(name: String, df: DataFrame, tap: Tap = noTap): DataFrame = name match {
+    case "patient" => patient(df, tap)
+    case "encounter" => encounter(df, tap)
+    case "condition" => condition(df, tap)
+    case "observation" => observation(df, tap)
+    case "immunization" => immunization(df, tap)
+    case "careplan" => careplan(df, tap)
+  }
 
   /** Clean all six tables with their table-specific pipelines. */
   def all(tables: Map[String, DataFrame]): Map[String, DataFrame] =
-    allTapped(tables, _ => noTap)
+    graft.sinks.Sinks.LoadOrder.map(n => n -> table(n, tables(n))).toMap
 }

@@ -211,12 +211,17 @@ object Extractors {
       activityJoined("code").as("careplan_activity_code"))
   }
 
-  /** All six tables off one (cached) normalized entry frame. */
-  def allTables(entries: DataFrame): Map[String, DataFrame] = Map(
-    "patient" -> patient(BundleReader.route(entries, "Patient")),
-    "encounter" -> encounter(BundleReader.route(entries, "Encounter")),
-    "condition" -> condition(BundleReader.route(entries, "Condition")),
-    "observation" -> observation(BundleReader.route(entries, "Observation")),
-    "immunization" -> immunization(BundleReader.route(entries, "Immunization")),
-    "careplan" -> careplan(BundleReader.route(entries, "CarePlan")))
+  /** One table, by name, off a normalized entry frame. */
+  def table(entries: DataFrame, name: String): DataFrame = name match {
+    case "patient" => patient(BundleReader.route(entries, "Patient"))
+    case "encounter" => encounter(BundleReader.route(entries, "Encounter"))
+    case "condition" => condition(BundleReader.route(entries, "Condition"))
+    case "observation" => observation(BundleReader.route(entries, "Observation"))
+    case "immunization" => immunization(BundleReader.route(entries, "Immunization"))
+    case "careplan" => careplan(BundleReader.route(entries, "CarePlan"))
+  }
+
+  /** All six tables off one (persisted) normalized entry frame. */
+  def allTables(entries: DataFrame): Map[String, DataFrame] =
+    graft.sinks.Sinks.LoadOrder.map(n => n -> table(entries, n)).toMap
 }

@@ -1,10 +1,9 @@
 package graft.fhir
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, sum}
 
+import graft.{CachedFrames, FanOut}
 import graft.quality.FhirQuality
 import graft.sinks.Sinks
 
@@ -14,10 +13,13 @@ import graft.sinks.Sinks
   * quality check → per-table cleaning → final quality check → sinks.
   *
   * The reference runs 19 Airflow tasks that each re-execute the import-time
-  * pipeline (SURVEY.md §3.2); here the whole flow is six lazy DataFrame
-  * lineages off ONE cached entry scan — the fan-out parallelism the DAG
-  * simulated with tasks is inherent in Spark partitions, and the two QC
-  * checkpoints are just two more (tiny) jobs over the same cached scan.
+  * pipeline (SURVEY.md §3.2). Here [[run]] is eager and pays each step
+  * once: ONE parse of the bundle directory into a persisted entry frame,
+  * ONE pass per table that materializes its raw and cleaned forms side
+  * by side (the six tables concurrently, [[graft.FanOut]]), and the two
+  * QC summaries read those persisted tables. The wide nested entry frame
+  * is dropped before [[run]] returns; only the six narrow cleaned tables
+  * stay in memory for the caller's sinks.
   */
 object Pipeline {
 
@@ -25,12 +27,11 @@ object Pipeline {
     * (`json_pipeline.py:536-559` before/after prints;
     * `data_quality_checker.py:326-331` removed/filled/updated stats),
     * collected with `observe` metrics ON the cleaning plan itself: three
-    * tiny aggregate taps ride the existing lineage, so the numbers cost
-    * ZERO extra scans — they materialize when the table does.
+    * tiny aggregate taps ride the lineage that [[Pipeline.run]]
+    * materializes, so the numbers cost ZERO extra scans.
     *
-    * [[summary]] BLOCKS until an action has run over the corresponding
-    * table (e.g. a sink write, a count, the quality summary) — call it
-    * after materialization, as [[Pipeline.runToDir]] does.
+    * [[summary]] is complete when [[Pipeline.run]] returns: the run has
+    * materialized every table and waited for its metrics.
     */
   final case class TableAccounting(
       table: String,
@@ -72,27 +73,50 @@ object Pipeline {
       finalQuality: DataFrame,
       accounting: Map[String, TableAccounting])
 
-  /** Run ingest → extract → QC → clean → QC. Lazy apart from the QC
-    * summaries themselves (callers sink `tables` however they want; the
-    * per-table [[TableAccounting]] metrics complete as tables
-    * materialize).
+  /** Run ingest → extract → QC → clean → QC, eagerly. Returns the six
+    * cleaned tables persisted (through [[graft.CachedFrames.cached]]) and
+    * materialized, so the caller's sinks read memory — release them with
+    * [[graft.CachedFrames.release]] once written, as [[runToDir]] does;
+    * the two QC summaries as local frames of at most 20 rows in battery
+    * order; and complete per-table [[TableAccounting]]. Nothing else the
+    * call persisted outlives it.
     */
-  def run(spark: SparkSession, inputDir: String): Result = {
-    val entries = BundleReader.normalizedEntries(spark, inputDir).cache()
-    val raw = Extractors.allTables(entries)
-    val initialQ = FhirQuality.runQualityChecks(raw)
-
-    // --- G6 instrumentation: observe nodes along the cleaning lineage ---
-    val beforeObs = raw.keys.map(n => n -> Observation()).toMap
-    val observedRaw = raw.map { case (n, df) =>
-      n -> df.observe(beforeObs(n), count(lit(1)).as("rows"))
+  def run(spark: SparkSession, inputDir: String): Result =
+    BundleReader.withParsedEntries(spark, inputDir) { entries =>
+      val sc = spark.sparkContext
+      val tables = Sinks.LoadOrder.zip(FanOut(sc, "fhir-tables")(Sinks.LoadOrder.map { n =>
+        s"fhir table $n" -> (() => materialize(entries, n))
+      })).toMap
+      val raw = tables.map { case (n, t) => n -> t.raw }
+      val cleaned = tables.map { case (n, t) => n -> t.cleaned }
+      val qc = FanOut(sc, "fhir-qc")(Seq("initial" -> raw, "final" -> cleaned).map {
+        case (step, ts) => s"fhir qc $step" -> (() => local(FhirQuality.runQualityChecks(ts)))
+      })
+      CachedFrames.release(raw.values.toSeq: _*)
+      val accounting = tables.map { case (n, t) => n -> t.accounting }
+      // observed metrics arrive through the listener bus: wait for them
+      // here, so no caller ever blocks on a summary
+      accounting.values.foreach(_.summary)
+      Result(cleaned, qc(0), qc(1), accounting)
     }
-    val postDropObs = mutable.Map.empty[String, Observation]
-    def tapFor(table: String): Cleaning.Tap = { (point, df) =>
+
+  private final case class Materialized(raw: DataFrame, cleaned: DataFrame,
+      accounting: TableAccounting)
+
+  /** One table extracted and cleaned, both forms persisted and observed
+    * (G6), built by one action: the cleaned cache reads the raw one, which
+    * that action builds on the way.
+    */
+  private def materialize(entries: DataFrame, table: String): Materialized = {
+    val (before, after) = (Observation(), Observation())
+    val raw = CachedFrames.cached(
+      Extractors.table(entries, table).observe(before, count(lit(1)).as("rows")))
+    var postDrop = Option.empty[Observation]
+    val tap: Cleaning.Tap = { (point, df) =>
       if (point != "post_drop") df
       else {
         val o = Observation()
-        postDropObs(table) = o
+        postDrop = Some(o)
         if (table == "patient")
           // the reference's counters snapshot exactly here, post-dropna
           // pre-fill (`data_quality_checker.py:246-268`): booleans updated
@@ -108,36 +132,40 @@ object Pipeline {
         else df.observe(o, count(lit(1)).as("rows"))
       }
     }
-    val cleanedBare = Cleaning.allTapped(observedRaw, tapFor)
-    val afterObs = cleanedBare.keys.map(n => n -> Observation()).toMap
-    val cleaned = cleanedBare.map { case (n, df) =>
-      n -> df.observe(afterObs(n), count(lit(1)).as("rows"))
-    }
-    val accounting = cleaned.keys.map { n =>
-      n -> TableAccounting(n, beforeObs(n), postDropObs.get(n), afterObs(n))
-    }.toMap
-
-    val finalQ = FhirQuality.runQualityChecks(cleaned)
-    Result(cleaned, initialQ, finalQ, accounting)
+    val cleaned = CachedFrames.cached(
+      Cleaning.table(table, raw, tap).observe(after, count(lit(1)).as("rows")))
+    cleaned.write.format("noop").mode("overwrite").save()
+    Materialized(raw, cleaned, TableAccounting(table, before, postDrop, after))
   }
+
+  /** `df` collected into a local frame with its schema and row order, in
+    * one partition, so a sink writes it as one file in that order.
+    */
+  private def local(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+      .coalesce(1)
 
   /** Run + write every table as CSV (`json_pipeline.py:1058-1076`) or
     * parquet under `outDir/<table>`, with the two quality summaries at
     * `outDir/initial_quality` / `outDir/final_quality`, then print the
     * reference-style per-table accounting report ("Before cleaning: …
     * rows", removed/filled/updated — `json_pipeline.py:536-559`). The
-    * writes ARE the materializing actions, so the report costs nothing.
+    * eight writes run concurrently ([[graft.FanOut]]) from the persisted
+    * tables, which are released afterwards: acting on the returned
+    * `tables` again recomputes them.
     */
   def runToDir(spark: SparkSession, inputDir: String, outDir: String,
       format: String = "csv"): Result = {
     val r = run(spark, inputDir)
-    r.tables.foreach { case (name, df) =>
-      val out = Sinks.underscored(df)
-      if (format == "parquet") Sinks.writeParquet(out, s"$outDir/$name")
-      else Sinks.writeCsv(out, s"$outDir/$name")
-    }
-    Sinks.writeCsv(r.initialQuality, s"$outDir/initial_quality")
-    Sinks.writeCsv(r.finalQuality, s"$outDir/final_quality")
+    def write(df: DataFrame, name: String): Unit =
+      if (format == "parquet") Sinks.writeParquet(df, s"$outDir/$name")
+      else Sinks.writeCsv(df, s"$outDir/$name")
+    try FanOut(spark.sparkContext, "fhir-write")(
+      Sinks.LoadOrder.map(n => s"fhir write $n" -> (() => write(Sinks.underscored(r.tables(n)), n))) ++
+        Seq("initial_quality" -> r.initialQuality, "final_quality" -> r.finalQuality).map {
+          case (n, df) => s"fhir write $n" -> (() => Sinks.writeCsv(df, s"$outDir/$n"))
+        })
+    finally CachedFrames.release(r.tables.values.toSeq: _*)
     Sinks.LoadOrder.foreach { name =>
       r.accounting.get(name).foreach { acc =>
         val s = acc.summary

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.FrameShim
@@ -63,7 +62,7 @@ private[graft] object Prefix {
        else projected.repartitionByRange(orderCols: _*))
         .sortWithinPartitions(orderCols: _*)
     val sc = df.sparkSession.sparkContext
-    val (rows, totals) = described(sc, "Prefix.exclusiveSums: partition totals") {
+    val (rows, totals) = graft.FanOut.described(sc, "Prefix.exclusiveSums: partition totals") {
       val rows = ranged.queryExecution.toRdd
       // per partition: k sums, then the row count
       rows -> rows.mapPartitions { it =>
@@ -100,12 +99,5 @@ private[graft] object Prefix {
     })
     (FrameShim.fromRdd(df.sparkSession, summed, schema, totals.map(_(k)).sum),
       offsets.last.toSeq)
-  }
-
-  /** Run `body` under job description `desc`, restoring the caller's. */
-  private def described[T](sc: SparkContext, desc: String)(body: => T): T = {
-    val prior = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(desc)
-    try body finally sc.setLocalProperty("spark.job.description", prior)
   }
 }

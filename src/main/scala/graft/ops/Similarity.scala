@@ -707,46 +707,19 @@ object Similarity {
     // others. Results are position-identical to the sequential loop:
     // subspaces share nothing, every mean is exact grid-int64, and the
     // output order is the subspace index, not completion order.
-    // Bounded failure: at most defaultParallelism threads, and all
-    // subspaces' jobs share one job group, so the first failure cancels
-    // that group (running jobs and any a sibling submits later) and
-    // interrupts the pool before rethrowing — no training job outlives
-    // the failed call.
-    val sc = df.sparkSession.sparkContext
-    val group = s"graft-pqTrain-${java.util.UUID.randomUUID()}"
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(numSubspaces, sc.defaultParallelism))
-    val done = new java.util.concurrent.ExecutorCompletionService[(Int, DataFrame)](pool)
-    try {
-      (0 until numSubspaces).foreach { s =>
-        done.submit { () =>
-          sc.setJobGroup(group, s"pqTrain subspace $s", interruptOnCancel = true)
-          try {
-            val c = df
-              .filter(col(s"`$idCol`").isNotNull && col(s"`$vecCol`").isNotNull &&
-                size(col(s"`$vecCol`")) === dim)
-              .select(col(s"`$idCol`").cast("long").as("neighbor_id"),
-                expr(s"slice(`$vecCol`, ${s * sub + 1}, $sub)")
-                  .cast("array<double>").as("__cv"))
-            (s, ivfTrainCentroids(c, numCentroids, iters).withColumn("subspace", lit(s)))
-          } finally sc.clearJobGroup()
-        }
+    // Bounded failure (graft.FanOut): the first failed subspace cancels
+    // every sibling's jobs before the call rethrows.
+    graft.FanOut(df.sparkSession.sparkContext, "pqTrain")((0 until numSubspaces).map { s =>
+      s"pqTrain subspace $s" -> { () =>
+        val c = df
+          .filter(col(s"`$idCol`").isNotNull && col(s"`$vecCol`").isNotNull &&
+            size(col(s"`$vecCol`")) === dim)
+          .select(col(s"`$idCol`").cast("long").as("neighbor_id"),
+            expr(s"slice(`$vecCol`, ${s * sub + 1}, $sub)").cast("array<double>").as("__cv"))
+        ivfTrainCentroids(c, numCentroids, iters).withColumn("subspace", lit(s))
       }
-      val trained = new Array[DataFrame](numSubspaces)
-      try (0 until numSubspaces).foreach { _ =>
-        val (s, t) = done.take().get()
-        trained(s) = t
-      } catch { case e: Throwable =>
-        sc.cancelJobGroupAndFutureJobs(group)
-        pool.shutdownNow()
-        throw (e match {
-          case x: java.util.concurrent.ExecutionException => x.getCause
-          case x => x
-        })
-      }
-      trained.reduce(_.unionByName(_))
-        .select(col("subspace"), col("centroid_id"), col("__cent"))
-    } finally pool.shutdown()
+    }).reduce(_.unionByName(_))
+      .select(col("subspace"), col("centroid_id"), col("__cent"))
   }
 
   /** PQ encoding: per (vector, subspace), the nearest codebook entry

@@ -1,15 +1,23 @@
 package graft.fhir
 
-import graft.SparkSpec
-import java.nio.file.Files
+import graft.{CachedFrames, FanOut, SparkSpec}
+import graft.quality.FhirQuality
+import java.nio.file.{Files, Path}
+import scala.jdk.CollectionConverters._
 
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
 
-  test("runToDir: full pipeline writes 6 tables + 2 quality summaries; cleaning visible in QC delta") {
+  /** The dirty 2-bundle fixture as a bundle directory. */
+  private def fixtureDir(): Path = {
     val in = graft.TempRoots.create("pipe_in")
     Files.writeString(in.resolve("b1.json"), FhirFixtures.bundle1)
     Files.writeString(in.resolve("b2.json"), FhirFixtures.bundle2)
+    in
+  }
+
+  test("runToDir: full pipeline writes 6 tables + 2 quality summaries; cleaning visible in QC delta") {
+    val in = fixtureDir()
     val out = graft.TempRoots.create("pipe_out")
 
     val r = Pipeline.runToDir(spark, in.toString, out.toString)
@@ -69,5 +77,65 @@ class PipelineSpec extends SparkSpec {
     }
     // careplan has no null-key drop → no split, only before/after
     assert(!r.accounting("careplan").summary.contains("rows_removed_null_keys"))
+  }
+
+  test("run: the JSON source is scanned exactly once") {
+    val in = fixtureDir()
+    val jsonBytes = Files.size(in.resolve("b1.json")) + Files.size(in.resolve("b2.json"))
+    def bytesRead: Long =
+      Option(org.apache.hadoop.fs.FileSystem.getGlobalStorageStatistics.get("file"))
+        .map(_.getLong("bytesRead").longValue).getOrElse(0L)
+    val before = bytesRead
+    val r = Pipeline.run(spark, in.toString)
+    val byRun = bytesRead - before
+    // what a caller does next reads memory, not the source
+    try {
+      r.tables.values.foreach(_.write.format("noop").mode("overwrite").save())
+      r.initialQuality.collect()
+      r.finalQuality.collect()
+    } finally CachedFrames.release(r.tables.values.toSeq: _*)
+    val total = bytesRead - before
+    assert(byRun == jsonBytes, s"run read $byRun bytes of a $jsonBytes-byte source")
+    assert(total == jsonBytes, s"run and its sinks read $total bytes of a $jsonBytes-byte source")
+  }
+
+  test("run: QC frames equal the battery over the lazily derived tables, row for row") {
+    val in = fixtureDir()
+    val r = Pipeline.run(spark, in.toString)
+    try {
+      val raw = Extractors.allTables(BundleReader.normalizedEntries(spark, in.toString))
+      Seq(r.initialQuality -> FhirQuality.runQualityChecks(raw),
+          r.finalQuality -> FhirQuality.runQualityChecks(Cleaning.all(raw))).foreach {
+        case (eager, lazyQ) =>
+          assert(eager.schema == lazyQ.schema)
+          assert(eager.collect().toSeq == lazyQ.collect().toSeq)
+      }
+    } finally CachedFrames.release(r.tables.values.toSeq: _*)
+  }
+
+  test("run: every accounting summary is complete when run returns") {
+    val r = Pipeline.run(spark, fixtureDir().toString)
+    try {
+      r.accounting.foreach { case (name, acc) =>
+        (Seq(acc.before, acc.after) ++ acc.postDrop).foreach(o =>
+          assert(o.future.isCompleted, s"$name: observation ${o.name} still pending"))
+      }
+      assert(r.accounting("patient").summary("rows_before") == 3L)
+    } finally CachedFrames.release(r.tables.values.toSeq: _*)
+  }
+
+  test("runToDir: no persisted frame and no pool thread remains") {
+    val sc = spark.sparkContext
+    val persisted = sc.getPersistentRDDs.keySet
+    val registered = CachedFrames.registeredCount
+    Pipeline.runToDir(spark, fixtureDir().toString,
+      graft.TempRoots.create("pipe_out").toString, format = "parquet")
+    assert(sc.getPersistentRDDs.keySet -- persisted == Set.empty)
+    assert(CachedFrames.registeredCount == registered)
+    def poolThreads = Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName.startsWith(FanOut.ThreadPrefix))
+    val deadline = System.currentTimeMillis() + 5000
+    while (poolThreads.nonEmpty && System.currentTimeMillis() < deadline) Thread.sleep(50)
+    assert(poolThreads.isEmpty, poolThreads.map(_.getName))
   }
 }
