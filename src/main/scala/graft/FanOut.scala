@@ -1,9 +1,10 @@
 package graft
 
-import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors, ThreadFactory, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.{CancellationException, ExecutionException, ExecutorCompletionService, Executors, ThreadFactory, TimeUnit}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 
 import org.apache.spark.SparkContext
+import org.apache.spark.sql.graftshim.SchedulerShim
 
 /** Bounded concurrent submission of independent Spark actions.
   *
@@ -19,8 +20,16 @@ import org.apache.spark.SparkContext
   *    under its own job description, so event logs and the
   *    [[Profiler]]'s `job_descriptions` name the step that ran it;
   *  - on the first failure the group is cancelled together with any job
-  *    a sibling submits later, the pool is interrupted, and the thunk's
-  *    own exception is rethrown: no job of a failed call outlives it.
+  *    a sibling submits later, queued thunks never start, and the
+  *    thunk's own exception is rethrown once the pool is gone: no job of
+  *    a failed call outlives it. Running siblings are not interrupted:
+  *    AQE submits its map stages from its own threads, and a query
+  *    interrupted mid-plan leaves them to start later, outside the pool
+  *    (the future-job block does not stop map stages). A sibling fails
+  *    at its next cancelled or blocked job instead, through AQE's own
+  *    cleanup. The call's job tag (the group's id) is then cancelled
+  *    too, and the call waits until the scheduler has handled it, so
+  *    every job the call submitted has started and ended by then.
   */
 object FanOut {
 
@@ -42,11 +51,14 @@ object FanOut {
     val pool = Executors.newFixedThreadPool(
       math.max(1, math.min(tasks.size, sc.defaultParallelism)), daemonThreads)
     val done = new ExecutorCompletionService[(Int, T)](pool)
+    val failed = new AtomicBoolean()
     try {
       tasks.zipWithIndex.foreach { case ((desc, body), i) =>
         done.submit { () =>
+          if (failed.get) throw new CancellationException(s"graft.FanOut $name failed")
           sc.setJobGroup(group, desc, interruptOnCancel = true)
-          try (i, body()) finally sc.clearJobGroup()
+          sc.addJobTag(group)
+          try (i, body()) finally { sc.removeJobTag(group); sc.clearJobGroup() }
         }
       }
       val out = new Array[Any](tasks.size)
@@ -54,8 +66,8 @@ object FanOut {
         val (i, t) = done.take().get()
         out(i) = t
       } catch { case e: Throwable =>
+        failed.set(true)
         sc.cancelJobGroupAndFutureJobs(group)
-        pool.shutdownNow()
         throw (e match {
           case x: ExecutionException => x.getCause
           case x => x
@@ -65,6 +77,8 @@ object FanOut {
     } finally {
       pool.shutdown()
       pool.awaitTermination(30, TimeUnit.SECONDS)
+      // no pool thread submits any more: every job of the call is queued ahead of this cancel
+      if (failed.get) SchedulerShim.cancelTagAndWait(sc, group, s"graft.FanOut $name failed", 30000)
     }
   }
 

@@ -67,3 +67,18 @@ object ListenerShim {
     try sc.listenerBus.waitUntilEmpty(timeoutMs)
     catch { case _: java.util.concurrent.TimeoutException => () }
 }
+
+/** Bridge to the `private[spark]` tag cancellation that reports back. */
+object SchedulerShim {
+  /** Cancel every active job tagged `tag` and wait up to `timeoutMs`
+    * until the DAG scheduler has handled the cancellation: every job
+    * submitted before this call has then started and been cancelled or
+    * has ended, whatever path submitted it (`cancelJobGroupAndFutureJobs`
+    * does not stop the map-stage jobs that AQE submits). On timeout,
+    * return anyway.
+    */
+  def cancelTagAndWait(sc: SparkContext, tag: String, reason: String, timeoutMs: Long): Unit =
+    try scala.concurrent.Await.ready(sc.cancelJobsWithTagWithFuture(tag, reason),
+      scala.concurrent.duration.Duration(timeoutMs, "ms"))
+    catch { case _: java.util.concurrent.TimeoutException => () }
+}
