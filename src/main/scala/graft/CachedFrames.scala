@@ -17,18 +17,14 @@ import org.apache.spark.storage.StorageLevel
   *
   *  - [[releaseAll]] frees exactly the engine's internal caches and
   *    nothing else — the user's own persists survive;
-  *  - [[withCached]] scopes a composition: internal caches registered
-  *    inside the block are released on exit (after materializing the
-  *    result — the frames a returned lazy plan still needs recompute if
-  *    acted on later, correct but slower, so materialize inside).
+  *  - [[release]] frees named frames, for a caller that knows when its
+  *    own persists are no longer read.
   *
   * Unpersists are non-blocking (block eviction proceeds in the
   * background) and idempotent — operators that already release an
   * intermediate mid-call (the connected-components iteration, the IVF
   * trainer) simply leave a no-op entry behind. Thread safety: the
-  * registry is synchronized; [[withCached]] releases by registration
-  * position, so concurrent operator calls across threads should use
-  * [[releaseAll]] at quiesce points instead of overlapping scopes.
+  * registry is synchronized.
   */
 object CachedFrames {
 
@@ -65,24 +61,6 @@ object CachedFrames {
       try d.unpersist(blocking = false)
       catch { case scala.util.control.NonFatal(_) => () }
       frames.filterInPlace(_ ne d)
-    }
-  }
-
-  /** Run `body`, then release the internal frames registered DURING it.
-    * Materialize results inside the block — a lazy frame returned out of
-    * the scope recomputes the released intermediates if acted on later.
-    */
-  def withCached[T](body: => T): T = {
-    val mark = synchronized(frames.length)
-    try body
-    finally synchronized {
-      val added = frames.length - mark
-      if (added > 0) {
-        frames.takeRight(added).foreach(f =>
-          try f.unpersist(blocking = false)
-          catch { case scala.util.control.NonFatal(_) => () })
-        frames.remove(mark, added)
-      }
     }
   }
 }

@@ -1042,15 +1042,20 @@ object SparkEntry {
       .select(col("doc_id"), graft.ops.Dedup.simhash64(col("text")).as("simhash"))
       .filter(col("simhash").isNotNull)
 
-  /** One cleaned FHIR table (extraction + its table-specific cleaning
-    * pipeline) with underscored column names — the engine side of the
-    * `fhir_*_oracle` gates.
+  /** The fixture's six cleaned FHIR tables (extraction + each table's
+    * cleaning pipeline) over ONE parse of its normalized entries,
+    * persisted through [[CachedFrames.cached]] — Verify and Bench release
+    * it after each gate with `releaseAll`.
     */
-  private def fhirCleanedTable(s: SparkSession, table: String): DataFrame = {
-    val entries = graft.fhir.BundleReader.normalizedEntries(s, FhirFixtures.fixtureDir)
-    val cleaned = graft.fhir.Cleaning.all(graft.fhir.Extractors.allTables(entries))(table)
-    graft.sinks.Sinks.underscored(cleaned)
-  }
+  private def fhirFixtureTables(s: SparkSession): Map[String, DataFrame] =
+    graft.fhir.Cleaning.all(graft.fhir.Extractors.allTables(CachedFrames.cached(
+      graft.fhir.BundleReader.normalizedEntries(s, FhirFixtures.fixtureDir))))
+
+  /** One cleaned fixture table with underscored column names — the
+    * engine side of the `fhir_*_oracle` gates.
+    */
+  private def fhirCleanedTable(s: SparkSession, table: String): DataFrame =
+    graft.sinks.Sinks.underscored(fhirFixtureTables(s)(table))
 
   /** One expected-aggregate row per cleaned FHIR table for the
     * `fhir_scale` gate — the engine side of
@@ -1834,9 +1839,7 @@ object SparkEntry {
     // Lifts the catalog path from spec-only evidence to a first-class
     // differential gate, like jdbc_roundtrip did for Derby.
     "catalog_roundtrip" -> ((s, _) => {
-      val entries = graft.fhir.BundleReader
-        .normalizedEntries(s, FhirFixtures.fixtureDir).cache()
-      val tables = graft.fhir.Cleaning.all(graft.fhir.Extractors.allTables(entries))
+      val tables = fhirFixtureTables(s)
       // analyze=false IN THE GATE: the hash never consumes the CBO stats,
       // and full ANALYZE on six tables was the gate's entire 1.7 s floor
       // (r14 bench). SinksSpec keeps an analyze=true case, so the stats
@@ -2994,9 +2997,7 @@ object SparkEntry {
     // table's extraction + cleaning is hash-gated by the fhir_*_oracle
     // gates below; FhirPipelineSpec pins values here.
     "fhir_pipeline" -> ((s, _) => {
-      val entries = graft.fhir.BundleReader
-        .normalizedEntries(s, FhirFixtures.fixtureDir).cache()
-      val tables = graft.fhir.Cleaning.all(graft.fhir.Extractors.allTables(entries))
+      val tables = fhirFixtureTables(s)
       graft.sinks.Sinks.underscored(tables("patient"))
         .select("resource_id", "patient_id", "full_name", "latitude", "maritalStatus")
         .orderBy("resource_id")
@@ -3013,11 +3014,7 @@ object SparkEntry {
     // column list is duplicated; full per-value hashing stays with the
     // per-table gates.
     "fhir_tables" -> ((s, _) => {
-      // one normalized-entry scan feeds all six tables (per-table
-      // fhirCleanedTable calls would re-read + re-extract 6×)
-      val entries = graft.fhir.BundleReader
-        .normalizedEntries(s, FhirFixtures.fixtureDir).cache()
-      val tables = graft.fhir.Cleaning.all(graft.fhir.Extractors.allTables(entries))
+      val tables = fhirFixtureTables(s)
       Seq("careplan", "condition", "encounter", "immunization",
           "observation", "patient").map { name =>
         val u = graft.sinks.Sinks.underscored(tables(name))

@@ -18,19 +18,25 @@ import graft.clean.Cleaners
   *
   * Lat/lon range-nullify runs after dedup for patient
   * (`json_pipeline.py:552-554`). All steps are narrow except the dedup
-  * window (one shuffle on the key).
+  * window (one shuffle on the key). The dropna keys are [[DropKeys]],
+  * which the pipelines and [[Pipeline]]'s removal accounting both read.
   */
 object Cleaning {
 
-  /** Instrumentation hook: called at named points inside a table pipeline
-    * with the intermediate DataFrame; must return it (optionally wrapped,
-    * e.g. with `observe` metrics — zero extra scans). The only point
-    * currently emitted is `"post_drop"`, immediately after the table's
-    * null-key drop: that is where the reference snapshots its
-    * removed/filled/updated counters (`data_quality_checker.py:241-276`).
+  /** Each table's null-key drop, the first step of its pipeline: rows
+    * missing any of these keys go. Careplan has none. The pipeline's
+    * accounting counts the rows that keep every key
+    * ([[graft.fhir.Pipeline.TableAccounting]]).
     */
-  type Tap = (String, DataFrame) => DataFrame
-  val noTap: Tap = (_, df) => df
+  val DropKeys: Map[String, Seq[String]] = Map(
+    "patient" -> Seq("resource.id"),
+    "encounter" -> Seq("resource.id", "resource.patient.reference"),
+    "condition" -> Seq("resource.id", "patient_id"),
+    "observation" -> Seq("resource.id", "patient_id"),
+    "immunization" -> Seq("resource.encounter.reference", "resource.patient.reference"))
+
+  private def dropNullKeys(df: DataFrame, table: String): DataFrame =
+    Cleaners.dropNullKeys(df, DropKeys(table))
 
   /** The 8 date columns the format cleaner touches wherever present
     * (`data_quality_checker.py:177`).
@@ -52,8 +58,8 @@ object Cleaning {
     Cleaners.dedupKeepFirst(df, Seq(key), tiebreak)
   }
 
-  def patient(df: DataFrame, tap: Tap = noTap): DataFrame = {
-    val dropped = tap("post_drop", Cleaners.dropNullKeys(df, Seq("resource.id")))
+  def patient(df: DataFrame): DataFrame = {
+    val dropped = dropNullKeys(df, "patient")
     val missing = Cleaners.fillNull(
       Cleaners.backfillBooleanFromInt(
         dropped,
@@ -67,53 +73,41 @@ object Cleaning {
       "longitude", -180, 180)
   }
 
-  def encounter(df: DataFrame, tap: Tap = noTap): DataFrame =
+  def encounter(df: DataFrame): DataFrame =
     dedup(
       Cleaners.swapInvertedPair(
-        Cleaners.nullifyInvalidDates(
-          tap("post_drop",
-            Cleaners.dropNullKeys(df, Seq("resource.id", "resource.patient.reference"))),
-          DateColumns),
+        Cleaners.nullifyInvalidDates(dropNullKeys(df, "encounter"), DateColumns),
         "resource.period.start", "resource.period.end"),
       "resource.id")
 
-  def careplan(df: DataFrame, tap: Tap = noTap): DataFrame =
+  def careplan(df: DataFrame): DataFrame =
     Cleaners.swapInvertedPair(
       Cleaners.nullifyInvalidDates(df, DateColumns),
       "resource.period.start", "resource.period.end")
 
-  def condition(df: DataFrame, tap: Tap = noTap): DataFrame =
+  def condition(df: DataFrame): DataFrame =
     dedup(
       Cleaners.swapInvertedPair(
-        Cleaners.nullifyInvalidDates(
-          tap("post_drop", Cleaners.dropNullKeys(df, Seq("resource.id", "patient_id"))),
-          DateColumns),
+        Cleaners.nullifyInvalidDates(dropNullKeys(df, "condition"), DateColumns),
         "resource.onsetDateTime", "resource.abatementDateTime"),
       "resource.id")
 
-  def observation(df: DataFrame, tap: Tap = noTap): DataFrame =
+  def observation(df: DataFrame): DataFrame =
     dedup(
-      Cleaners.nullifyInvalidDates(
-        tap("post_drop", Cleaners.dropNullKeys(df, Seq("resource.id", "patient_id"))),
-        DateColumns),
+      Cleaners.nullifyInvalidDates(dropNullKeys(df, "observation"), DateColumns),
       "resource.id")
 
-  def immunization(df: DataFrame, tap: Tap = noTap): DataFrame =
-    Cleaners.nullifyInvalidDates(
-      tap("post_drop", Cleaners.dropNullKeys(df,
-        Seq("resource.encounter.reference", "resource.patient.reference"))),
-      DateColumns)
+  def immunization(df: DataFrame): DataFrame =
+    Cleaners.nullifyInvalidDates(dropNullKeys(df, "immunization"), DateColumns)
 
-  /** Clean one table, by name, with its pipeline, threading an
-    * instrumentation tap (see [[Tap]]).
-    */
-  def table(name: String, df: DataFrame, tap: Tap = noTap): DataFrame = name match {
-    case "patient" => patient(df, tap)
-    case "encounter" => encounter(df, tap)
-    case "condition" => condition(df, tap)
-    case "observation" => observation(df, tap)
-    case "immunization" => immunization(df, tap)
-    case "careplan" => careplan(df, tap)
+  /** Clean one table, by name, with its pipeline. */
+  def table(name: String, df: DataFrame): DataFrame = name match {
+    case "patient" => patient(df)
+    case "encounter" => encounter(df)
+    case "condition" => condition(df)
+    case "observation" => observation(df)
+    case "immunization" => immunization(df)
+    case "careplan" => careplan(df)
   }
 
   /** Clean all six tables with their table-specific pipelines. */

@@ -1,10 +1,13 @@
 package graft.fhir
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.functions.{col, count, lit, sum}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 
 import graft.{CachedFrames, FanOut}
-import graft.quality.FhirQuality
+import graft.quality.{FhirQuality, QualityChecker}
+import graft.quality.QualityChecker.PredicateError
 import graft.sinks.Sinks
 
 /** End-to-end FHIR pipeline — the engine's equivalent of the reference's
@@ -15,57 +18,27 @@ import graft.sinks.Sinks
   * The reference runs 19 Airflow tasks that each re-execute the import-time
   * pipeline (SURVEY.md §3.2). Here [[run]] is eager and pays each step
   * once: ONE parse of the bundle directory into a persisted entry frame,
-  * ONE pass per table that materializes its raw and cleaned forms side
-  * by side (the six tables concurrently, [[graft.FanOut]]), and the two
-  * QC summaries read those persisted tables. The wide nested entry frame
-  * is dropped before [[run]] returns; only the six narrow cleaned tables
-  * stay in memory for the caller's sinks.
+  * then ONE task per table (the six concurrently, [[graft.FanOut]]) that
+  * persists the raw table, collects its initial QC battery, persists the
+  * cleaned table, collects its final battery and releases the raw one.
+  * The cleaning accounting is a handful of extra sums in those two
+  * batteries. The wide nested entry frame is dropped before [[run]]
+  * returns; only the six narrow cleaned tables stay in memory for the
+  * caller's sinks.
   */
 object Pipeline {
 
   /** G6 — the reference's per-table cleaning accounting
     * (`json_pipeline.py:536-559` before/after prints;
-    * `data_quality_checker.py:326-331` removed/filled/updated stats),
-    * collected with `observe` metrics ON the cleaning plan itself: three
-    * tiny aggregate taps ride the lineage that [[Pipeline.run]]
-    * materializes, so the numbers cost ZERO extra scans.
-    *
-    * [[summary]] is complete when [[Pipeline.run]] returns: the run has
-    * materialized every table and waited for its metrics.
+    * `data_quality_checker.py:326-331` removed/filled/updated stats):
+    * `rows_before`, `rows_after` and `rows_removed`; for a table with a
+    * null-key drop ([[Cleaning.DropKeys]]) the removal split
+    * `rows_removed_null_keys` / `rows_removed_dedup`; for patient the
+    * reference's `filled_values` and `updated_booleans`. The counts are
+    * extra sums of the table's QC batteries, so they cost no pass of
+    * their own.
     */
-  final case class TableAccounting(
-      table: String,
-      before: Observation,
-      postDrop: Option[Observation],
-      after: Observation) {
-
-    private def metric(o: Observation, key: String): Long =
-      o.get.get(key).flatMap(Option(_)) match {
-        case Some(n: Number) => n.longValue()
-        case _ => 0L
-      }
-
-    /** rows_before/after, removal split (null-key drop vs dedup), and for
-      * patient the reference's filled/updated counters.
-      */
-    def summary: Map[String, Long] = {
-      val b = metric(before, "rows")
-      val a = metric(after, "rows")
-      val base = Map(
-        "rows_before" -> b, "rows_after" -> a, "rows_removed" -> (b - a))
-      postDrop match {
-        case None => base
-        case Some(p) =>
-          val pd = metric(p, "rows")
-          val extras = p.get.keySet.collect {
-            case k @ ("filled_values" | "updated_booleans") => k -> metric(p, k)
-          }
-          base ++ Map(
-            "rows_removed_null_keys" -> (b - pd),
-            "rows_removed_dedup" -> (pd - a)) ++ extras
-      }
-    }
-  }
+  final case class TableAccounting(table: String, summary: Map[String, Long])
 
   final case class Result(
       tables: Map[String, DataFrame],
@@ -77,73 +50,79 @@ object Pipeline {
     * cleaned tables persisted (through [[graft.CachedFrames.cached]]) and
     * materialized, so the caller's sinks read memory — release them with
     * [[graft.CachedFrames.release]] once written, as [[runToDir]] does;
-    * the two QC summaries as local frames of at most 20 rows in battery
-    * order; and complete per-table [[TableAccounting]]. Nothing else the
-    * call persisted outlives it.
+    * the two QC summaries as local frames of at most 20 rows in
+    * [[graft.quality.FhirQuality.TableOrder]], each table's rows in
+    * battery order; and complete per-table [[TableAccounting]]. Nothing
+    * else the call persisted outlives it.
     */
   def run(spark: SparkSession, inputDir: String): Result =
     BundleReader.withParsedEntries(spark, inputDir) { entries =>
-      val sc = spark.sparkContext
-      val tables = Sinks.LoadOrder.zip(FanOut(sc, "fhir-tables")(Sinks.LoadOrder.map { n =>
-        s"fhir table $n" -> (() => materialize(entries, n))
-      })).toMap
-      val raw = tables.map { case (n, t) => n -> t.raw }
-      val cleaned = tables.map { case (n, t) => n -> t.cleaned }
-      val qc = FanOut(sc, "fhir-qc")(Seq("initial" -> raw, "final" -> cleaned).map {
-        case (step, ts) => s"fhir qc $step" -> (() => local(FhirQuality.runQualityChecks(ts)))
-      })
-      CachedFrames.release(raw.values.toSeq: _*)
-      val accounting = tables.map { case (n, t) => n -> t.accounting }
-      // observed metrics arrive through the listener bus: wait for them
-      // here, so no caller ever blocks on a summary
-      accounting.values.foreach(_.summary)
-      Result(cleaned, qc(0), qc(1), accounting)
+      val tables = Sinks.LoadOrder.zip(FanOut(spark.sparkContext, "fhir-tables")(
+        Sinks.LoadOrder.map(n => s"fhir table $n" -> (() => materialize(entries, n))))).toMap
+      def report(qc: Materialized => Seq[Row]): DataFrame = {
+        val rows = FhirQuality.TableOrder.flatMap(n => qc(tables(n)))
+        // one partition: a sink writes one file, in this order
+        spark.createDataFrame(rows.asJava, rows.head.schema).coalesce(1)
+      }
+      Result(tables.map { case (n, t) => n -> t.cleaned }, report(_.initialQc),
+        report(_.finalQc), tables.map { case (n, t) => n -> t.accounting })
     }
 
-  private final case class Materialized(raw: DataFrame, cleaned: DataFrame,
-      accounting: TableAccounting)
+  private final case class Materialized(cleaned: DataFrame, initialQc: Seq[Row],
+      finalQc: Seq[Row], accounting: TableAccounting)
 
-  /** One table extracted and cleaned, both forms persisted and observed
-    * (G6), built by one action: the cleaned cache reads the raw one, which
-    * that action builds on the way.
+  /** Every row, as a battery sum. */
+  private val Rows = PredicateError("rows", lit(true))
+
+  /** The accounting sums of the initial battery over a raw table: its
+    * rows, the rows that keep every drop key, and for patient the
+    * reference's counters over those rows, which it snapshots right
+    * after the drop (`data_quality_checker.py:246-268`): booleans updated
+    * where the integer is present and the boolean missing; integer nulls
+    * then filled with 0.
+    */
+  private def accountingSums(table: String): Seq[PredicateError] =
+    Rows +: Cleaning.DropKeys.get(table).toSeq.flatMap { keys =>
+      val kept = keys.map(k => col(s"`$k`").isNotNull).reduce(_ && _)
+      val int = col("`resource.multipleBirthInteger`")
+      PredicateError("rows_post_drop", kept) +: (if (table != "patient") Nil else Seq(
+        PredicateError("updated_booleans",
+          kept && int.isNotNull && col("`resource.multipleBirthBoolean`").isNull),
+        PredicateError("filled_values", kept && int.isNull)))
+    }
+
+  /** One table, in one task: the raw table persisted and its initial
+    * battery collected, then the cleaned table persisted (it reads the
+    * raw cache) and its final battery collected, then the raw table
+    * released. Each battery is the table's QC checks followed by its
+    * accounting sums.
     */
   private def materialize(entries: DataFrame, table: String): Materialized = {
-    val (before, after) = (Observation(), Observation())
-    val raw = CachedFrames.cached(
-      Extractors.table(entries, table).observe(before, count(lit(1)).as("rows")))
-    var postDrop = Option.empty[Observation]
-    val tap: Cleaning.Tap = { (point, df) =>
-      if (point != "post_drop") df
-      else {
-        val o = Observation()
-        postDrop = Some(o)
-        if (table == "patient")
-          // the reference's counters snapshot exactly here, post-dropna
-          // pre-fill (`data_quality_checker.py:246-268`): booleans updated
-          // where the integer is present and the boolean missing; integer
-          // nulls then filled with 0
-          df.observe(o,
-            count(lit(1)).as("rows"),
-            sum((col("`resource.multipleBirthInteger`").isNotNull &&
-              col("`resource.multipleBirthBoolean`").isNull).cast("long"))
-              .as("updated_booleans"),
-            sum(col("`resource.multipleBirthInteger`").isNull.cast("long"))
-              .as("filled_values"))
-        else df.observe(o, count(lit(1)).as("rows"))
-      }
+    val checks = FhirQuality.checks(table)
+    def battery(step: String, df: DataFrame, sums: Seq[PredicateError]) = {
+      val b = QualityChecker.tableBattery(df, s"${table}_df", checks ++ sums)
+      val rows = FanOut.described(df.sparkSession.sparkContext, s"fhir qc $step $table")(b.collect())
+      val (qc, counts) = rows.toSeq.splitAt(checks.size)
+      (qc, counts.map(r => r.getString(1) -> r.getLong(2)).toMap)
     }
-    val cleaned = CachedFrames.cached(
-      Cleaning.table(table, raw, tap).observe(after, count(lit(1)).as("rows")))
-    cleaned.write.format("noop").mode("overwrite").save()
-    Materialized(raw, cleaned, TableAccounting(table, before, postDrop, after))
+    val raw = CachedFrames.cached(Extractors.table(entries, table))
+    try {
+      val (initialQc, before) = battery("initial", raw, accountingSums(table))
+      val cleaned = CachedFrames.cached(Cleaning.table(table, raw))
+      val (finalQc, after) = battery("final", cleaned, Seq(Rows))
+      Materialized(cleaned, initialQc, finalQc,
+        TableAccounting(table, summary(before, after("rows"))))
+    } finally CachedFrames.release(raw)
   }
 
-  /** `df` collected into a local frame with its schema and row order, in
-    * one partition, so a sink writes it as one file in that order.
-    */
-  private def local(df: DataFrame): DataFrame =
-    df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
-      .coalesce(1)
+  private def summary(before: Map[String, Long], after: Long): Map[String, Long] = {
+    val b = before("rows")
+    val base = Map("rows_before" -> b, "rows_after" -> after, "rows_removed" -> (b - after))
+    before.get("rows_post_drop").fold(base) { kept =>
+      base ++ Map("rows_removed_null_keys" -> (b - kept), "rows_removed_dedup" -> (kept - after)) ++
+        (before -- Seq("rows", "rows_post_drop"))
+    }
+  }
 
   /** Run + write every table as CSV (`json_pipeline.py:1058-1076`) or
     * parquet under `outDir/<table>`, with the two quality summaries at

@@ -16,8 +16,7 @@ import org.apache.spark.sql.functions._
   * nothing is unpersisted here. Every internal persist routes through
   * [[graft.CachedFrames]], so long-running sessions composing MANY
   * dedup calls release exactly the engine's caches with
-  * `CachedFrames.releaseAll()` (or scope a batch in
-  * `CachedFrames.withCached {}`) — user persists survive, unlike the
+  * `CachedFrames.releaseAll()` — user persists survive, unlike the
   * blunt `spark.catalog.clearCache()`. Accumulated entries otherwise
   * cause eviction thrash (measured 3× slowdown when four ops' caches
   * stack on one small executor).
@@ -627,8 +626,8 @@ object Dedup {
     *
     * Caching contract: the (group, hash) frame is persisted (it feeds the
     * size aggregate and both join sides) and stays cached until
-    * `CachedFrames.releaseAll()`; long-lived sessions scope a batch in
-    * `CachedFrames.withCached {}` to release it with the batch.
+    * `CachedFrames.releaseAll()`, which long-lived sessions call
+    * between batches.
     */
   def groupOverlapExact(
       df: DataFrame, groupCol: String, textCol: String, n: Int = 3): DataFrame = {

@@ -87,8 +87,7 @@ object GraphOps {
     *
     * Caching contract (same as the [[Dedup]] family): the degree table
     * and degree-attached adjacency are persisted and outlive the call —
-    * `graft.CachedFrames.releaseAll()` (or a `withCached {}` scope)
-    * reclaims them in long-lived sessions without touching user caches.
+    * `graft.CachedFrames.releaseAll()` reclaims them in long-lived sessions without touching user caches.
     */
   def pageRank(
       edges: DataFrame, srcCol: String, dstCol: String,

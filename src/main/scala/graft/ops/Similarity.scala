@@ -1118,7 +1118,7 @@ object Similarity {
     * sides of the chunk-pair join, and unpersisting before the caller's
     * action would recompute the group+pack twice. Long-lived sessions
     * issuing many calls should `graft.CachedFrames.releaseAll()` between
-    * batches, or scope each in `graft.CachedFrames.withCached {}`.
+    * batches.
     */
   def cosineNearDupPairs(
       df: DataFrame, idCol: String, vecCol: String, threshold: Double,

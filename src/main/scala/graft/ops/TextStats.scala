@@ -730,8 +730,7 @@ object TextStats {
     * same as [[unigramFamiliarity]]: the cache outlives the call —
     * Verify/Bench clearCache between queries; long-lived sessions
     * release it with `graft.CachedFrames.releaseAll()` after
-    * corpus-wide scoring, or scope the call in
-    * `CachedFrames.withCached {}`) and feed (a) the
+    * corpus-wide scoring) and feed (a) the
     * groupBy(w1,w2) count table, (b) the groupBy(w1) left-count table —
     * both map-side combined, Zipf-small vs the stream — and (c) the
     * probe side of the two equi-joins back; then one groupBy(id) fold.

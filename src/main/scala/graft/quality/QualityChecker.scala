@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Data-quality profiling / validation aggregates (SURVEY.md §2.8 G1–G6).
+/** Data-quality profiling / validation aggregates (SURVEY.md §2.8 G1–G5;
+  * the G6 cleaning accounting is [[graft.fhir.Pipeline.TableAccounting]]).
   *
   * The reference computes each metric with a full `iterrows()` pass per
   * check (`data_quality_checker.py:34-102`); here every metric is a
@@ -79,33 +80,27 @@ object QualityChecker {
 
   /** G2 — count of non-null values failing a predicate, as a one-row
     * summary `[table_name, error_type, error_count, error_pct]`
-    * (`data_quality_checker.py:34-45`).
+    * (`data_quality_checker.py:34-45`): a one-check [[tableBattery]].
     */
   def invalidCount(df: DataFrame, c: Column, valid: Column, errorType: String, tableName: String): DataFrame =
-    summaryRow(df, c.isNotNull && !valid, errorType, tableName)
+    tableBattery(df, tableName, Seq(invalidCheck(c, valid, errorType)))
 
   /** G3 — logical-order violations: both endpoints set and start > end
-    * (`data_quality_checker.py:83-94`).
+    * (`data_quality_checker.py:83-94`), a one-check [[tableBattery]].
     */
   def logicalOrderViolations(df: DataFrame, start: Column, end: Column, errorType: String, tableName: String): DataFrame =
-    summaryRow(df, start.isNotNull && end.isNotNull && start > end, errorType, tableName)
+    tableBattery(df, tableName, Seq(orderCheck(start, end, errorType)))
 
   /** G4 — duplicate-membership count: the number of rows belonging to any
     * duplicate group over `keys` (pandas `duplicated(keep=False).sum()`,
     * `data_quality_checker.py:97-102` — a group of 2 counts as 2, so this is
-    * NOT `count - countDistinct`).
+    * NOT `count - countDistinct`), a one-check [[tableBattery]].
     *
     * One shuffle on `keys` for the group sizes, then a global sum. At scale
     * the first aggregate is map-side combined on the key columns only.
     */
-  def duplicateMembership(df: DataFrame, keys: Seq[String], errorType: String, tableName: String): DataFrame = {
-    // backticked refs: keys may be literal dotted names (`resource.id`)
-    val sized = df.groupBy(keys.map(k => col(s"`$k`")): _*).agg(count(lit(1)).as("__n"))
-    val total = sized.agg(
-      sum(when(col("__n") > 1, col("__n")).otherwise(lit(0L))).as("error_count"),
-      sum(col("__n")).as("__total"))
-    finishSummary(total, errorType, tableName)
-  }
+  def duplicateMembership(df: DataFrame, keys: Seq[String], errorType: String, tableName: String): DataFrame =
+    tableBattery(df, tableName, Seq(DuplicateRows(errorType, keys)))
 
   /** G5 — a check battery is just a union of one-row summaries; keep result
     * ordering deterministic for hash comparison.
@@ -136,9 +131,9 @@ object QualityChecker {
 
   /** All of a table's checks in ONE scan of the table.
     *
-    * Building a battery as a union of [[invalidCount]]-style one-row
-    * aggregates re-scans the table once per check (the reference's 20-check
-    * battery costs up to 7 scans of one table). Here every predicate check
+    * Building a battery as a union of one-check batteries re-scans the
+    * table once per check (the reference's 20-check battery costs up to 7
+    * scans of one table). Here every predicate check
     * becomes one `sum` in a single aggregate; when the battery contains a
     * [[DuplicateRows]] check, the predicate sums ride its group-size
     * aggregation (groupBy keys → partial sums per group → re-sum), so the
@@ -146,8 +141,8 @@ object QualityChecker {
     * map-side combined, group-count-sized. A second DuplicateRows check
     * with different keys genuinely needs its own group pass (extra scan).
     *
-    * Output: one row per check, in battery order, same shape as
-    * [[invalidCount]] (`table_name, error_type, error_count, error_pct`).
+    * Output: one row per check, in battery order:
+    * `table_name, error_type, error_count, error_pct`.
     */
   def tableBattery(df: DataFrame, tableName: String, checks: Seq[BatteryCheck]): DataFrame =
     batteryRows(df, tableName, checks).orderBy("__ord").drop("__ord")
@@ -191,29 +186,8 @@ object QualityChecker {
         round(col("r.error_count") * 100.0 / col("__total"), 2).as("error_pct"))
     val extras = checks.zipWithIndex.collect {
       case (d: DuplicateRows, i) if i != firstDupIdx =>
-        duplicateMembership(df, d.keys, d.errorType, tableName).withColumn("__ord", lit(i))
+        batteryRows(df, tableName, Seq(d)).withColumn("__ord", lit(i))
     }
     (fused +: extras).reduce(_.unionByName(_))
   }
-
-  /** G6 — before/after accounting without extra passes: attach observable
-    * metrics to the plan; the listener (or `Observation`) reads them when
-    * the enclosing action runs.
-    */
-  def withRowCountObservation(df: DataFrame, name: String): DataFrame =
-    df.observe(name, count(lit(1)).as("rows"))
-
-  private def summaryRow(df: DataFrame, isError: Column, errorType: String, tableName: String): DataFrame =
-    finishSummary(
-      df.agg(
-        sum(isError.cast("long")).as("error_count"),
-        count(lit(1)).as("__total")),
-      errorType, tableName)
-
-  private def finishSummary(one: DataFrame, errorType: String, tableName: String): DataFrame =
-    one.select(
-      lit(tableName).as("table_name"),
-      lit(errorType).as("error_type"),
-      coalesce(col("error_count"), lit(0L)).as("error_count"),
-      round(coalesce(col("error_count"), lit(0L)) * 100.0 / col("__total"), 2).as("error_pct"))
 }

@@ -95,8 +95,7 @@ object syntax {
     /** Caching contract (both familiarity ops): the exploded token/bigram
       * frame is persisted (MEMORY_AND_DISK) and the cache OUTLIVES the
       * call — it's ~token-count-sized, so long-lived sessions doing
-      * corpus-wide scoring should `graft.CachedFrames.releaseAll()` (or
-      * scope the call in `CachedFrames.withCached {}`) after
+      * corpus-wide scoring should `graft.CachedFrames.releaseAll()` after
       * consuming the result.
       */
     def unigramFamiliarity(idCol: String, textCol: String,

@@ -24,33 +24,19 @@ class CachedFramesSpec extends SparkSpec {
     user.unpersist(blocking = true)
   }
 
-  test("withCached scopes a composition: registered during the block, gone after") {
-    CachedFrames.releaseAll()
-    val docs = Seq((1L, "a b a b"), (2L, "a b a c")).toDF("doc_id", "text")
-    val out = CachedFrames.withCached {
-      // bigramFamiliarity persists its exploded bigram frame internally
-      val r = ops.TextStats.bigramFamiliarity(docs, "doc_id", "text").collect()
-      assert(CachedFrames.registeredCount > 0,
-        "internal persist must be registered inside the scope")
-      r
-    }
-    assert(out.nonEmpty)
-    assert(CachedFrames.registeredCount == 0,
-      "scope exit must release what the block registered")
-  }
-
-  test("withCached releases only the block's frames, not earlier registrations") {
+  test("release frees only the named frames, not other registrations") {
     CachedFrames.releaseAll()
     val edges = Seq((1L, 2L), (2L, 3L)).toDF("s", "d")
     ops.GraphOps.pageRank(edges, "s", "d", iters = 1).count()
     val outer = CachedFrames.registeredCount
     assert(outer > 0)
-    CachedFrames.withCached {
-      ops.GraphOps.pageRank(edges, "s", "d", iters = 1).count()
-      assert(CachedFrames.registeredCount > outer)
-    }
+    val mine = CachedFrames.cached(Seq((1L, 2L)).toDF("a", "b"))
+    mine.count()
+    assert(CachedFrames.registeredCount == outer + 1)
+    CachedFrames.release(mine)
+    assert(!mine.storageLevel.useMemory, "a released frame must be unpersisted")
     assert(CachedFrames.registeredCount == outer,
-      "outer registrations must survive an inner scope")
+      "other registrations must survive a release")
     CachedFrames.releaseAll()
   }
 

@@ -52,8 +52,7 @@ class PipelineSpec extends SparkSpec {
     assert(patientCsv.count() == 2)
     assert(patientCsv.columns.contains("resource_birthDate"))
 
-    // G6 accounting (observe metrics completed by the writes above):
-    // patient: 3 raw rows (pat-1, its duplicate, pat-2), none with null
+    // G6 accounting: patient: 3 raw rows (pat-1, its duplicate, pat-2), none with null
     // resource.id, dedup removes 1; pat-1 carries multipleBirthInteger=2
     // with no boolean (→ 1 updated boolean), the other 2 rows get the
     // integer filled with 0
@@ -117,10 +116,32 @@ class PipelineSpec extends SparkSpec {
     val r = Pipeline.run(spark, fixtureDir().toString)
     try {
       r.accounting.foreach { case (name, acc) =>
-        (Seq(acc.before, acc.after) ++ acc.postDrop).foreach(o =>
-          assert(o.future.isCompleted, s"$name: observation ${o.name} still pending"))
+        assert(acc.summary.contains("rows_before") && acc.summary.contains("rows_after"),
+          s"$name: ${acc.summary}")
       }
+      assert(!r.accounting("careplan").summary.contains("rows_removed_null_keys"))
       assert(r.accounting("patient").summary("rows_before") == 3L)
+    } finally CachedFrames.release(r.tables.values.toSeq: _*)
+  }
+
+  test("run: every table's accounting matches the corpus generator's arithmetic") {
+    val n = 50
+    val in = graft.TempRoots.create("pipe_corpus")
+    FhirCorpus.generate(in, n)
+    val r = Pipeline.run(spark, in.toString)
+    try {
+      val entries = FhirCorpus.expectedEntryCounts(n).map { case (t, c) => t.toLowerCase -> c }.toMap
+      val rows = FhirCorpus.expectedRows(n).map(e => e.table -> e.n_rows).toMap
+      assert(r.accounting.keySet == rows.keySet)
+      r.accounting.foreach { case (name, acc) =>
+        val s = acc.summary
+        assert(s("rows_before") == entries(name), s"$name: $s")
+        assert(s("rows_after") == rows(name), s"$name: $s")
+        assert(s("rows_removed") == s("rows_before") - s("rows_after"), s"$name: $s")
+        if (name != "careplan")
+          assert(s("rows_removed_null_keys") + s("rows_removed_dedup") == s("rows_removed"),
+            s"$name: $s")
+      }
     } finally CachedFrames.release(r.tables.values.toSeq: _*)
   }
 
