@@ -192,12 +192,12 @@ object SparkEntry {
   /** Fanned-out variant of [[t]] — see [[fanOutKeys]] for when a gate
     * should use it (first stage dominated by per-row kernel work).
     */
-  private def tf(spark: SparkSession, dir: String, name: String): DataFrame =
+  private[graft] def tf(spark: SparkSession, dir: String, name: String): DataFrame =
     fanOutTiny(spark, t(spark, dir, name), s"$dir/$name.parquet",
       fanOutKeys.getOrElse(name,
         sys.error(s"tf($name): add a unique-key entry to fanOutKeys")))
 
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
+  private[graft] def t(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") events(spark, dir)
     else spark.read.parquet(s"$dir/$name.parquet")
 
@@ -473,30 +473,19 @@ object SparkEntry {
       |    substring(text, 1, 20) || '!' || chr(9) || '"quoted" tail?' || chr(10) ||
       |    substring(text, 1, 40) || '.' || chr(10)""".stripMargin
 
-  /** Where Verify materializes (doc_id, simhash) of the sf documents table.
-    * The dedup_simhash oracle re-verifies the Hamming-pair stage from this
-    * parquet with bit_count(xor()) in DuckDB — sound because the pigeonhole
-    * chunk candidates are a SUPERSET of every Hamming≤3 pair, so the
-    * operator's output equals the all-pairs form the SQL computes. The
-    * signature kernel itself stays spec-pinned (TextKernels specs).
+  /** (doc_id, simhash) of the sf documents table. The dedup_simhash
+    * oracle re-verifies the Hamming-pair stage from this parquet with
+    * bit_count(xor()) in DuckDB — sound because the pigeonhole chunk
+    * candidates are a SUPERSET of every Hamming≤3 pair, so the operator's
+    * output equals the all-pairs form the SQL computes. The signature
+    * kernel itself stays spec-pinned (TextKernels specs).
     */
-  def simhashDumpDir(dir: String): String = verifyDumpDir("simhash-sigs", dir)
+  private[graft] val SimhashDump = Dump("simhash-sigs", Seq("dedup_simhash"), simhashSignatures)
 
   /** Where the schema_merge gate writes its v1/v2 documents snapshots,
     * which its oracle SQL reads back with union_by_name. */
   def schemaMergeDumpDir(dir: String): String = verifyDumpDir("schema-merge", dir)
 
-  /** Stable (survives the Verify JVM — the DuckDB oracle runs later in
-    * another process), SF-SCOPED dump path under target/. Keyed by
-    * [[pathKey]] of the input dir for the same reason the jsonl/csv/orc
-    * scratch dirs are (r16 schema_merge fix, commit 6cd9faa; r16 ADVICE
-    * flagged the band dump): a static path lets a later Verify run at
-    * another SF overwrite the parquet an earlier run's dumped oracle SQL
-    * reads — harmless in driver order, a silent-mismatch landmine for any
-    * out-of-order re-compare. Every SF-DEPENDENT dump routes through
-    * here; SF-independent dumps (PSL rules, the FHIR fixture exports,
-    * csv_roundtrip's 2-row fixture table) stay static by design.
-    */
   /** A staged directory of REAL media files (one `media-<id>.mp4` per
     * document id, the [[graft.ops.Mp4.syntheticMp4]] bytes) so the
     * binaryFile-source gate ingests through the path a lake actually
@@ -608,22 +597,53 @@ object SparkEntry {
       root.getAbsolutePath
     })
 
-  private def verifyDumpDir(name: String, dir: String): String =
+  /** Stable (survives the Verify JVM — the DuckDB oracle runs later in
+    * another process), SF-SCOPED dump path under target/. Keyed by
+    * [[pathKey]] of the input dir for the same reason the jsonl/csv/orc
+    * scratch dirs are (r16 schema_merge fix, commit 6cd9faa; r16 ADVICE
+    * flagged the band dump): a static path lets a later Verify run at
+    * another SF overwrite the parquet an earlier run's dumped oracle SQL
+    * reads — harmless in driver order, a silent-mismatch landmine for any
+    * out-of-order re-compare. Every SF-DEPENDENT dump routes through
+    * here; SF-independent dumps (PSL rules, the FHIR fixture exports,
+    * csv_roundtrip's 2-row fixture table) stay static by design.
+    */
+  private[graft] def verifyDumpDir(name: String, dir: String): String =
     new java.io.File(s"target/verify-$name-${pathKey(dir)}").getAbsolutePath
 
-  /** Where Verify materializes the LSH band table `(band_idx, band_hash,
-    * doc_id)` of the sf documents corpus — the SAME shingle→minhash→band
-    * chain the streaming ops explode. The `stream_neardup_et` oracle
-    * replays the per-BUCKET event-time lease chain exactly from this
-    * parquet (member-day timelines → surviving gaps → alive pairs):
-    * bucket bridging — a third member renewing a bucket mid-silence,
-    * which no pairwise day-window can express — is replayed, not
-    * approximated. The band kernel itself stays spec-pinned
-    * (FunctionsSpec / DedupSpec) — the [[simhashDumpDir]] soundness
-    * pattern.
+  /** The LSH band table `(band_idx, band_hash, doc_id, d)` of the sf
+    * documents corpus — the SAME shingle→minhash→band chain the
+    * streaming ops explode. The `stream_neardup_et` oracle replays the
+    * per-BUCKET event-time lease chain exactly from this parquet
+    * (member-day timelines → surviving gaps → alive pairs): bucket
+    * bridging — a third member renewing a bucket mid-silence, which no
+    * pairwise day-window can express — is replayed, not approximated.
+    * The band kernel itself stays spec-pinned (FunctionsSpec /
+    * DedupSpec) — the [[SimhashDump]] soundness pattern.
     */
-  def neardupBandsDumpDir(dir: String): String =
-    verifyDumpDir("neardup-bands", dir)
+  private[graft] val NeardupBandsDump = Dump("neardup-bands", Seq("stream_neardup_et"),
+    neardupBandFrame, check = requireBandDayCoverage)
+
+  /** Guard the stream_neardup_et oracle's day-timeline assumption (r17
+    * ADVICE): the oracle derives the replay-day set from the band dump,
+    * which drops band-less docs (null/too-short text → minhash-null →
+    * posexplode drop). If an entire replay day held ONLY band-less docs,
+    * the oracle's day-ordinal/watermark timeline would silently diverge
+    * from the replay the op actually sees — fail the dump loudly instead
+    * of assuming.
+    */
+  private def requireBandDayCoverage(spark: SparkSession, dir: String): Unit = {
+    val allDays = t(spark, dir, "documents")
+      .filter(col("doc_id").isNotNull)
+      .select(etDocDay(col("doc_id").cast("long")).as("d"))
+      .distinct()
+    val bandedDays = spark.read.parquet(NeardupBandsDump.dir(dir))
+      .select(col("d")).distinct()
+    val missing = allDays.except(bandedDays).collect()
+    require(missing.isEmpty,
+      "stream_neardup_et oracle day-coverage hole — replay days holding " +
+        s"only band-less docs: ${missing.mkString(", ")}")
+  }
 
   /** The banded LSH explode of the documents corpus, exactly as the
     * neardup ops compute it (graft.streaming.Streams.neardupCandidates*
@@ -647,15 +667,20 @@ object SparkEntry {
         col("doc_id").cast("long").as("doc_id"),
         etDocDay(col("doc_id").cast("long")).as("d"))
 
-  /** Where Verify materializes the CORPUS-LEARNED BPE merge table
-    * `(rank, l, r)` — the `bpe_learned_count` oracle replays the greedy
-    * merge application from this parquet (the same recursive-CTE loop
-    * as `bpe_merge_count`, table-driven instead of literal), so the
+  /** The CORPUS-LEARNED BPE merge table `(rank, l, r)` — the
+    * `bpe_learned_count` oracle replays the greedy merge application
+    * from this parquet (the same recursive-CTE loop as
+    * `bpe_merge_count`, table-driven instead of literal), so the
     * APPLICATION of a trained vocabulary is fully SQL-verified; the
-    * trainer itself stays spec-pinned (TextStatsSpec's Sennrich
-    * worked example) — the [[simhashDumpDir]] soundness pattern.
+    * trainer itself stays spec-pinned (TextStatsSpec's Sennrich worked
+    * example) — the [[SimhashDump]] soundness pattern.
     */
-  def bpeMergesDumpDir(dir: String): String = verifyDumpDir("bpe-merges", dir)
+  private[graft] val BpeMergesDump = Dump("bpe-merges", Seq("bpe_learned_count"), (s, dir) => {
+    import s.implicits._
+    bpeLearnedMerges(s, dir).zipWithIndex
+      .map { case ((l, r), rank) => (rank, l, r) }
+      .toDF("rank", "l", "r")
+  })
 
   /** The merge table the `bpe_learned_count` gate trains and applies:
     * 12 merges learned on the 1-in-4 corpus slice (the
@@ -664,88 +689,80 @@ object SparkEntry {
     * lexicographically, so Verify's dump and the gate's in-query
     * training always agree.
     *
-    * Memoized per (JVM, dir) with the SAME stamp-replacement contract
-    * as [[trainedMemo]] (round 13): training is 12 SEQUENTIAL merge
-    * rounds, each a corpus aggregation + 1-row argmax — a per-gate
-    * cost that belongs to vocabulary BUILD, not token counting. Bench
-    * pre-trains it in warmup exactly like the IVF/PQ codebooks, so
-    * the timed gate measures application only.
+    * Memoized per (JVM, dir) ([[memoTrained]]): training is 12
+    * SEQUENTIAL merge rounds, each a corpus aggregation + 1-row argmax —
+    * a per-gate cost that belongs to vocabulary BUILD, not token
+    * counting. Bench pre-trains it in warmup exactly like the IVF/PQ
+    * codebooks, so the timed gate measures application only.
     */
-  def bpeLearnedMerges(s: SparkSession, dir: String): Seq[(String, String)] = {
-    val stamp = inputStamp(dir, "documents")
-    val (_, holder) = bpeMergesMemo.compute(s"$dir|bpe|m=12,f=10", (_, cur) =>
-      if (cur != null && cur._1 == stamp) cur
-      else {
-        lazy val trained: Seq[(String, String)] = TextStats.bpeTrainMerges(
-          t(s, dir, "documents")
-            .filter(col("doc_id").isNotNull && col("text").isNotNull &&
-              pmod(col("doc_id"), lit(4)) === 0),
-          "text", numMerges = 12, minPairCount = 10L)
-        (stamp, () => trained)
-      })
-    holder()
-  }
-
-  // (merge-pair strings, not Rows — the one trained artifact that isn't
-  // frame-shaped; same lazy-holder-outside-the-bin-lock discipline)
-  private val bpeMergesMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, () => Seq[(String, String)])]()
-
-  /** Where Verify materializes the trained PQ codebooks
-    * `(subspace, centroid_id, cv)` — the `ann_pq`/`ann_pq_recall`
-    * oracles replay encode + ADC + re-rank from this parquet (the
-    * trainer is the SAME exact-Lloyd machinery the ann_ivf oracle
-    * replays bit-exactly, so training stays verified there).
-    */
-  def pqDumpDir(dir: String): String = verifyDumpDir("pq-codebooks", dir)
+  def bpeLearnedMerges(s: SparkSession, dir: String): Seq[(String, String)] =
+    memoTrained(s"$dir|bpe|m=12,f=10", inputStamp(dir, "documents")) {
+      TextStats.bpeTrainMerges(
+        t(s, dir, "documents")
+          .filter(col("doc_id").isNotNull && col("text").isNotNull &&
+            pmod(col("doc_id"), lit(4)) === 0),
+        "text", numMerges = 12, minPairCount = 10L)
+    }
 
   /** Process-lifetime memo of TRAINED, deterministic, KB-scale model
-    * artifacts (Lloyd/PQ codebooks) keyed by (input dir | config). The
-    * trainers are deterministic by contract (seeded-by-id init, exact
-    * grid-int64 means — [[Similarity.ivfCodebook]]), so for a fixed
-    * parquet input the trained rows are a pure value: train once per
-    * JVM, replay everywhere. This is the training/inference split every
-    * production ANN stack has — the index is built once and SERVED many
-    * times — expressed at the registry layer: ann_ivf, ann_ivf_recall,
-    * embed_kmeans and semdedup all index the same embeddings corpus
-    * with the same (k=16, iters=2) config, and ann_pq/ann_pq_recall
-    * share one PQ training. Only the collected codebook rows (K×dim
-    * doubles, KB) are held. Each entry carries an [[inputStamp]]
-    * (per-part-file name:mtime:size of the table's parquet) and is
+    * artifacts (Lloyd/PQ codebooks, the learned BPE merges, the FHIR
+    * corpus's narrow projections) keyed by (input | artifact | config).
+    * The trainers are deterministic by contract (seeded-by-id init,
+    * exact grid-int64 means — [[Similarity.ivfCodebook]]), so for a
+    * fixed input the trained value is pure: train once per JVM, replay
+    * everywhere. This is the training/inference split every production
+    * ANN stack has — the index is built once and SERVED many times —
+    * expressed at the registry layer ([[graft.ops.SimilarityGates]]:
+    * ann_ivf, ann_ivf_recall, embed_kmeans and semdedup share one IVF
+    * training, ann_pq/ann_pq_recall one PQ training). Only the collected
+    * value (KB) is held. Each entry carries a stamp ([[inputStamp]]:
+    * per-part-file name:mtime:size of the table's parquet) and is
     * REPLACED on stamp mismatch, so an in-place rewrite of the input
     * re-trains instead of serving a stale codebook — and repeated
-    * rewrites can't accumulate superseded holders (one entry per
-    * dir|op|config, not per stamp); [[clearTrainedMemo]] remains for
-    * paths the stamp can't see (non-local filesystems).
+    * rewrites can't accumulate superseded holders (one entry per key,
+    * not per stamp).
     */
-  // the value is (stamp, LAZY holder), not the trained rows: compute()
+  // the value is (stamp, LAZY holder), not the trained value: compute()
   // only installs/replaces the thunk (cheap, never recursive), and the
   // Spark training job runs OUTSIDE the map's bin lock on the holder's
   // own lazy-val monitor — concurrent callers of the SAME key still
   // train once, but bin-colliding keys never block each other and a
   // nested memoTrained call can't violate the CHM recursive-update
-  // contract. The input stamp lives in the VALUE (keyed replacement on
-  // mismatch), not the key: a session that repeatedly rewrites its
-  // input parquet replaces the one entry instead of accumulating a
-  // stale holder (with its collected codebook rows) per rewrite
-  private val trainedMemo = new java.util.concurrent.ConcurrentHashMap[
-    String,
-    (String, () => (org.apache.spark.sql.types.StructType, Array[Row]))]()
+  // contract. One key always holds one value type.
+  private val trainedMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, (String, () => Any)]()
 
-  /** Drop every memoized trained artifact (for sessions whose input
-    * files mutate in place).
-    */
-  def clearTrainedMemo(): Unit = { trainedMemo.clear(); bpeMergesMemo.clear() }
+  private[graft] def memoTrained[V](key: String, stamp: String)(train: => V): V = {
+    val (_, holder) = trainedMemo.compute(key, (_, cur) =>
+      if (cur != null && cur._1 == stamp) cur
+      else {
+        // new key OR superseded stamp: (re)install a fresh lazy holder —
+        // the stale entry (and its value) is dropped here
+        lazy val trained: V = train
+        (stamp, () => trained)
+      })
+    holder().asInstanceOf[V]
+  }
+
+  /** [[memoTrained]] for a frame: holds its collected rows. */
+  private[graft] def memoFrame(s: SparkSession, key: String, stamp: String)
+      (train: => DataFrame): DataFrame = {
+    val (schema, rows) = memoTrained(key, stamp) {
+      val df = train
+      (df.schema, df.collect())
+    }
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
 
   /** Snapshot stamp of a table's parquet files under `dir` (sorted
-    * name:mtime:size per part file) — folded into [[trainedMemo]] keys
-    * so an in-place rewrite of the input parquet invalidates the memo
-    * instead of silently serving a codebook trained on the old bytes.
-    * Local-FS stat only (the bench/verify corpora); non-statable paths
-    * (object stores in a real deployment) stamp as "unstat", falling
-    * back to the immutable-input contract documented above.
+    * name:mtime:size per part file) for [[memoTrained]], so an in-place
+    * rewrite of the input parquet invalidates the memo instead of
+    * silently serving a codebook trained on the old bytes. Local-FS stat
+    * only (the bench/verify corpora); non-statable paths (object stores
+    * in a real deployment) stamp as "unstat", falling back to the
+    * immutable-input contract documented above.
     */
-  private def inputStamp(dir: String, table: String): String =
+  private[graft] def inputStamp(dir: String, table: String): String =
     try {
       val f = new java.io.File(dir, s"$table.parquet")
       def stamp(x: java.io.File): String =
@@ -754,71 +771,6 @@ object SparkEntry {
         else s"${x.getName}:${x.lastModified}:${x.length}"
       if (f.exists) stamp(f) else "absent"
     } catch { case _: Throwable => "unstat" }
-
-  private def memoTrained(s: SparkSession, key: String, stamp: String)
-      (train: => DataFrame): DataFrame = {
-    val (_, holder) = trainedMemo.compute(key, (_, cur) =>
-      if (cur != null && cur._1 == stamp) cur
-      else {
-        // new key OR superseded stamp: (re)install a fresh lazy holder —
-        // the stale entry (and its collected rows) is dropped here
-        lazy val trained: (org.apache.spark.sql.types.StructType, Array[Row]) = {
-          val df = train
-          (df.schema, df.collect())
-        }
-        (stamp, () => trained)
-      })
-    val (schema, rows) = holder()
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-  }
-
-  /** The shared embeddings-corpus IVF/k-means codebook (k=16, 2 Lloyd
-    * rounds) — trained once per JVM, injected into every gate that
-    * indexes the corpus at this config.
-    */
-  def ivfCentroidsShared(s: SparkSession, dir: String): DataFrame =
-    memoTrained(s, s"$dir|ivf|k=16,iters=2", inputStamp(dir, "embeddings")) {
-      Similarity.ivfCodebook(t(s, dir, "embeddings"), "vec_id", "embedding",
-        k = 16, iters = 2)
-    }
-
-  /** The PQ codebooks the ann_pq gates train: 4 subspaces × 16
-    * centroids, 2 Lloyd rounds over the embeddings corpus —
-    * deterministic, so Verify's dump and the gates' in-query training
-    * always agree. Memoized ([[trainedMemo]]): ann_pq and
-    * ann_pq_recall serve from ONE training pass.
-    */
-  def pqCodebooks(s: SparkSession, dir: String): DataFrame =
-    memoTrained(s, s"$dir|pq|dim=64,m=4,k=16,iters=2",
-        inputStamp(dir, "embeddings")) {
-      Similarity.pqTrain(t(s, dir, "embeddings"), "vec_id", "embedding",
-        dim = 64, numSubspaces = 4, numCentroids = 16, iters = 2)
-    }
-
-  /** Where Verify materializes the trained RESIDUAL PQ codebooks
-    * `(subspace, centroid_id, cv)` of the IVFADC index — the
-    * `ann_ivfpq`/`ann_ivfpq_recall` oracles replay coarse-assign →
-    * residual → encode → cell-term + LUT ADC → re-rank from this
-    * parquet plus the coarse Lloyd replay they already share with
-    * ann_ivf (training itself is the same exact-Lloyd machinery those
-    * oracles verify).
-    */
-  def ivfpqDumpDir(dir: String): String =
-    verifyDumpDir("ivfpq-codebooks", dir)
-
-  /** The IVFADC residual codebooks: PQ (4 subspaces × 16 centroids,
-    * 2 Lloyd rounds) over residuals vs the SHARED coarse codebook
-    * ([[ivfCentroidsShared]] — one coarse training serves the whole
-    * IVF family). Memoized: ann_ivfpq, ann_ivfpq_recall and Verify's
-    * dump all serve from one training pass.
-    */
-  def ivfpqCodebooks(s: SparkSession, dir: String): DataFrame =
-    memoTrained(s, s"$dir|ivfpq|dim=64,K=16,m=4,k=16,iters=2",
-        inputStamp(dir, "embeddings")) {
-      Similarity.ivfpqTrain(t(s, dir, "embeddings"), "vec_id", "embedding",
-        dim = 64, numSubspaces = 4, numCentroids = 16,
-        coarse = ivfCentroidsShared(s, dir), iters = 2)
-    }
 
   /** Memo stamp for the FHIR scale corpus: the generator's count-stamped
     * completion marker (name + mtime) — regeneration or a corpus-version
@@ -836,7 +788,7 @@ object SparkEntry {
 
   private def fhirCorpusNarrow(s: SparkSession, table: String)
       (project: DataFrame => DataFrame): DataFrame =
-    memoTrained(s, s"fhircorpus|$table-narrow", fhirCorpusStamp()) {
+    memoFrame(s, s"fhircorpus|$table-narrow", fhirCorpusStamp()) {
       project(graft.fhir.Cleaning.all(
         graft.fhir.Extractors.allTables(
           graft.fhir.BundleReader.normalizedEntries(
@@ -844,7 +796,7 @@ object SparkEntry {
     }
 
   /** The scale corpus's cleaned condition basket `(patient_id,
-    * condition_display)` — memoized per JVM ([[memoTrained]], stamped on
+    * condition_display)` — memoized per JVM ([[memoFrame]], stamped on
     * the corpus completion marker) so fhir_comorbidity / fhir_charlson
     * share ONE read→route→extract→clean parse instead of re-running the
     * JSON-parse-heavy corpus pipeline per gate and per bench repeat
@@ -877,63 +829,14 @@ object SparkEntry {
   val PslDumpDir: String =
     new java.io.File("target/verify-psl-rules").getAbsolutePath
 
-  /** Where Verify materializes (vec_id, keys) — the kernel-computed LSH
-    * bucket keys of every embedding at the ann_lsh registry config. The
-    * ann_lsh oracle replays candidate generation (bucket equi-join), exact
-    * scoring (list_cosine_similarity), and ranking in DuckDB from this
-    * parquet; only the SplitMix64 plane derivation stays spec-pinned
-    * (kernel ≡ literal-plane equivalence in SimilaritySpec).
-    */
-  def lshKeysDumpDir(dir: String): String = verifyDumpDir("lsh-keys", dir)
-
-  /** The ann_lsh gate's key frame (m=4, L=16 — keep in lock-step with the
-    * registry entry below).
-    */
-  def lshKeyFrame(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "embeddings")
-      .select(col("vec_id"),
-        graft.functions.lsh_keys(col("embedding"), 64, 4, 16).as("keys"))
-
-  /** Corpus + queries for ann_lsh_scaled: the base embeddings (as double
-    * arrays) plus 10 deterministic near-copies of each query (±5%
-    * per-component, cos ≈ 0.999) that become its exact top-10 — the
-    * neighbors a selective LSH config exists to find. Exposed so Verify can
-    * dump (vec_id, embedding, keys) for the oracle.
-    */
-  def annLshScaledData(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    def u(j: Int, d: Int): Double = // deterministic noise in [-1, 1]
-      java.lang.Math.floorMod(
-        graft.functions.TextKernels.mix64((1000L + j) * graft.functions.TextKernels.Gamma + d),
-        2001L).toDouble / 1000.0 - 1.0
-    val variants = (1 to 10).map { j =>
-      struct(lit(j.toLong).as("j"),
-        array((0 until 64).map(d => lit(1.0 + 0.05 * u(j, d))): _*).as("f"))
-    }
-    val base = t(s, dir, "embeddings")
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
-    val queries = base.filter(col("vec_id") < 20)
-    val copies = queries
-      .select(col("vec_id"), col("embedding"), explode(array(variants: _*)).as("v"))
-      .select(
-        (lit(100000L) + col("vec_id") * 100 + col("v.j")).as("vec_id"),
-        zip_with(col("embedding"), col("v.f"), (a, b) => a * b).as("embedding"))
-    (base.unionByName(copies), queries)
-  }
-
-  /** Where Verify materializes the ann_lsh_scaled corpus with its
-    * 10-plane × 32-table keys, for that gate's oracle.
-    */
-  def scaledLshDumpDir(dir: String): String = verifyDumpDir("lsh-scaled", dir)
-
-  /** Where Verify materializes (doc_id, rolling_fp, content_fp) of the
-    * fingerprint gate's enriched corpus. The doc_fingerprint oracle replays
-    * the gate's downstream duplicate-group stage (canonical id, exact-dup
-    * count, content-bucket size) from this parquet in DuckDB; the FNV-style
+  /** (doc_id, rolling_fp, content_fp) of the fingerprint gate's
+    * enriched corpus. The doc_fingerprint oracle replays the gate's
+    * downstream duplicate-group stage (canonical id, exact-dup count,
+    * content-bucket size) from this parquet in DuckDB; the FNV-style
     * rolling/content hash kernels stay spec-pinned (TextKernels specs) —
-    * same soundness pattern as [[simhashDumpDir]].
+    * same soundness pattern as [[SimhashDump]].
     */
-  def fingerprintDumpDir(dir: String): String =
-    verifyDumpDir("fingerprints", dir)
+  private[graft] val FingerprintsDump = Dump("fingerprints", Seq("doc_fingerprint"), fingerprintFrame)
 
   /** The fingerprint frame both the dump and the doc_fingerprint gate
     * derive from. The raw synthetic corpus has no duplicate or reordered
@@ -972,15 +875,21 @@ object SparkEntry {
         TextStats.rollingFingerprint(col("text")).as("rolling_fp"),
         TextStats.contentFingerprint(col("text")).as("content_fp"))
 
-  /** Where Verify materializes (doc_id, source, comp_ratio) — the deflate
-    * compression-ratio kernel output per document of the enriched corpus.
-    * DuckDB has no deflate, so the kernel value itself cannot be
-    * recomputed SQL-side; the compression_profile oracle instead replays
-    * the gate's per-source profile AGGREGATION from this parquet, leaving
-    * only the kernel spec-pinned (TextKernelsSpec pins known ratios).
+  /** (doc_id, source, comp_ratio) — the deflate compression-ratio
+    * kernel output per document of the enriched corpus. DuckDB has no
+    * deflate, so the kernel value itself cannot be recomputed SQL-side;
+    * the compression_profile oracle instead replays the gate's
+    * per-source profile AGGREGATION from this parquet, leaving only the
+    * kernel spec-pinned (TextKernelsSpec pins known ratios).
     */
-  def compressionDumpDir(dir: String): String =
-    verifyDumpDir("comp-ratios", dir)
+  private[graft] val CompRatiosDump = Dump("comp-ratios", Seq("compression_profile"), compressionFrame)
+
+  /** Every SF-keyed frame Verify writes before the gates run, for the
+    * oracles that read it.
+    */
+  def dumps: Seq[Dump] =
+    Seq(SimhashDump, NeardupBandsDump, BpeMergesDump, FingerprintsDump, CompRatiosDump) ++
+      graft.ops.SimilarityGates.dumps
 
   /** The per-doc ratio frame both the dump and the compression_profile
     * gate derive from. Enriched with a highly-repetitive variant of every
@@ -1108,7 +1017,16 @@ object SparkEntry {
   // queries — one per implemented operator family (SURVEY.md §2, §2.11)
   // ---------------------------------------------------------------------
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** Every registry gate: the bodies below plus the [[Gate]] records. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    Gate.merge(queriesHere, gateRecords)(_.run)
+
+  /** The gate families kept as [[Gate]] records, next to their `ops/`
+    * modules.
+    */
+  private def gateRecords: Seq[Gate] = graft.ops.SimilarityGates.all
+
+  private def queriesHere: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // §2.8 G-family + TPC-H-style aggregate: decimal-exact money math.
     "q1_agg" -> ((s, dir) => {
@@ -2088,139 +2006,6 @@ object SparkEntry {
       Dedup.simhashNearDups(t(s, dir, "documents"), "text", "doc_id", maxHamming = 3)
         .orderBy("id_a", "id_b")),
 
-    // §2.11 — embedding-cosine near-dup pairs.
-    "embed_neardup" -> ((s, dir) =>
-      Similarity.cosineNearDupPairs(t(s, dir, "embeddings"), "vec_id", "embedding", 0.9)
-        .orderBy("id_a", "id_b")),
-
-    // §2.11 — semantic cluster dedup (SemDeDup-style): connected
-    // components over the cosine near-dup graph. 0.45 sits just under the
-    // bench corpus's top pair similarities so real multi-member clusters
-    // form; oracle = recursive-CTE reachability.
-    "embed_clusters" -> ((s, dir) =>
-      Similarity.cosineClusters(t(s, dir, "embeddings"), "vec_id", "embedding", 0.45)
-        .select(col("id").as("vec_id"), col("cluster"))
-        .orderBy("vec_id")),
-
-    // §2.11 — embedding centroid drift between snapshot slices (label
-    // parity split): per-dimension fixed-point-exact means + shift — the
-    // embedding-space analog of drift_psi. Quantized int64 sums (the
-    // Lloyd-codebook trade) keep engine and oracle bit-identical.
-    "embed_drift" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.embeddingDrift(
-        emb.filter(pmod(col("label"), lit(2)) === 0),
-        emb.filter(pmod(col("label"), lit(2)) === 1),
-        "embedding")
-    }),
-
-    // §2.11 — source semantic-redundancy matrix: pairwise cosine
-    // between per-group embedding centroids on EXACT integer quantized
-    // sums (scale cancels in the cosine, so no float folds across
-    // dims); groups here are the label buckets standing in for feeds.
-    "source_centroid_sim" -> ((s, dir) =>
-      Similarity.groupCentroidSim(
-        t(s, dir, "embeddings")
-          .select(pmod(col("vec_id"), lit(8L)).cast("string").as("grp"),
-            col("embedding")),
-        "grp", "embedding")
-        .orderBy("group_a", "group_b")),
-
-    // §2.11 — int8 embedding quantization (4× memory at 100 TB): scalar
-    // projections of the code carry a full oracle (scale + code sum and
-    // extremes reconstruct in SQL from the float vector exactly).
-    "embed_quantize" -> ((s, dir) => {
-      val q = graft.functions.quantize_int8(col("embedding"))
-      t(s, dir, "embeddings")
-        .select(
-          col("vec_id"),
-          round(q.getField("scale"), 9).as("scale_r"),
-          aggregate(q.getField("q"), lit(0L), (acc, x) => acc + x.cast("long")).as("q_sum"),
-          array_min(q.getField("q")).cast("long").as("q_min"),
-          array_max(q.getField("q")).cast("long").as("q_max"))
-        .orderBy("vec_id")
-    }),
-
-    // §2.11 — compressed-domain top-k quality gate: recall of int8-code
-    // search vs full-precision exact (what the 4× compression costs).
-    // The in-gate floor (SimilaritySpec's contract value) is certified by
-    // certifyRecallFloor: a recall regression errors the gate instead of
-    // shipping rows, so the driver's rows check = recall check.
-    "ann_quantized_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.certifyRecallFloor(
-        Similarity.quantizedRecall(
-          emb, "vec_id", "embedding",
-          emb.filter(col("vec_id") < 20), "vec_id", "embedding", k = 10),
-        floor = 0.8)
-        .orderBy("query_id")
-    }),
-
-    // §2.11 — Johnson–Lindenstrauss random-sign projection 64 → 16
-    // (long-form components; the md5-derived sign matrix lets the oracle
-    // rebuild the whole projection in pure SQL).
-    "dim_reduce" -> ((s, dir) =>
-      Similarity.reduceDims(t(s, dir, "embeddings"), "embedding",
-          dim = 64, outDim = 16)
-        .select(col("vec_id"), posexplode(col("reduced")).as(Seq("j", "r")))
-        .select(col("vec_id"), col("j").cast("long").as("j"),
-          round(col("r"), 6).as("r"))
-        .orderBy("vec_id", "j")),
-
-    // §2.11 — recall of reduced-space (16-dim) brute-force top-10 vs the
-    // full 64-dim ranking, floor-certified in-gate; full pure-SQL oracle
-    // (projection + both rankings + recall all replayed).
-    "ann_rp_recall" -> ((s, dir) => {
-      val emb = tf(s, dir, "embeddings")
-      Similarity.certifyRecallFloor(
-        Similarity.rpRecall(
-          emb, "vec_id", "embedding",
-          emb.filter(col("vec_id") < 20), "vec_id", "embedding",
-          dim = 64, outDim = 16, k = 10),
-        floor = 0.0)
-        .orderBy("query_id")
-    }),
-
-    // §2.11 — brute-force cosine top-k (exact baseline).
-    "similarity_topk" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.bruteForceTopK(
-        emb, "vec_id", "embedding",
-        emb.filter(col("vec_id") < 5), "vec_id", "embedding", k = 10)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-        .orderBy("query_id", "rank")
-    }),
-
-    // §2.11 — hard-negative mining (contrastive-training curation): per
-    // query the top-10 most-similar vectors BELOW the 0.3 near-positive
-    // cut — informative negatives with duplicates/unlabeled positives
-    // banded out. Same broadcast/rank plan as similarity_topk.
-    "hard_negatives" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.hardNegatives(
-        emb, "vec_id", "embedding",
-        emb.filter(col("vec_id") < 5), "vec_id", "embedding",
-        k = 10, dupCut = 0.3)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-        .orderBy("query_id", "rank")
-    }),
-
-    // §2.11 — LSH-bucketed ANN (the 100 TB scale SHAPE; approximate).
-    // 4-bit × 16-table config suits this near-random synthetic corpus
-    // (neighbors at ~75°) but is near-brute-force on candidates — a random
-    // pair collides in ≥1 of 16 tables with prob ≈ 0.64, so this exact
-    // config is bench-corpus-only; at scale raise numPlanes (8–16) and
-    // compensate recall with more tables (see lshTopK scaladoc).
-    "ann_lsh" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.lshTopK(
-        emb, "vec_id", "embedding",
-        emb.filter(col("vec_id") < 5), "vec_id", "embedding",
-        dim = 64, k = 10, numPlanes = 4, numTables = 16)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-        .orderBy("query_id", "rank")
-    }),
-
     // §2.11 — language-ID heuristic.
     "lang_id" -> ((s, dir) =>
       t(s, dir, "documents")
@@ -3092,167 +2877,6 @@ object SparkEntry {
           .orderBy("table")
       }),
 
-    // §2.11 — ANN quality gate: deterministic recall of the LSH path vs
-    // the exact brute-force ground truth (both sides pinned elsewhere:
-    // similarity_topk carries the DuckDB oracle for the exact side).
-    "ann_recall" -> ((s, dir) => {
-      val emb = tf(s, dir, "embeddings")
-      Similarity.certifyRecallFloor(
-        Similarity.annRecall(
-          emb, "vec_id", "embedding",
-          emb.filter(col("vec_id") < 20), "vec_id", "embedding",
-          dim = 64, k = 10, numPlanes = 4, numTables = 16),
-        floor = 0.5)
-        .orderBy("query_id")
-    }),
-
-    // §2.11 — the 100 TB-SHAPED LSH config, gate-backed (round-3 verdict):
-    // 10 planes × 32 tables — a random pair collides in ≥1 table with
-    // prob 1−(1−2⁻¹⁰)³² ≈ 3%, so candidates are genuinely selective
-    // (vs ~64% for the 4×16 bench config above). The synthetic corpus has
-    // NO close neighbors (exact top-k sits at ~75°, per-plane agreement
-    // ~0.58, so any selective config recalls ≤ ~0.15 of it — measured
-    // 0.15, theory 1−(1−0.58¹⁰)³² ≈ 0.13; that is LSH physics, not a
-    // bug). So this gate evaluates what LSH is FOR: each query gets 10
-    // deterministic planted near-copies (±5% per-component, cos ≈ 0.999)
-    // that become its exact top-10, and the in-gate floor certifies the
-    // selective config recovers ≥ 0.8 of them.
-    "ann_lsh_scaled" -> ((s, dir) => {
-      val (corpus, queries) = annLshScaledData(s, dir)
-      Similarity.certifyRecallFloor(
-        Similarity.annRecall(
-          corpus, "vec_id", "embedding",
-          queries, "vec_id", "embedding",
-          dim = 64, k = 10, numPlanes = 10, numTables = 32),
-        floor = 0.8)
-        .orderBy("query_id")
-    }),
-
-    // §2.11 — IVF ANN (the bucketed alternative to LSH: nearest-centroid
-    // inverted file, nProbe buckets exact-scored per query). Deterministic
-    // seeded-by-id centroids; no oracle (approximate) — quantitative gate
-    // below.
-    "ann_ivf" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.ivfTopK(
-        emb, "vec_id", "embedding",
-        emb.filter(col("vec_id") < 5), "vec_id", "embedding",
-        k = 10, numCentroids = 16, nProbe = 6,
-        centroids = Some(ivfCentroidsShared(s, dir)))
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-        .orderBy("query_id", "rank")
-    }),
-
-    // §2.11 — IVF quality gate: deterministic recall vs the exact side.
-    "ann_ivf_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.certifyRecallFloor(
-        Similarity.ivfRecall(
-          emb, "vec_id", "embedding",
-          emb.filter(col("vec_id") < 20), "vec_id", "embedding",
-          k = 10, numCentroids = 16, nProbe = 6,
-          centroids = Some(ivfCentroidsShared(s, dir))),
-        // Lloyd-trained codebook (2 rounds): measured mean recall ≈ 0.95
-        // at sf0.01 — the raw seeded codebook needed a 0.3 floor
-        floor = 0.7)
-        .orderBy("query_id")
-    }),
-
-    // §2.11 — PQ ANN (Jégou et al.: per-subspace codebooks compress 64
-    // floats to 4 codes; ADC scores corpus CODES against a per-query
-    // lookup table in exact grid-int64 arithmetic; the top-candK
-    // candidates get an exact cosine re-rank). Codebooks come from the
-    // same exact-Lloyd trainer the IVF oracle already replays; the
-    // oracle here replays encode + LUT + ADC + re-rank from Verify's
-    // codebook dump.
-    "ann_pq" -> ((s, dir) => {
-      val emb = tf(s, dir, "embeddings")
-      Similarity.pqTopK(
-        emb, "vec_id", "embedding",
-        emb.filter(col("vec_id") < 5), "vec_id", "embedding",
-        dim = 64, k = 10, numSubspaces = 4, numCentroids = 16, candK = 50,
-        codebooks = Some(pqCodebooks(s, dir)))
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-        .orderBy("query_id", "rank")
-    }),
-
-    // §2.11 — PQ quality gate: deterministic recall vs the exact side
-    // (what 64x compression + ADC candidate generation costs after the
-    // exact re-rank).
-    "ann_pq_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.certifyRecallFloor(
-        Similarity.pqRecall(
-          emb, "vec_id", "embedding",
-          emb.filter(col("vec_id") < 20), "vec_id", "embedding",
-          dim = 64, k = 10, numSubspaces = 4, numCentroids = 16, candK = 100,
-          codebooks = Some(pqCodebooks(s, dir))),
-        floor = 0.5)
-        .orderBy("query_id")
-    }),
-
-    // §2.11 — IVF-PQ residual index (IVFADC, Jégou et al. TPAMI'11 /
-    // FAISS IVFx,PQy): coarse cells bound the scan to nProbe inverted
-    // lists; candidates rank by grid-exact ADC over residual PQ codes
-    // (cell term + per-subspace LUT); exact re-rank emits top-k. Coarse
-    // codebook shared with the whole IVF family; residual codebooks
-    // from one memoized training pass. The oracle replays assign →
-    // residual → encode → ADC → re-rank from the Lloyd CTEs + Verify's
-    // residual-codebook dump.
-    "ann_ivfpq" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.ivfpqTopK(
-        emb, "vec_id", "embedding",
-        emb.filter(col("vec_id") < 5), "vec_id", "embedding",
-        dim = 64, k = 10, numCentroids = 16, nProbe = 6,
-        numSubspaces = 4, pqCentroids = 16, candK = 50,
-        coarse = Some(ivfCentroidsShared(s, dir)),
-        residualCodebooks = Some(ivfpqCodebooks(s, dir)))
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-        .orderBy("query_id", "rank")
-    }),
-
-    // §2.11 — IVFADC quality gate: deterministic recall vs the exact
-    // side, certified against a floor (a recall regression errors the
-    // gate instead of shipping silently degraded candidates).
-    "ann_ivfpq_recall" -> ((s, dir) => {
-      val emb = t(s, dir, "embeddings")
-      Similarity.certifyRecallFloor(
-        Similarity.ivfpqRecall(
-          emb, "vec_id", "embedding",
-          emb.filter(col("vec_id") < 20), "vec_id", "embedding",
-          dim = 64, k = 10, numCentroids = 16, nProbe = 6,
-          numSubspaces = 4, pqCentroids = 16, candK = 100,
-          coarse = Some(ivfCentroidsShared(s, dir)),
-          residualCodebooks = Some(ivfpqCodebooks(s, dir))),
-        floor = 0.6)
-        .orderBy("query_id")
-    }),
-
-    // §2.11 — k-means topic clustering: per-vector cluster assignment +
-    // centroid cosine (the input to domain discovery, cluster-balanced
-    // sampling, SemDeDup pruning). Same seeded init + exact-arithmetic
-    // Lloyd rounds as the IVF build, so the oracle replays training
-    // bit-exactly through the shared ivfLloydCtes fragment.
-    "embed_kmeans" -> ((s, dir) =>
-      Similarity.kmeansClusters(
-        t(s, dir, "embeddings"), "vec_id", "embedding", k = 16, iters = 2,
-        centroids = Some(ivfCentroidsShared(s, dir)))
-        .orderBy("vec_id")),
-
-    // SemDeDup proper (Abbas et al. 2023): k-means partition → pairwise
-    // cosine ONLY within a cluster → keep the vector farther from its
-    // centroid. The Lloyd trainer is the same exact-int64 one embed_kmeans
-    // replays, so the oracle re-derives the whole pipeline (codebook →
-    // assignment → within-cell prune) bit-exactly. Contrast embed_clusters
-    // (exact all-pairs CC): this is the ~linear published curation shape.
-    "semdedup" -> ((s, dir) =>
-      Similarity.semDedup(
-        t(s, dir, "embeddings"), "vec_id", "embedding",
-        threshold = 0.35, k = 16, iters = 2,
-        centroids = Some(ivfCentroidsShared(s, dir)))
-        .orderBy("vec_id")),
-
     // §2.11 — fuzzy (edit-distance ≤ 2) record-linkage join: 24-char
     // name keys from each doc, typo'd copies (two deletions) unioned
     // under offset ids. PassJoin segment blocking is COMPLETE for
@@ -3966,7 +3590,7 @@ object SparkEntry {
     // in between) while pairs ≤ 3 days apart emit. Exact-Jaccard verify
     // over the streamed candidates makes the final answer the ≥0.8 pair
     // set FILTERED by bucket-lease survival — which the oracle replays
-    // EXACTLY per bucket from the Verify band dump (neardupBandsDumpDir):
+    // EXACTLY per bucket from the Verify band dump (NeardupBandsDump):
     // member-day timelines under the same wm/lease arithmetic as the
     // other _et oracles, INCLUDING bucket bridging — a third member
     // renewing a shared bucket mid-silence keeps a pair alive across a
@@ -5894,226 +5518,6 @@ object SparkEntry {
        |    END, 4)""".stripMargin
   }
 
-  /** Recall-gate oracle builder: exact top-10 per query (vec_id < 20) over
-    * `eSrc`, an approx side supplied as CTEs ending in
-    * `approx(query_id, neighbor_id)`, the per-query recall join, and the
-    * certifyRecallFloor columns (mean over the UNPARTITIONED window = whole
-    * set, matching Spark's frameless partitionBy()). `pass` mirrors the
-    * engine's value when the gate succeeded (on violation the engine errors
-    * and there is nothing to compare).
-    */
-  private def recallOracleSql(eSrc: String, approxCtes: String, floor: Double): String =
-    s"""WITH e AS ($eSrc),
-       |exact AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT q.qid AS query_id, e.vec_id AS neighbor_id,
-       |      row_number() OVER (PARTITION BY q.qid
-       |        ORDER BY round(list_cosine_similarity(q.qv, e.v), 6) DESC, e.vec_id) AS rn
-       |    FROM e CROSS JOIN (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 20) q
-       |    WHERE e.vec_id <> q.qid) WHERE rn <= 10),
-       |$approxCtes,
-       |hits AS (
-       |  SELECT x.query_id, count(*) AS nh
-       |  FROM exact x JOIN approx a USING (query_id, neighbor_id) GROUP BY 1),
-       |base AS (SELECT query_id, count(*) AS ne FROM exact GROUP BY 1),
-       |rec AS (
-       |  SELECT b.query_id, CAST(b.ne AS BIGINT) AS n_exact,
-       |    CAST(coalesce(h.nh, 0) AS BIGINT) AS n_hit,
-       |    round(coalesce(h.nh, 0) * 1.0 / b.ne, 4) AS recall
-       |  FROM base b LEFT JOIN hits h ON h.query_id = b.query_id)
-       |SELECT query_id, n_exact, n_hit, recall,
-       |  round(avg(recall) OVER (), 4) AS mean_recall,
-       |  CAST($floor AS DOUBLE) AS floor,
-       |  round(avg(recall) OVER (), 4) >= $floor AS pass
-       |FROM rec ORDER BY query_id""".stripMargin
-
-  /** Approx-side CTEs replaying the PQ pipeline from Verify's codebook
-    * dump: encode every vector per subspace (max rounded cosine,
-    * centroid-id tiebreak — the shared assignment convention), build
-    * the per-query LUT of grid-floored partial dot products, ADC-score
-    * codes (exact int64 sums — order-independent), cut to `candK`
-    * candidates, exact-cosine re-rank to top-10. Ends in
-    * `approx(query_id, neighbor_id, cosine_sim, rank)`.
-    */
-  private def pqApproxCtes(dumpDir: String, nQueries: Int, candK: Int): String =
-    s"""cb AS (SELECT subspace, centroid_id, cv
-       |  FROM read_parquet('$dumpDir/*.parquet')),
-       |pieces AS (
-       |  SELECT vec_id, ss.s AS subspace,
-       |    v[ss.s * 16 + 1 : ss.s * 16 + 16] AS sv
-       |  FROM e, unnest(generate_series(0, 3)) AS ss(s)),
-       |enc AS (
-       |  SELECT vec_id, subspace, cid AS code FROM (
-       |    SELECT p.vec_id, p.subspace, c.centroid_id AS cid,
-       |      row_number() OVER (PARTITION BY p.vec_id, p.subspace
-       |        ORDER BY round(list_cosine_similarity(p.sv, c.cv), 6) DESC,
-       |          c.centroid_id) AS rn
-       |    FROM pieces p JOIN cb c ON c.subspace = p.subspace) WHERE rn = 1),
-       |lut AS (
-       |  SELECT p.vec_id AS qid, p.subspace, c.centroid_id AS code,
-       |    CAST(floor(list_inner_product(p.sv, c.cv) * 1048576.0) AS BIGINT) AS part
-       |  FROM pieces p JOIN cb c ON c.subspace = p.subspace
-       |  WHERE p.vec_id < $nQueries),
-       |adc AS (
-       |  SELECT l.qid, en.vec_id AS nid, sum(l.part) AS score
-       |  FROM enc en JOIN lut l ON l.subspace = en.subspace AND l.code = en.code
-       |  WHERE en.vec_id <> l.qid GROUP BY 1, 2),
-       |cand AS (
-       |  SELECT qid, nid FROM (
-       |    SELECT qid, nid, row_number() OVER (PARTITION BY qid
-       |      ORDER BY score DESC, nid) AS rn FROM adc) WHERE rn <= $candK),
-       |approx AS (
-       |  SELECT query_id, neighbor_id, cosine_sim, CAST(rn AS BIGINT) AS rank
-       |  FROM (
-       |    SELECT c.qid AS query_id, c.nid AS neighbor_id,
-       |      round(list_cosine_similarity(eq.v, en.v), 6) AS cosine_sim,
-       |      row_number() OVER (PARTITION BY c.qid
-       |        ORDER BY round(list_cosine_similarity(eq.v, en.v), 6) DESC,
-       |          c.nid) AS rn
-       |    FROM cand c JOIN e eq ON eq.vec_id = c.qid
-       |      JOIN e en ON en.vec_id = c.nid) WHERE rn <= 10)""".stripMargin
-
-  /** Approx-side CTEs replaying the IVFADC pipeline: coarse assignment
-    * comes from the shared Lloyd replay (callers prepend
-    * [[ivfLloydCtes]], so `e`/`cents`/`assign` are in scope), residual
-    * codebooks from Verify's dump. Residuals are exact IEEE `x − c`
-    * (order-pinned by list position), encode follows the shared
-    * max-rounded-cosine / centroid-id-tiebreak convention, and the ADC
-    * score is grid-exact int64: per-(query, probed-cell) cell term
-    * `⌊dot(q,c)·2²⁰⌋` plus the per-subspace LUT partials — so candidate
-    * ranking can never drift on float summation order. Ends in
-    * `approx(query_id, neighbor_id, cosine_sim, rank)`.
-    */
-  private def ivfpqApproxCtes(dumpDir: String, nQueries: Int,
-      nProbe: Int, candK: Int): String =
-    s"""rcb AS (SELECT subspace, centroid_id, cv
-       |  FROM read_parquet('$dumpDir/*.parquet')),
-       |cex AS (SELECT cid, generate_subscripts(cv, 1) AS d, unnest(cv) AS m
-       |  FROM cents),
-       |rex AS (SELECT a.vec_id, a.cid,
-       |    generate_subscripts(e.v, 1) AS d, unnest(e.v) AS x
-       |  FROM assign a JOIN e ON e.vec_id = a.vec_id),
-       |resid AS (
-       |  SELECT r.vec_id, r.cid, list(r.x - c.m ORDER BY r.d) AS rv
-       |  FROM rex r JOIN cex c ON c.cid = r.cid AND c.d = r.d
-       |  GROUP BY r.vec_id, r.cid),
-       |rpieces AS (
-       |  SELECT vec_id, cid, ss.s AS subspace,
-       |    rv[ss.s * 16 + 1 : ss.s * 16 + 16] AS sv
-       |  FROM resid, unnest(generate_series(0, 3)) AS ss(s)),
-       |enc AS (
-       |  SELECT vec_id, cid, subspace, ccode AS code FROM (
-       |    SELECT p.vec_id, p.cid, p.subspace, c.centroid_id AS ccode,
-       |      row_number() OVER (PARTITION BY p.vec_id, p.subspace
-       |        ORDER BY round(list_cosine_similarity(p.sv, c.cv), 6) DESC,
-       |          c.centroid_id) AS rn
-       |    FROM rpieces p JOIN rcb c ON c.subspace = p.subspace) WHERE rn = 1),
-       |qp AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < $nQueries),
-       |probes AS (
-       |  SELECT qid, cid, cellpart FROM (
-       |    SELECT q.qid, c.cid,
-       |      CAST(floor(list_inner_product(q.qv, c.cv) * 1048576.0) AS BIGINT)
-       |        AS cellpart,
-       |      row_number() OVER (PARTITION BY q.qid
-       |        ORDER BY round(list_cosine_similarity(q.qv, c.cv), 6) DESC,
-       |          c.cid) AS rn
-       |    FROM qp q CROSS JOIN cents c) WHERE rn <= $nProbe),
-       |qpieces AS (
-       |  SELECT qid, ss.s AS subspace, qv[ss.s * 16 + 1 : ss.s * 16 + 16] AS sv
-       |  FROM qp, unnest(generate_series(0, 3)) AS ss(s)),
-       |lut AS (
-       |  SELECT p.qid, p.subspace, c.centroid_id AS code,
-       |    CAST(floor(list_inner_product(p.sv, c.cv) * 1048576.0) AS BIGINT)
-       |      AS part
-       |  FROM qpieces p JOIN rcb c ON c.subspace = p.subspace),
-       |adc AS (
-       |  SELECT pr.qid, en.vec_id AS nid, pr.cellpart + sum(l.part) AS score
-       |  FROM enc en JOIN probes pr ON pr.cid = en.cid
-       |  JOIN lut l ON l.qid = pr.qid AND l.subspace = en.subspace
-       |    AND l.code = en.code
-       |  WHERE en.vec_id <> pr.qid
-       |  GROUP BY pr.qid, en.vec_id, pr.cellpart),
-       |cand AS (
-       |  SELECT qid, nid FROM (
-       |    SELECT qid, nid, row_number() OVER (PARTITION BY qid
-       |      ORDER BY score DESC, nid) AS rn FROM adc) WHERE rn <= $candK),
-       |approx AS (
-       |  SELECT query_id, neighbor_id, cosine_sim, CAST(rn AS BIGINT) AS rank
-       |  FROM (
-       |    SELECT c.qid AS query_id, c.nid AS neighbor_id,
-       |      round(list_cosine_similarity(eq.v, en.v), 6) AS cosine_sim,
-       |      row_number() OVER (PARTITION BY c.qid
-       |        ORDER BY round(list_cosine_similarity(eq.v, en.v), 6) DESC,
-       |          c.nid) AS rn
-       |    FROM cand c JOIN e eq ON eq.vec_id = c.qid
-       |      JOIN e en ON en.vec_id = c.nid) WHERE rn <= 10)""".stripMargin
-
-  /** Approx-side CTEs for an LSH recall oracle over a (vec_id, embedding,
-    * keys) dump: bucket equi-join candidates → exact-score → top-10.
-    */
-  private def lshApproxCtes(dumpDir: String): String =
-    s"""ck AS (SELECT vec_id, unnest(keys) AS key
-       |  FROM read_parquet('$dumpDir/*.parquet')),
-       |qk AS (SELECT vec_id AS qid, unnest(keys) AS key
-       |  FROM read_parquet('$dumpDir/*.parquet') WHERE vec_id < 20),
-       |cand AS (
-       |  SELECT DISTINCT qid, ck.vec_id AS nid
-       |  FROM ck JOIN qk USING (key) WHERE ck.vec_id <> qid),
-       |approx AS (
-       |  SELECT query_id, neighbor_id FROM (
-       |    SELECT qid AS query_id, nid AS neighbor_id,
-       |      row_number() OVER (PARTITION BY qid
-       |        ORDER BY round(list_cosine_similarity(eq.v, en.v), 6) DESC, nid) AS rn
-       |    FROM cand JOIN e eq ON eq.vec_id = qid JOIN e en ON en.vec_id = nid)
-       |  WHERE rn <= 10)""".stripMargin
-
-  /** The JL sign matrix (16×64) as a SQL CTE body — mirrors
-    * `Similarity.rpSign`: +0.25 when the first md5 hex nibble of
-    * "rp j i" is 0–7, else −0.25 (±1/√16 folded in).
-    */
-  private val rpSignsCte =
-    """SELECT j, i,
-      |    CASE WHEN strpos('01234567', substr(md5('rp ' || j || ' ' || i), 1, 1)) > 0
-      |         THEN 0.25 ELSE -0.25 END AS w
-      |  FROM range(16) t1(j), range(64) t2(i)""".stripMargin
-
-  private val embeddingsESrc =
-    """SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-      |  WHERE vec_id IS NOT NULL AND embedding IS NOT NULL""".stripMargin
-
-  /** Two Lloyd rounds from the seeded-by-id codebook, mirroring
-    * `Similarity.ivfTrainCentroids` (iters=2): assign → exact grid-scaled
-    * per-cluster mean (floor(x·2^20) summed as BIGINT — order-independent,
-    * so engine and oracle can never drift on float summation order) →
-    * reassign → mean. Ends at `cents`/`assign`, the names the probe/cand
-    * stages consume. Kept as one shared fragment so ann_ivf and
-    * ann_ivf_recall can't diverge.
-    */
-  private val ivfLloydCtes: String = {
-    def assign(cents: String, name: String) =
-      s"""$name AS (
-         |  SELECT vec_id, cid FROM (
-         |    SELECT e.vec_id, c.cid,
-         |      row_number() OVER (PARTITION BY e.vec_id
-         |        ORDER BY round(list_cosine_similarity(e.v, c.cv), 6) DESC, c.cid) AS rn
-         |    FROM e CROSS JOIN $cents c) WHERE rn = 1)""".stripMargin
-    def mean(assignName: String, i: Int, out: String) =
-      s"""ex$i AS (
-         |  SELECT a.cid, generate_subscripts(e.v, 1) AS d, unnest(e.v) AS x
-         |  FROM $assignName a JOIN e ON e.vec_id = a.vec_id),
-         |ag$i AS (
-         |  SELECT cid, d, sum(CAST(floor(x * 1048576.0) AS BIGINT)) AS s, count(*) AS n
-         |  FROM ex$i GROUP BY cid, d),
-         |$out AS (
-         |  SELECT cid, list(s / (n * 1048576.0) ORDER BY d) AS cv FROM ag$i GROUP BY cid)""".stripMargin
-    "cents0 AS (SELECT vec_id AS cid, v AS cv FROM e ORDER BY vec_id LIMIT 16),\n" +
-      assign("cents0", "assign0") + ",\n" +
-      mean("assign0", 1, "cents1") + ",\n" +
-      assign("cents1", "assign1") + ",\n" +
-      mean("assign1", 2, "cents") + ",\n" +
-      assign("cents", "assign")
-  }
-
   // ---- fhir_*_oracle: DuckDB re-derivation of each cleaned FHIR table from
   // the normalized-entries parquet Verify materializes (one shared input, so
   // the hash compare pins extraction + cleaning semantics, not parquet I/O).
@@ -6358,7 +5762,7 @@ object SparkEntry {
 
   def oracleSql: Map[String, String] = {
     val base = oracleSqlMain
-    base ++ Map(
+    Gate.merge(base ++ Map(
       // the transformWithState gates answer the SAME question as their
       // legacy twins on a different state backend (round 13) — one
       // oracle body each, aliased rather than duplicated
@@ -6394,7 +5798,7 @@ object SparkEntry {
       // r19: the ranged-tail census answers the SAME question as the
       // full-payload census over the SAME staged files — one DuckDB
       // replay, aliased: the tail path must not change one field
-      "lake_footer_tail" -> base("lake_footer_census"))
+      "lake_footer_tail" -> base("lake_footer_census")), gateRecords)(_.oracleSql)
   }
 
   /** The MP4 container-metadata prediction — shared verbatim by
@@ -6462,188 +5866,6 @@ object SparkEntry {
          |FROM read_parquet('${graft.fhir.FhirCorpus.expectedDumpDir}/*.parquet')
          |ORDER BY "table"""".stripMargin,
 
-    // JL sign matrix rebuilt from md5 in SQL (no dump needed): weight
-    // ±1/√16 = ±0.25 per (j, i) from the first md5 hex nibble.
-    "dim_reduce" ->
-      s"""WITH signs AS ($rpSignsCte),
-         |comp AS (
-         |  SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS i,
-         |    CAST(unnest(embedding) AS DOUBLE) AS x
-         |  FROM embeddings
-         |  WHERE vec_id IS NOT NULL AND embedding IS NOT NULL)
-         |SELECT c.vec_id, s.j, round(sum(s.w * c.x), 6) AS r
-         |FROM comp c JOIN signs s ON s.i = c.i
-         |GROUP BY c.vec_id, s.j
-         |ORDER BY vec_id, j""".stripMargin,
-
-    "ann_rp_recall" -> recallOracleSql(
-      embeddingsESrc,
-      s"""signs AS ($rpSignsCte),
-         |comp AS (
-         |  SELECT vec_id, generate_subscripts(v, 1) - 1 AS i, unnest(v) AS x
-         |  FROM e),
-         |red AS (
-         |  SELECT c.vec_id, s.j, sum(s.w * c.x) AS r
-         |  FROM comp c JOIN signs s ON s.i = c.i GROUP BY c.vec_id, s.j),
-         |rv AS (SELECT vec_id, list(r ORDER BY j) AS v FROM red GROUP BY vec_id),
-         |approx AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT q.vec_id AS query_id, e2.vec_id AS neighbor_id,
-         |      row_number() OVER (PARTITION BY q.vec_id
-         |        ORDER BY round(list_cosine_similarity(q.v, e2.v), 6) DESC, e2.vec_id) AS rn
-         |    FROM rv e2 CROSS JOIN (SELECT vec_id, v FROM rv WHERE vec_id < 20) q
-         |    WHERE e2.vec_id <> q.vec_id) WHERE rn <= 10)""".stripMargin,
-      floor = 0.0),
-
-    "ann_recall" -> recallOracleSql(
-      embeddingsESrc, lshApproxCtes(lshKeysDumpDir(verifySfDir)), floor = 0.5),
-
-    "ann_lsh_scaled" -> recallOracleSql(
-      s"""SELECT vec_id, embedding AS v
-         |  FROM read_parquet('${scaledLshDumpDir(verifySfDir)}/*.parquet')""".stripMargin,
-      lshApproxCtes(scaledLshDumpDir(verifySfDir)), floor = 0.8),
-
-    // PQ top-k lists replayed from the codebook dump: encode + LUT +
-    // exact-int64 ADC + exact re-rank, all in SQL.
-    "ann_pq" ->
-      (s"WITH e AS (\n  $embeddingsESrc),\n" +
-        pqApproxCtes(pqDumpDir(verifySfDir), nQueries = 5, candK = 50) + "\n" +
-        """SELECT query_id, neighbor_id, cosine_sim, rank
-          |FROM approx ORDER BY query_id, rank""".stripMargin),
-
-    "ann_pq_recall" -> recallOracleSql(
-      embeddingsESrc,
-      pqApproxCtes(pqDumpDir(verifySfDir), nQueries = 20, candK = 100), floor = 0.5),
-
-    // IVFADC top-k lists replayed end-to-end in SQL: coarse Lloyd
-    // (shared fragment) → residual vs cell centroid → encode against
-    // the dumped residual codebooks → cell-term + LUT exact-int64 ADC
-    // within probed cells → exact re-rank.
-    "ann_ivfpq" ->
-      (s"WITH e AS (\n  $embeddingsESrc),\n" + ivfLloydCtes + ",\n" +
-        ivfpqApproxCtes(ivfpqDumpDir(verifySfDir),
-          nQueries = 5, nProbe = 6, candK = 50) + "\n" +
-        """SELECT query_id, neighbor_id, cosine_sim, rank
-          |FROM approx ORDER BY query_id, rank""".stripMargin),
-
-    "ann_ivfpq_recall" -> recallOracleSql(
-      embeddingsESrc,
-      ivfLloydCtes + ",\n" +
-        ivfpqApproxCtes(ivfpqDumpDir(verifySfDir),
-          nQueries = 20, nProbe = 6, candK = 100),
-      floor = 0.6),
-
-    "ann_ivf_recall" -> recallOracleSql(
-      embeddingsESrc,
-      ivfLloydCtes + ",\n" +
-      """probes AS (
-        |  SELECT qid, cid FROM (
-        |    SELECT e.vec_id AS qid, c.cid,
-        |      row_number() OVER (PARTITION BY e.vec_id
-        |        ORDER BY round(list_cosine_similarity(e.v, c.cv), 6) DESC, c.cid) AS rn
-        |    FROM e CROSS JOIN cents c WHERE e.vec_id < 20) WHERE rn <= 6),
-        |cand AS (
-        |  SELECT p.qid, a.vec_id AS nid
-        |  FROM probes p JOIN assign a ON a.cid = p.cid
-        |  WHERE a.vec_id <> p.qid),
-        |approx AS (
-        |  SELECT query_id, neighbor_id FROM (
-        |    SELECT qid AS query_id, nid AS neighbor_id,
-        |      row_number() OVER (PARTITION BY qid
-        |        ORDER BY round(list_cosine_similarity(eq.v, en.v), 6) DESC, nid) AS rn
-        |    FROM cand JOIN e eq ON eq.vec_id = qid JOIN e en ON en.vec_id = nid)
-        |  WHERE rn <= 10)""".stripMargin,
-      floor = 0.7),
-
-    "ann_quantized_recall" -> recallOracleSql(
-      embeddingsESrc,
-      """codes AS (
-        |  SELECT vec_id, CASE WHEN scale > 0
-        |      THEN list_transform(v, x ->
-        |        greatest(-127, least(127, CAST(round(x / scale) AS BIGINT))))
-        |      ELSE list_transform(v, x -> CAST(0 AS BIGINT)) END AS cd
-        |  FROM (SELECT vec_id, v,
-        |          list_max(list_transform(v, x -> abs(x))) / 127.0 AS scale
-        |        FROM e)),
-        |qdots AS (
-        |  SELECT q.vec_id AS qid, c.vec_id AS nid,
-        |    CAST(list_sum(list_transform(range(1, len(q.cd) + 1),
-        |      i -> q.cd[i] * c.cd[i])) AS DOUBLE) AS num,
-        |    sqrt(CAST(list_sum(list_transform(q.cd, x -> x * x)) AS DOUBLE)) *
-        |    sqrt(CAST(list_sum(list_transform(c.cd, x -> x * x)) AS DOUBLE)) AS den
-        |  FROM codes c CROSS JOIN (SELECT * FROM codes WHERE vec_id < 20) q
-        |  WHERE c.vec_id <> q.vec_id),
-        |approx AS (
-        |  SELECT query_id, neighbor_id FROM (
-        |    SELECT qid AS query_id, nid AS neighbor_id,
-        |      row_number() OVER (PARTITION BY qid
-        |        ORDER BY round(CASE WHEN den > 0 THEN num / den END, 6) DESC NULLS LAST, nid) AS rn
-        |    FROM qdots) WHERE rn <= 10)""".stripMargin,
-      floor = 0.8),
-
-    "ann_lsh" ->
-      s"""WITH k AS (
-         |  SELECT vec_id, keys FROM read_parquet('${lshKeysDumpDir(verifySfDir)}/*.parquet')),
-         |ck AS (SELECT vec_id, unnest(keys) AS key FROM k),
-         |qk AS (SELECT vec_id AS qid, unnest(keys) AS key FROM k WHERE vec_id < 5),
-         |cand AS (
-         |  SELECT DISTINCT qid, ck.vec_id AS nid
-         |  FROM ck JOIN qk USING (key) WHERE ck.vec_id <> qid),
-         |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-         |scored AS (
-         |  SELECT qid AS query_id, nid AS neighbor_id,
-         |    round(list_cosine_similarity(eq.v, en.v), 6) AS cosine_sim
-         |  FROM cand JOIN e eq ON eq.vec_id = qid JOIN e en ON en.vec_id = nid)
-         |SELECT query_id, neighbor_id, cosine_sim,
-         |  CAST(row_number() OVER (PARTITION BY query_id
-         |    ORDER BY cosine_sim DESC, neighbor_id) AS BIGINT) AS rank
-         |FROM scored QUALIFY rank <= 10 ORDER BY query_id, rank""".stripMargin,
-
-    "embed_kmeans" ->
-      ("WITH e AS (\n  " + embeddingsESrc + "),\n" + ivfLloydCtes + "\n" +
-      """SELECT a.vec_id, CAST(a.cid AS BIGINT) AS cluster_id,
-        |  round(list_cosine_similarity(e.v, c.cv), 6) AS centroid_cos
-        |FROM assign a JOIN e ON e.vec_id = a.vec_id JOIN cents c ON c.cid = a.cid
-        |ORDER BY a.vec_id""".stripMargin),
-
-    "semdedup" ->
-      ("WITH e AS (\n  " + embeddingsESrc + "),\n" + ivfLloydCtes + ",\n" +
-      """asg AS (
-        |  SELECT a.vec_id, a.cid,
-        |    round(list_cosine_similarity(e.v, c.cv), 6) AS ccos
-        |  FROM assign a JOIN e ON e.vec_id = a.vec_id JOIN cents c ON c.cid = a.cid),
-        |pruned AS (
-        |  SELECT DISTINCT a.vec_id
-        |  FROM asg a JOIN asg b ON a.cid = b.cid AND b.vec_id <> a.vec_id
-        |  JOIN e ea ON ea.vec_id = a.vec_id JOIN e eb ON eb.vec_id = b.vec_id
-        |  WHERE round(list_cosine_similarity(ea.v, eb.v), 6) >= 0.35
-        |    AND (b.ccos < a.ccos OR (b.ccos = a.ccos AND b.vec_id < a.vec_id)))
-        |SELECT a.vec_id, CAST(a.cid AS BIGINT) AS cluster_id, a.ccos AS centroid_cos,
-        |  (p.vec_id IS NOT NULL) AS pruned
-        |FROM asg a LEFT JOIN pruned p ON p.vec_id = a.vec_id
-        |ORDER BY a.vec_id""".stripMargin),
-
-    "ann_ivf" ->
-      ("WITH e AS (\n  " + embeddingsESrc + "),\n" + ivfLloydCtes + ",\n" +
-      """probes AS (
-        |  SELECT qid, cid FROM (
-        |    SELECT e.vec_id AS qid, c.cid,
-        |      row_number() OVER (PARTITION BY e.vec_id
-        |        ORDER BY round(list_cosine_similarity(e.v, c.cv), 6) DESC, c.cid) AS rn
-        |    FROM e CROSS JOIN cents c WHERE e.vec_id < 5) WHERE rn <= 6),
-        |cand AS (
-        |  SELECT p.qid, a.vec_id AS nid
-        |  FROM probes p JOIN assign a ON a.cid = p.cid
-        |  WHERE a.vec_id <> p.qid),
-        |scored AS (
-        |  SELECT qid AS query_id, nid AS neighbor_id,
-        |    round(list_cosine_similarity(eq.v, en.v), 6) AS cosine_sim
-        |  FROM cand JOIN e eq ON eq.vec_id = qid JOIN e en ON en.vec_id = nid)
-        |SELECT query_id, neighbor_id, cosine_sim,
-        |  CAST(row_number() OVER (PARTITION BY query_id
-        |    ORDER BY cosine_sim DESC, neighbor_id) AS BIGINT) AS rank
-        |FROM scored QUALIFY rank <= 10 ORDER BY query_id, rank""".stripMargin),
-
     "exact_contamination" -> {
       // 13-wide shingle via list slice (w[i:i+12] is 1-based inclusive =
       // 13 tokens), same strip/split tokenization as the 3-gram CTEs
@@ -6667,28 +5889,6 @@ object SparkEntry {
          |FROM ev e LEFT JOIN tr t ON e.g = t.g
          |GROUP BY e.doc_id ORDER BY doc_id""".stripMargin
     },
-
-    "embed_clusters" ->
-      """WITH RECURSIVE e AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
-        |  WHERE vec_id IS NOT NULL AND embedding IS NOT NULL),
-        |prs AS (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        |  FROM e a JOIN e b ON a.vec_id < b.vec_id
-        |  -- non-zero-norm guard mirrors the engine kernel's denom>0
-        |  -- branch: DuckDB orders NaN above all values, so a zero vector
-        |  -- would otherwise fabricate oracle edges the engine never emits
-        |  -- (it still seeds reach below, as its own singleton cluster)
-        |  WHERE list_sum(list_transform(a.v, x -> x * x)) > 0
-        |    AND list_sum(list_transform(b.v, x -> x * x)) > 0
-        |    AND round(list_cosine_similarity(a.v, b.v), 6) >= 0.45),
-        |edges AS (SELECT id_a AS a, id_b AS b FROM prs UNION ALL SELECT id_b, id_a FROM prs),
-        |reach AS (
-        |  SELECT vec_id AS a, vec_id AS b FROM e
-        |  UNION
-        |  SELECT r.a, ed.b FROM reach r JOIN edges ed ON r.b = ed.a)
-        |SELECT a AS vec_id, CAST(min(b) AS BIGINT) AS cluster
-        |FROM reach GROUP BY a ORDER BY vec_id""".stripMargin,
 
     "jsonl_roundtrip" ->
       s"""SELECT doc_id, $enrichedTextSql AS text, lang, source, n_chars
@@ -6957,7 +6157,7 @@ object SparkEntry {
     "doc_fingerprint" ->
       s"""WITH fp AS (
          |  SELECT doc_id, rolling_fp, content_fp
-         |  FROM read_parquet('${fingerprintDumpDir(verifySfDir)}/*.parquet'))
+         |  FROM read_parquet('${FingerprintsDump.dir(verifySfDir)}/*.parquet'))
          |SELECT doc_id,
          |  CASE WHEN rolling_fp IS NULL THEN doc_id
          |       ELSE min(doc_id) OVER (PARTITION BY rolling_fp) END AS canonical_id,
@@ -7009,12 +6209,12 @@ object SparkEntry {
          |  round(min(comp_ratio), 6) AS min_ratio,
          |  round(max(comp_ratio), 6) AS max_ratio,
          |  CAST(sum(CASE WHEN comp_ratio < 0.3 THEN 1 ELSE 0 END) AS BIGINT) AS n_repetitive
-         |FROM read_parquet('${compressionDumpDir(verifySfDir)}/*.parquet')
+         |FROM read_parquet('${CompRatiosDump.dir(verifySfDir)}/*.parquet')
          |GROUP BY source ORDER BY source NULLS FIRST""".stripMargin,
 
     "dedup_simhash" ->
       s"""WITH s AS (
-         |  SELECT doc_id, simhash FROM read_parquet('${simhashDumpDir(verifySfDir)}/*.parquet'))
+         |  SELECT doc_id, simhash FROM read_parquet('${SimhashDump.dir(verifySfDir)}/*.parquet'))
          |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
          |  CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
          |FROM s a JOIN s b ON a.doc_id < b.doc_id
@@ -8940,7 +8140,7 @@ object SparkEntry {
 
     // stream_neardup_et: the ≥0.8 pair set FILTERED by event-time bucket
     // survival, replayed EXACTLY per bucket from the Verify band dump
-    // (neardupBandsDumpDir — the same banded explode the op runs; the
+    // (NeardupBandsDump — the same banded explode the op runs; the
     // kernel stays spec-pinned). Same wm/ord/lease arithmetic as the
     // other _et oracles, applied to each bucket's member-DAY timeline:
     // with constant-per-day doc ts (see etDocsReplayStream), a bucket's
@@ -8962,7 +8162,7 @@ object SparkEntry {
       (shingleCte +
         s""", bd AS (
            |  SELECT band_idx, band_hash, doc_id, d
-           |  FROM read_parquet('${neardupBandsDumpDir(verifySfDir)}/*.parquet')
+           |  FROM read_parquet('${NeardupBandsDump.dir(verifySfDir)}/*.parquet')
            |), dd AS (
            |  SELECT DISTINCT d FROM bd
            |), ords AS (
@@ -9082,115 +8282,6 @@ object SparkEntry {
           |JOIN sz sb ON sb.doc_id = eval_id
           |WHERE round(i * 1.0 / (sa.n + sb.n - i), 6) >= 0.8
           |ORDER BY train_id, eval_id""".stripMargin),
-
-    "embed_neardup" ->
-      """SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |  round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 6) AS cosine_sim
-        |FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        |WHERE round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])), 6) >= 0.9
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    "embed_quantize" ->
-      """WITH v AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS dv FROM embeddings
-        |), s AS (
-        |  SELECT vec_id, dv,
-        |    list_max(list_transform(dv, x -> abs(x))) / 127.0 AS scale
-        |  FROM v
-        |), q AS (
-        |  SELECT vec_id, scale,
-        |    CASE WHEN scale > 0
-        |      THEN list_transform(dv, x ->
-        |        greatest(-127, least(127, CAST(round(x / scale) AS BIGINT))))
-        |      ELSE list_transform(dv, x -> CAST(0 AS BIGINT)) END AS code
-        |  FROM s)
-        |SELECT vec_id, round(scale, 9) AS scale_r,
-        |  CAST(list_sum(code) AS BIGINT) AS q_sum,
-        |  CAST(list_min(code) AS BIGINT) AS q_min,
-        |  CAST(list_max(code) AS BIGINT) AS q_max
-        |FROM q ORDER BY vec_id""".stripMargin,
-
-    // Centroid cosine: HUGEINT dot/norms over the quantized sums, one
-    // division + two sqrts per pair.
-    "source_centroid_sim" ->
-      """WITH sums AS (
-        |  SELECT CAST(vec_id % 8 AS VARCHAR) AS grp, d,
-        |    CAST(sum(CAST(floor(x * 1048576.0) AS BIGINT)) AS HUGEINT) AS s,
-        |    count(*) AS n
-        |  FROM (SELECT vec_id, generate_subscripts(embedding, 1) AS d,
-        |          unnest(embedding) AS x
-        |        FROM embeddings
-        |        WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
-        |          AND len(embedding) > 0)
-        |  GROUP BY 1, 2),
-        |norms AS (
-        |  SELECT grp, sum(s * s) AS n2, CAST(max(n) AS BIGINT) AS n_vecs
-        |  FROM sums GROUP BY grp),
-        |dots AS (
-        |  SELECT a.grp AS group_a, b.grp AS group_b, sum(a.s * b.s) AS dt
-        |  FROM sums a JOIN sums b ON a.d = b.d AND a.grp < b.grp
-        |  GROUP BY 1, 2)
-        |SELECT d.group_a, d.group_b, na.n_vecs AS n_vecs_a,
-        |  nb.n_vecs AS n_vecs_b,
-        |  round(CAST(d.dt AS DOUBLE) /
-        |    (sqrt(CAST(na.n2 AS DOUBLE)) * sqrt(CAST(nb.n2 AS DOUBLE))), 6)
-        |    AS centroid_cosine
-        |FROM dots d
-        |JOIN norms na ON na.grp = d.group_a
-        |JOIN norms nb ON nb.grp = d.group_b
-        |ORDER BY d.group_a, d.group_b""".stripMargin,
-
-    "embed_drift" ->
-      """WITH b AS (
-        |  SELECT embedding AS v FROM embeddings
-        |  WHERE label % 2 = 0 AND embedding IS NOT NULL AND len(embedding) > 0),
-        |c AS (
-        |  SELECT embedding AS v FROM embeddings
-        |  WHERE label % 2 = 1 AND embedding IS NOT NULL AND len(embedding) > 0),
-        |ab AS (
-        |  SELECT d AS dim, sum(CAST(floor(x * 1048576.0) AS BIGINT)) AS s,
-        |    count(*) AS n
-        |  FROM (SELECT generate_subscripts(v, 1) AS d, unnest(v) AS x FROM b)
-        |  GROUP BY d),
-        |ac AS (
-        |  SELECT d AS dim, sum(CAST(floor(x * 1048576.0) AS BIGINT)) AS s,
-        |    count(*) AS n
-        |  FROM (SELECT generate_subscripts(v, 1) AS d, unnest(v) AS x FROM c)
-        |  GROUP BY d)
-        |SELECT CAST(coalesce(ab.dim, ac.dim) AS BIGINT) AS dim,
-        |  round(ab.s / (ab.n * 1048576.0), 6) AS base_mean,
-        |  round(ac.s / (ac.n * 1048576.0), 6) AS cur_mean,
-        |  round(ac.s / (ac.n * 1048576.0) - ab.s / (ab.n * 1048576.0), 6) AS mean_diff
-        |FROM ab FULL JOIN ac ON ac.dim = ab.dim
-        |ORDER BY dim""".stripMargin,
-
-    "hard_negatives" ->
-      """WITH q AS (
-        |  SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-        |  FROM embeddings WHERE vec_id < 5
-        |), scored AS (
-        |  SELECT qid AS query_id, vec_id AS neighbor_id,
-        |    round(list_cosine_similarity(qv, CAST(embedding AS DOUBLE[])), 6) AS cosine_sim
-        |  FROM embeddings CROSS JOIN q WHERE vec_id <> qid)
-        |SELECT query_id, neighbor_id, cosine_sim,
-        |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine_sim DESC, neighbor_id) AS BIGINT) AS rank
-        |FROM scored WHERE cosine_sim < 0.3
-        |QUALIFY rank <= 10
-        |ORDER BY query_id, rank""".stripMargin,
-
-    "similarity_topk" ->
-      """WITH q AS (
-        |  SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qv
-        |  FROM embeddings WHERE vec_id < 5
-        |), scored AS (
-        |  SELECT qid AS query_id, vec_id AS neighbor_id,
-        |    round(list_cosine_similarity(qv, CAST(embedding AS DOUBLE[])), 6) AS cosine_sim
-        |  FROM embeddings CROSS JOIN q WHERE vec_id <> qid)
-        |SELECT query_id, neighbor_id, cosine_sim,
-        |  CAST(row_number() OVER (PARTITION BY query_id ORDER BY cosine_sim DESC, neighbor_id) AS BIGINT) AS rank
-        |FROM scored
-        |QUALIFY rank <= 10
-        |ORDER BY query_id, rank""".stripMargin,
 
     "blockterm_profile" ->
       """WITH t AS (
@@ -9460,7 +8551,7 @@ object SparkEntry {
       s"""WITH RECURSIVE
          |ml AS (
          |  SELECT list(l || ' ' || r ORDER BY rank) AS m
-         |  FROM read_parquet('${bpeMergesDumpDir(verifySfDir)}/*.parquet')),
+         |  FROM read_parquet('${BpeMergesDump.dir(verifySfDir)}/*.parquet')),
          |d AS (
          |  SELECT doc_id, text FROM documents
          |  WHERE doc_id IS NOT NULL AND text IS NOT NULL),

@@ -38,88 +38,18 @@ object Verify {
     // the public-suffix algorithm against the SAME rules the engine uses.
     graft.ops.Domains.pslRulesFrame(spark)
       .coalesce(1).write.mode("overwrite").parquet(SparkEntry.PslDumpDir)
-    // ... and the trained PQ codebooks, so ann_pq/ann_pq_recall replay
-    // encode + ADC + re-rank from the SAME tables the gates train.
-    SparkEntry.pqCodebooks(spark, sfDir)
-      .select(org.apache.spark.sql.functions.col("subspace"),
-        org.apache.spark.sql.functions.col("centroid_id"),
-        org.apache.spark.sql.functions.col("__cent").as("cv"))
-      .coalesce(1).write.mode("overwrite").parquet(SparkEntry.pqDumpDir(sfDir))
-    // ... and the IVFADC residual codebooks, so ann_ivfpq/ann_ivfpq_recall
-    // replay residual-encode + cell-term ADC + re-rank from the SAME
-    // tables the gates serve (coarse training replays via ivfLloydCtes).
-    SparkEntry.ivfpqCodebooks(spark, sfDir)
-      .select(org.apache.spark.sql.functions.col("subspace"),
-        org.apache.spark.sql.functions.col("centroid_id"),
-        org.apache.spark.sql.functions.col("__cent").as("cv"))
-      .coalesce(1).write.mode("overwrite").parquet(SparkEntry.ivfpqDumpDir(sfDir))
-    // ... and the corpus-learned BPE merge table, so bpe_learned_count's
-    // greedy application gets a table-driven recursive-CTE oracle (the
-    // trainer stays spec-pinned on the Sennrich worked example).
-    locally {
-      import spark.implicits._
-      SparkEntry.bpeLearnedMerges(spark, sfDir).zipWithIndex
-        .map { case ((l, r), rank) => (rank, l, r) }
-        .toDF("rank", "l", "r")
-        .coalesce(1).write.mode("overwrite").parquet(SparkEntry.bpeMergesDumpDir(sfDir))
-    }
-    // ... and the simhash signatures, so dedup_simhash's pair stage gets a
-    // bit_count(xor()) oracle (the kernel stays spec-pinned).
-    SparkEntry.simhashSignatures(spark, sfDir)
-      .coalesce(1).write.mode("overwrite").parquet(SparkEntry.simhashDumpDir(sfDir))
-    // ... and the LSH band table, so stream_neardup_et's oracle replays
-    // the per-bucket event-time lease chain (bridging included) exactly
-    // from the SAME banded explode the streaming op runs.
-    SparkEntry.neardupBandFrame(spark, sfDir)
-      .coalesce(1).write.mode("overwrite").parquet(SparkEntry.neardupBandsDumpDir(sfDir))
-    // Guard the stream_neardup_et oracle's day-timeline assumption
-    // (r17 ADVICE): the oracle derives the replay-day set from the band
-    // dump, which drops band-less docs (null/too-short text →
-    // minhash-null → posexplode drop). If an entire replay day held
-    // ONLY band-less docs, the oracle's day-ordinal/watermark timeline
-    // would silently diverge from the replay the op actually sees —
-    // fail the dump loudly instead of assuming.
-    locally {
-      import org.apache.spark.sql.functions.col
-      val allDays = spark.read.parquet(s"$sfDir/documents.parquet")
-        .filter(col("doc_id").isNotNull)
-        .select(SparkEntry.etDocDay(col("doc_id").cast("long")).as("d"))
-        .distinct()
-      val bandedDays = spark.read.parquet(SparkEntry.neardupBandsDumpDir(sfDir))
-        .select(col("d")).distinct()
-      val missing = allDays.except(bandedDays).collect()
-      require(missing.isEmpty,
-        "stream_neardup_et oracle day-coverage hole — replay days holding " +
-          s"only band-less docs: ${missing.mkString(", ")}")
-    }
-    // ... and the LSH bucket keys, so ann_lsh's candidate join + exact
-    // scoring + ranking get a DuckDB oracle (the plane kernel stays
-    // spec-pinned).
-    SparkEntry.lshKeyFrame(spark, sfDir)
-      .coalesce(1).write.mode("overwrite").parquet(SparkEntry.lshKeysDumpDir(sfDir))
-    // ... and the ann_lsh_scaled corpus (base + planted near-copies) with
-    // its selective-config keys, for that gate's recall oracle.
-    SparkEntry.annLshScaledData(spark, sfDir)._1
-      .select(org.apache.spark.sql.functions.col("vec_id"),
-        org.apache.spark.sql.functions.col("embedding"),
-        graft.functions.lsh_keys(
-          org.apache.spark.sql.functions.col("embedding"), 64, 10, 32).as("keys"))
-      .coalesce(1).write.mode("overwrite").parquet(SparkEntry.scaledLshDumpDir(sfDir))
-    // ... and the rolling/content fingerprints, so doc_fingerprint's
-    // duplicate-group stage gets a window-function oracle (the hash
-    // kernels stay spec-pinned).
-    SparkEntry.fingerprintFrame(spark, sfDir)
-      .coalesce(1).write.mode("overwrite").parquet(SparkEntry.fingerprintDumpDir(sfDir))
-    // ... and the per-doc deflate ratios, so compression_profile's
-    // per-source aggregation gets an oracle (DuckDB has no deflate; the
-    // ratio kernel stays spec-pinned).
-    SparkEntry.compressionFrame(spark, sfDir)
-      .coalesce(1).write.mode("overwrite").parquet(SparkEntry.compressionDumpDir(sfDir))
     // Dev-loop filter: SPARK_GRAFT_ONLY=name1,name2 runs a subset without
     // paying for the full registry. Unset (driver runs) = everything.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
+    def selected(gate: String) = only.forall(_.contains(gate))
+    // ... and every SF-keyed frame an oracle reads (trained codebooks,
+    // kernel outputs DuckDB cannot recompute), for the selected gates
+    SparkEntry.dumps.filter(_.gates.exists(selected)).foreach { d =>
+      d.frame(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(d.dir(sfDir))
+      d.check(spark, sfDir)
+    }
     val failed = SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => selected(name) }
       .flatMap { case (name, fn) =>
       // near-dup operators persist intermediates by design; drop them
       // between queries so they don't stack cache evictions. releaseAll

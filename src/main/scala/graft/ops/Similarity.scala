@@ -457,20 +457,27 @@ object Similarity {
     // release it before returning (the returned codebook is a local frame
     // with no lineage into c)
     val c = c0.transform(graft.CachedFrames.cached)
+    // each step's jobs carry "<caller's description> / lloyd <step>", so
+    // a profile names the round (and, under pqTrain, the subspace)
+    val sc = spark.sparkContext
+    val caller = Option(sc.getLocalProperty("spark.job.description")).fold("")(_ + " / ")
+    def step[T](name: String)(body: => T): T =
+      graft.FanOut.described(sc, s"${caller}lloyd $name")(body)
     try {
-      var codebook: Seq[(Long, Seq[Double])] =
+      var codebook: Seq[(Long, Seq[Double])] = step("seed") {
         ivfCentroids(c, numCentroids)
           .select(col("centroid_id"), col("__cent").cast("array<double>"))
           .collect()
           .map(r => (r.getLong(0), r.getSeq[Double](1)))
           .toSeq
+      }
       def frame(cb: Seq[(Long, Seq[Double])]): DataFrame = {
         import spark.implicits._
         cb.toDF("centroid_id", "__cent")
       }
-      for (_ <- 1 to iters) {
+      for (round <- 1 to iters) {
         val assigned = ivfAssign(c, "neighbor_id", "__cv", frame(codebook))
-        codebook = c.join(assigned, "neighbor_id")
+        codebook = step(s"round $round")(c.join(assigned, "neighbor_id")
           .select(col("centroid_id"),
             posexplode(col("__cv")).as(Seq("__d", "__x")))
           .groupBy("centroid_id", "__d")
@@ -486,7 +493,7 @@ object Similarity {
             rows.foreach(r => v(r.getInt(1)) = r.getLong(2) / (r.getLong(3) * LloydScale))
             (cid, v.toSeq)
           }
-          .toSeq.sortBy(_._1)
+          .toSeq.sortBy(_._1))
       }
       frame(codebook)
     } finally c.unpersist(blocking = false)

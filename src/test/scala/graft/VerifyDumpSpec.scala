@@ -2,12 +2,14 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Pins the two r17 verify-dump contracts:
+/** Pins the verify-dump contracts:
   *
   * 1. SF-scoping — every SF-dependent dump path is keyed by the input
   *    dir, so two Verify runs at different SFs can never clobber the
   *    parquet the other's dumped oracle SQL reads (the schema_merge /
-  *    band-dump landmine class, r16).
+  *    band-dump landmine class, r16); and each declared dump names the
+  *    gates whose oracle reads it, so a `SPARK_GRAFT_ONLY` run writes
+  *    every dump its gates need.
   *
   * 2. Day provenance — the band dump's `d` column and the replay
   *    staging's ts bucket derive from ONE expression (etDocDay). The
@@ -23,12 +25,8 @@ class VerifyDumpSpec extends SparkSpec {
   private val sfDir = "/root/testdata/sf0.001"
 
   test("SF-dependent dump dirs are distinct per input dir") {
-    val dirs = Seq[String => String](
-      SparkEntry.simhashDumpDir, SparkEntry.neardupBandsDumpDir,
-      SparkEntry.bpeMergesDumpDir, SparkEntry.pqDumpDir,
-      SparkEntry.lshKeysDumpDir, SparkEntry.scaledLshDumpDir,
-      SparkEntry.fingerprintDumpDir, SparkEntry.compressionDumpDir,
-      SparkEntry.schemaMergeDumpDir)
+    val dirs: Seq[String => String] =
+      SparkEntry.dumps.map(d => d.dir _) :+ (SparkEntry.schemaMergeDumpDir _)
     dirs.foreach { f =>
       assert(f("/root/testdata/sf0.001") != f("/root/testdata/sf0.01"),
         "dump dir must be keyed by the input dir")
@@ -36,8 +34,18 @@ class VerifyDumpSpec extends SparkSpec {
       // the run and must resolve the same path the writer used)
       assert(f(sfDir) == f(sfDir))
     }
-    // all nine live under distinct roots for one dir (no cross-op clobber)
+    // all live under distinct roots for one dir (no cross-op clobber)
     assert(dirs.map(_(sfDir)).distinct.size == dirs.size)
+  }
+
+  test("each declared dump is read by exactly the oracles of the gates it names") {
+    val prior = SparkEntry.verifySfDir
+    SparkEntry.verifySfDir = sfDir
+    val oracles = try SparkEntry.oracleSql finally SparkEntry.verifySfDir = prior
+    SparkEntry.dumps.foreach { d =>
+      val readers = oracles.collect { case (g, sql) if sql.contains(d.dir(sfDir)) => g }.toSet
+      assert(readers == d.gates.toSet, s"${d.name}: declared for ${d.gates}, read by $readers")
+    }
   }
 
   test("schema_merge's oracle reads its snapshots under target/, not a per-JVM temp dir") {

@@ -275,6 +275,19 @@ class SimilaritySpec extends SparkSpec {
       again.exceptAll(codes).count() == 0L, "PQ must be deterministic")
   }
 
+  test("pqTrain: every Lloyd seed and round job is named under its subspace's description") {
+    val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    val profiler = new graft.Profiler(spark)
+    try {
+      val t0 = System.currentTimeMillis()
+      Similarity.pqTrain(emb, "vec_id", "embedding",
+        dim = 64, numSubspaces = 2, numCentroids = 4, iters = 2).collect()
+      val jobs = profiler.take(t0, System.currentTimeMillis()).jobs
+      for (s <- 0 until 2; step <- Seq("seed", "round 1", "round 2"))
+        assert(jobs.contains(s"pqTrain subspace $s / lloyd $step"), jobs)
+    } finally profiler.close()
+  }
+
   test("pqTrain: one failed subspace fails the call, and no sibling job starts after it") {
     // element 0 is not a number, so only subspace 0's slice fails its
     // (ANSI) cast; subspaces 1-3 would otherwise keep training
