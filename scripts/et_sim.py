@@ -23,11 +23,12 @@ import duckdb
 import pandas as pd
 
 DAY_US = 86_400_000_000
-# the gates replay only the first PREFIX_DAYS ts-days (SparkEntry
+# the gates replay only the first PREFIX_DAYS ts-days (StreamGates
 # etReplayCutoffUs): per-micro-batch overhead is a fixed floor, and the
 # prefix already evicts 68 leases at sf0.01 / ~550 at sf0.1 (r19 trim
 # 12 -> 9: the shortest prefix keeping every gate's eviction evidence
-# nonzero at every SF incl. sf0.001 -- MUST track SparkEntry.EtReplayDays)
+# nonzero at every SF incl. sf0.001 -- MUST track
+# src/main/scala/graft/streaming/StreamGates.scala EtReplayDays)
 PREFIX_DAYS = 9
 
 def load(sf_dir, days=PREFIX_DAYS):

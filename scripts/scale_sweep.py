@@ -56,9 +56,19 @@ def bench(sf_dir, gates, tag):
 
 
 def fixed_input_gates():
-    """Gates whose body ignores the sf dir: (s, _) => ... in the registry."""
-    with open(os.path.join(REPO, "src/main/scala/graft/SparkEntry.scala")) as f:
-        return set(re.findall(r'^\s*"(\w+)" -> \(\(\w+, _\) =>', f.read(), re.M))
+    """Gates whose body ignores the sf dir: `"name" -> ((s, _) =>` in a
+    registry map or `Gate("name") { (s, _) =>` as a record, in any source
+    file under src/main/scala/graft."""
+    pattern = re.compile(
+        r'^\s*(?:"(\w+)" -> \(\(\w+, _\) =>|Gate\("(\w+)"\) \{ \(\w+, _\) =>)', re.M)
+    root = os.path.join(REPO, "src", "main", "scala", "graft")
+    names = set()
+    for dirpath, _, files in os.walk(root):
+        for name in files:
+            if name.endswith(".scala"):
+                with open(os.path.join(dirpath, name)) as f:
+                    names.update(a or b for a, b in pattern.findall(f.read()))
+    return names
 
 
 def main():
@@ -98,8 +108,6 @@ def main():
     for g in sorted(gates, key=lambda g: -t1.get(g, 0.0)):
         ratio = tk[g] / t1[g] if ran(g) and t1[g] > 0 else None
         notes = []
-        if g not in t1 and g not in e1:
-            notes.append("not a registry gate")
         if g in e1:
             notes.append(f"1×: {e1[g]}")
         if g in ek:

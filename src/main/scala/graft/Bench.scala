@@ -138,12 +138,14 @@ object Bench {
     spark
   }
 
+  /** The bench-only entry timing a cold index training, next to the registry. */
+  private val ColdTrain = "ann_train_cold"
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val only = Gate.onlyFromEnv("Bench", SparkEntry.queries.keySet + ColdTrain)
     // repo-root default (round-9 verdict: BENCH_r*.json tail-capture
     // truncates the per-query dict — 81 of 177 gates visible — making
     // cross-round per-gate regression analysis lossy; a working-tree file
@@ -237,7 +239,7 @@ object Bench {
     // per-query (seconds, succeeded) for each full pass over the registry
     // (plus the bench-only cold-train entry, honoring the same dev filter)
     val registry: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
-      (SparkEntry.queries ++ Map("ann_train_cold" -> graft.ops.SimilarityGates.trainCold _))
+      (SparkEntry.queries ++ Map(ColdTrain -> graft.ops.SimilarityGates.trainCold _))
         .filter { case (name, _) => only.forall(_.contains(name)) }
     val gateSeq = registry.toSeq
     def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,

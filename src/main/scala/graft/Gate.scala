@@ -27,6 +27,23 @@ object Gate {
     require(twice.isEmpty, s"gate defined twice: ${twice.mkString(", ")}")
     base ++ gates.map(g => g.name -> value(g))
   }
+
+  /** `names`, once each is in `known`; a dev tool (`tool`) fails on the
+    * first call with every unknown one, before it builds a session, so a
+    * misspelt gate is an error rather than a silently empty run.
+    */
+  def requireKnown(tool: String, names: Seq[String], known: String => Boolean): Seq[String] = {
+    val unknown = names.filterNot(known)
+    require(unknown.isEmpty, s"$tool: unknown gates: ${unknown.mkString(", ")}")
+    names
+  }
+
+  /** The comma-separated `SPARK_GRAFT_ONLY` subset, checked by
+    * [[requireKnown]]; None (unset) selects every gate.
+    */
+  def onlyFromEnv(tool: String, known: String => Boolean): Option[Set[String]] =
+    sys.env.get("SPARK_GRAFT_ONLY").map(v =>
+      requireKnown(tool, v.split(",").map(_.trim).filter(_.nonEmpty).toSeq, known).toSet)
 }
 
 /** A parquet Verify writes under `target/` before any gate runs, keyed

@@ -15,10 +15,8 @@ object PlanDump {
       s"set SPARK_GRAFT_PLAN_OUT=<dir>/<suffix> to write <dir>/<query>_<suffix>.txt " +
       s"per query instead of stdout; queries: " +
       s"${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}")
-    val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
-    // reject every unknown name up front, before any session or dump
-    val unknown = names.filterNot(SparkEntry.queries.contains)
-    require(unknown.isEmpty, s"PlanDump: unknown queries: ${unknown.mkString(", ")}")
+    val names = Gate.requireKnown("PlanDump",
+      args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq, SparkEntry.queries.contains)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
     val mode = if (args.length > 2 && args(2) == "formatted") FormattedMode else ExtendedMode
     // out spec "plans/r20/before" → plans/r20/<query>_before.txt (one JVM

@@ -135,12 +135,6 @@ object SparkEntry {
     normalizeEventTs(
       spark.read.schema(eventsReadSchema(spark, dir)).parquet(s"$dir/events.parquet"))
 
-  /** Canonical streaming events read — same unit resolution as [[events]]. */
-  private[graft] def eventsStream(spark: SparkSession, dir: String): DataFrame =
-    normalizeEventTs(
-      spark.readStream.schema(eventsReadSchema(spark, dir))
-        .option("pathGlobFilter", "events.parquet").parquet(dir))
-
   /** r19 optimization round (guide §2.5 "input skew: one huge
     * unsplittable file… repartition immediately after the read"): every
     * sf test table is ONE parquet file with ONE row group, so a scan —
@@ -201,224 +195,14 @@ object SparkEntry {
     if (name == "events") events(spark, dir)
     else spark.read.parquet(s"$dir/$name.parquet")
 
-  /** The staged event-time backlog replay the `stream_*_et` eviction
-    * gates stream from: the canonical events read, bucketized one file
-    * per ts DAY via [[graft.streaming.Streams.stageEventTimeReplay]],
-    * read back one file per micro-batch. `nullifyThirds` nulls `value`
-    * on `event_id % 3 = 0` (mirrored in the oracle SQL) so the LOCF
-    * carry is load-bearing. Memoized per (dir, nullify): staging is
-    * deterministic harness scaffolding — re-staging per bench pass
-    * would time the writer, not the streaming operator under test.
+  /** The documents columns as the registry reads them: the round-trip
+    * gates read their engine-written scratch files with it, and
+    * [[graft.streaming.StreamGates.docsStream]] casts to it.
     */
-  private val etReplayDirs =
-    new java.util.concurrent.ConcurrentHashMap[(String, Boolean), String]()
-
-  private val EtReplayDayUs = 86_400_000_000L
-
-  /** The replay PREFIX all `stream_*_et` gates stage: the first
-    * [[EtReplayDays]] ts-days of the events table, measured from the
-    * canonical replay epoch `d0` = min ts-day over (user_id, ts)
-    * non-null rows — one epoch shared by every _et stream and mirrored
-    * in every _et oracle's `t0` CTE. A harness choice, not semantics:
-    * each micro-batch carries a fixed ~300 ms planning/commit floor,
-    * so replaying all 30 ts-days triples every gate's bench cost while
-    * proving nothing the first 9 don't (68 evictions / 37 changed
-    * carries / 147 tombstones / 148 flushes at sf0.01, 7/2/18/18 at
-    * sf0.001, ~550/250/1370/1390 at sf0.1 — scripts/et_sim.py, which
-    * also re-proves engine ≡ oracle closed form at this prefix at all
-    * three SFs; EtReplayDays is the margin-vs-evidence knob. Trimmed
-    * 12 → 9 in r19 — the r18 streaming family cost ~55 s of a 203 s
-    * board, almost all of it this per-batch floor, and 9 days is the
-    * shortest prefix keeping every gate's eviction evidence nonzero at
-    * every SF including the sf0.001 smoke scale).
-    * The epoch read is one driver-side scalar aggregate (KB-scale),
-    * memoized per dir. The _et oracle SQL strings interpolate it, so
-    * engine and oracle move as one when the knob moves.
-    *
-    * The replay design was priced at sf0.1 (r15, min of 3, the
-    * locfEnrich(eventTimeTtl) gate over the full ts range): one-day
-    * buckets took ≈ 10.5 s with 8 state partitions, ≈ 8 s with 2 and
-    * ≈ 7.3 s with 1; two-day buckets with 2 partitions took ≈ 4.3 s but
-    * gutted the eviction evidence (sf0.01 changed carries 110 → 10,
-    * sf0.001 → 0, et_sim.py); one-day buckets with 2 partitions over the
-    * r18 12-day prefix took ≈ 4 s (95 evictions at sf0.01; the 9-day
-    * prefix keeps 68). A fixed ~300 ms per micro-batch (trigger planning,
-    * offset/commit log, state commit) dominates, so batch COUNT is the
-    * lever: a shorter prefix keeps day-scale silences (common), where
-    * coarser buckets would need week-scale ones (rare).
-    */
-  private val EtReplayDays = 9L
-  private val etReplayEpochs = new java.util.concurrent.ConcurrentHashMap[String, Long]()
-  private def etReplayCutoffUs(spark: SparkSession, dir: String): Long = {
-    val d0 = etReplayEpochs.computeIfAbsent(dir, _ =>
-      events(spark, dir)
-        .filter(col("user_id").isNotNull && col("ts").isNotNull)
-        .agg(min(col("ts"))).head.getLong(0) / EtReplayDayUs)
-    (d0 + EtReplayDays) * EtReplayDayUs
-  }
-  /** The staged chunk directory behind [[etReplayStream]]. */
-  private def etReplayChunkDir(spark: SparkSession, dir: String,
-      nullifyThirds: Boolean): String =
-    etReplayDirs.computeIfAbsent((dir, nullifyThirds), _ => {
-      val base = events(spark, dir)
-        .filter(col("user_id").isNotNull && col("ts").isNotNull &&
-          col("ts") < lit(etReplayCutoffUs(spark, dir)))
-        .select(col("user_id"), col("event_id"), col("ts"),
-          (if (nullifyThirds)
-             when(col("event_id") % 3 === 0, lit(null))
-               .otherwise(col("value").cast("double"))
-           else col("value").cast("double")).as("value"))
-      graft.streaming.Streams.stageEventTimeReplay(base, "ts",
-        bucketUs = EtReplayDayUs)
-    })
-
-  private[graft] def etReplayStream(spark: SparkSession, dir: String,
-      nullifyThirds: Boolean)
-      : org.apache.spark.sql.Dataset[graft.streaming.Streams.ObsEvent] = {
-    import spark.implicits._
-    val chunks = etReplayChunkDir(spark, dir, nullifyThirds)
-    spark.readStream
-      .schema(StructType(Seq(
-        StructField("user_id", LongType), StructField("event_id", LongType),
-        StructField("ts", LongType), StructField("value", DoubleType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(chunks)
-      .as[graft.streaming.Streams.ObsEvent]
-  }
-
-  /** The staged typed replay for `stream_transitions_et`: the canonical
-    * events read carrying `event_type` (non-null — the transitions ops'
-    * input contract), bucketized one file per ts DAY like
-    * [[etReplayStream]]. Memoized per dir: staging is deterministic
-    * harness scaffolding.
-    */
-  private[graft] def etTypedReplayStream(spark: SparkSession, dir: String)
-      : org.apache.spark.sql.Dataset[graft.streaming.Streams.TypedEvent] = {
-    import spark.implicits._
-    val chunks = etReplayDirs.computeIfAbsent((dir + "#typed", false), _ => {
-      val base = events(spark, dir)
-        .filter(col("user_id").isNotNull && col("ts").isNotNull &&
-          col("event_type").isNotNull &&
-          col("ts") < lit(etReplayCutoffUs(spark, dir)))
-        .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
-      graft.streaming.Streams.stageEventTimeReplay(base, "ts",
-        bucketUs = EtReplayDayUs)
-    })
-    spark.readStream
-      .schema(StructType(Seq(
-        StructField("user_id", LongType), StructField("event_id", LongType),
-        StructField("ts", LongType), StructField("event_type", StringType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(chunks)
-      .as[graft.streaming.Streams.TypedEvent]
-  }
-
-  /** The staged interval replay for `stream_episodes_et`: fixed-length
-    * intervals (ivs = ts, ive = ts + 2 h) bucketized one file per ive
-    * DAY — fixed length keeps per-key delivery monotone in BOTH
-    * endpoints, which is what gives the idle-flush rule a closed-form
-    * window oracle (reach = lag(ive)). Memoized like [[etReplayStream]].
-    */
-  private[graft] def etEpisodeChunkDir(spark: SparkSession, dir: String): String =
-    etReplayDirs.computeIfAbsent((dir + "#episodes", false), _ => {
-      val base = events(spark, dir)
-        .filter(col("user_id").isNotNull && col("ts").isNotNull &&
-          col("ts") < lit(etReplayCutoffUs(spark, dir)))
-        .select(col("user_id"), col("ts").as("ivs"),
-          (col("ts") + lit(7_200_000_000L)).as("ive"))
-      graft.streaming.Streams.stageEventTimeReplay(base, "ive",
-        bucketUs = EtReplayDayUs)
-    })
-
-  private[graft] val etEpisodeSchema = StructType(Seq(
-    StructField("user_id", LongType), StructField("ivs", LongType),
-    StructField("ive", LongType)))
-
-  private[graft] def etEpisodeReplayStream(spark: SparkSession, dir: String)
-      : org.apache.spark.sql.Dataset[graft.streaming.Streams.IntervalRow] = {
-    import spark.implicits._
-    spark.readStream
-      .schema(etEpisodeSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(etEpisodeChunkDir(spark, dir))
-      .as[graft.streaming.Streams.IntervalRow]
-  }
-
-  /** The staged document replay for `stream_neardup_et`: documents with
-    * a SYNTHETIC deterministic event time — day = (doc_id *
-    * [[EtDocDayMult]]) mod [[EtDocDays]], ts = (day + 1) *
-    * [[EtReplayDayUs]] exactly (constant within a day; the +1 keeps
-    * day-0 rows strictly above Spark's initial watermark of 0 ms, which
-    * would otherwise drop them as late before the operator — the lease
-    * inequalities are invariant under the uniform shift) — bucketized
-    * one file per ts day.
-    * The constant-per-day ts is load-bearing for the oracle: an LSH
-    * bucket's lease rides its latest MEMBER ts, and constant-per-day ts
-    * makes that value a pure function of the member's day, independent
-    * of which other docs share the bucket — which is what lets a
-    * pairwise window SQL replay the bucket lease without knowing bucket
-    * membership. The multiplicative hash spreads near-dup pairs across
-    * the EtDocDays replay days so the 30 h lease genuinely splits the
-    * verified pair set (kept vs evicted) instead of trivially keeping
-    * everything — 13 kept / 12 evicted of the 25 batch pairs at sf0.01
-    * with the r19 9-day prefix (12 days through r18 kept 9 / evicted
-    * 16; trimmed with the EtReplayDays family — same per-batch-floor
-    * rationale, and the split stays two-sided).
-    * Memoized like [[etReplayStream]].
-    */
-  private[graft] val EtDocDayMult = 2654435761L // Knuth multiplicative hash
-  private[graft] val EtDocDays = 9L
-  private[graft] val EtDocLeaseMs = 108_000_000L // 30 h = 1.25 replay days
-  /** The document's replay day — THE defining expression (Spark long
-    * multiply wraps on overflow; pmod of the wrapped value is the
-    * semantics). Shared by the replay staging and the Verify band dump
-    * so the oracle reads this value rather than re-deriving it in SQL.
-    */
-  private[graft] def etDocDay(id: Column): Column =
-    pmod(id * lit(EtDocDayMult), lit(EtDocDays))
-  private[graft] def etDocsReplayStream(spark: SparkSession, dir: String): DataFrame = {
-    val chunks = etReplayDirs.computeIfAbsent((dir + "#docs", false), _ => {
-      val base = t(spark, dir, "documents")
-        .filter(col("doc_id").isNotNull)
-        .select(col("doc_id"), col("text"),
-          ((etDocDay(col("doc_id")) + 1) * lit(EtReplayDayUs)).as("ts"))
-      graft.streaming.Streams.stageEventTimeReplay(base, "ts",
-        bucketUs = EtReplayDayUs)
-    })
-    spark.readStream
-      .schema(StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType),
-        StructField("ts", LongType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(chunks)
-  }
-
   private[graft] val docsSchema = StructType(Seq(
     StructField("doc_id", LongType), StructField("text", StringType),
     StructField("lang", StringType), StructField("source", StringType),
     StructField("n_chars", LongType)))
-
-  /** Canonical streaming documents read. The streaming file source
-    * requires an explicit schema; forcing the `docsSchema` CONSTANT on a
-    * driver-regenerated file is the same landmine the events table
-    * already stepped on (a type change reads garbage without erroring),
-    * so the forced schema is the file's OWN inferred one, then cast to
-    * the canonical column types — drift becomes an analysis error or a
-    * well-defined cast, never silent corruption. (Engine-written scratch
-    * files — jsonl/csv/orc round-trips — keep using the constant; the
-    * engine controls both sides there.)
-    */
-  private val docsSchemas = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
-
-  private[graft] def docsStream(spark: SparkSession, dir: String): DataFrame = {
-    // per-dir cache, same as eventsTsTypes: the inferred schema is a
-    // property of the file; one footer read per dir per JVM
-    val inferred = docsSchemas.computeIfAbsent(dir,
-      _ => spark.read.parquet(s"$dir/documents.parquet").schema)
-    spark.readStream.schema(inferred)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      .select(docsSchema.fields.toSeq.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
-  }
 
   // per-JVM scratch root for the round-trip gates' write halves (deleted
   // at JVM exit); keyed by the input dir so two frames built before
@@ -610,62 +394,6 @@ object SparkEntry {
     */
   private[graft] def verifyDumpDir(name: String, dir: String): String =
     new java.io.File(s"target/verify-$name-${pathKey(dir)}").getAbsolutePath
-
-  /** The LSH band table `(band_idx, band_hash, doc_id, d)` of the sf
-    * documents corpus — the SAME shingle→minhash→band chain the
-    * streaming ops explode. The `stream_neardup_et` oracle replays the
-    * per-BUCKET event-time lease chain exactly from this parquet
-    * (member-day timelines → surviving gaps → alive pairs): bucket
-    * bridging — a third member renewing a bucket mid-silence, which no
-    * pairwise day-window can express — is replayed, not approximated.
-    * The band kernel itself stays spec-pinned (FunctionsSpec /
-    * DedupSpec) — the [[SimhashDump]] soundness pattern.
-    */
-  private[graft] val NeardupBandsDump = Dump("neardup-bands", Seq("stream_neardup_et"),
-    neardupBandFrame, check = requireBandDayCoverage)
-
-  /** Guard the stream_neardup_et oracle's day-timeline assumption (r17
-    * ADVICE): the oracle derives the replay-day set from the band dump,
-    * which drops band-less docs (null/too-short text → minhash-null →
-    * posexplode drop). If an entire replay day held ONLY band-less docs,
-    * the oracle's day-ordinal/watermark timeline would silently diverge
-    * from the replay the op actually sees — fail the dump loudly instead
-    * of assuming.
-    */
-  private def requireBandDayCoverage(spark: SparkSession, dir: String): Unit = {
-    val allDays = t(spark, dir, "documents")
-      .filter(col("doc_id").isNotNull)
-      .select(etDocDay(col("doc_id").cast("long")).as("d"))
-      .distinct()
-    val bandedDays = spark.read.parquet(NeardupBandsDump.dir(dir))
-      .select(col("d")).distinct()
-    val missing = allDays.except(bandedDays).collect()
-    require(missing.isEmpty,
-      "stream_neardup_et oracle day-coverage hole — replay days holding " +
-        s"only band-less docs: ${missing.mkString(", ")}")
-  }
-
-  /** The banded LSH explode of the documents corpus, exactly as the
-    * neardup ops compute it (graft.streaming.Streams.neardupCandidates*
-    * and graft.ops.Dedup.lshCandidates share these kernels/constants).
-    * Carries the replay day `d` computed by the ENGINE's expression
-    * ([[etDocDay]] — the same wrapped int64 product etDocsReplayStream
-    * derives ts from), so the stream_neardup_et oracle reads the day
-    * instead of re-deriving `(doc_id * mult) % days` in DuckDB, which
-    * errors on int64 product overflow where Spark wraps silently (r16
-    * ADVICE — divergent-by-engine, not just a magnitude assumption).
-    */
-  def neardupBandFrame(spark: SparkSession, dir: String): DataFrame =
-    t(spark, dir, "documents")
-      .filter(col("doc_id").isNotNull)
-      .select(
-        posexplode(graft.functions.band_hashes(
-          graft.ops.Dedup.minhashSignature(
-            graft.functions.shingle_hash_set(col("text"), 3)),
-          graft.ops.Dedup.Bands, graft.ops.Dedup.RowsPerBand))
-          .as(Seq("band_idx", "band_hash")),
-        col("doc_id").cast("long").as("doc_id"),
-        etDocDay(col("doc_id").cast("long")).as("d"))
 
   /** The CORPUS-LEARNED BPE merge table `(rank, l, r)` — the
     * `bpe_learned_count` oracle replays the greedy merge application
@@ -888,8 +616,8 @@ object SparkEntry {
     * oracles that read it.
     */
   def dumps: Seq[Dump] =
-    Seq(SimhashDump, NeardupBandsDump, BpeMergesDump, FingerprintsDump, CompRatiosDump) ++
-      graft.ops.SimilarityGates.dumps
+    Seq(SimhashDump, BpeMergesDump, FingerprintsDump, CompRatiosDump) ++
+      graft.ops.SimilarityGates.dumps ++ graft.streaming.StreamGates.dumps
 
   /** The per-doc ratio frame both the dump and the compression_profile
     * gate derive from. Enriched with a highly-repetitive variant of every
@@ -1024,7 +752,8 @@ object SparkEntry {
   /** The gate families kept as [[Gate]] records, next to their `ops/`
     * modules.
     */
-  private def gateRecords: Seq[Gate] = graft.ops.SimilarityGates.all
+  private def gateRecords: Seq[Gate] =
+    graft.ops.SimilarityGates.all ++ graft.streaming.StreamGates.all
 
   private def queriesHere: Map[String, (SparkSession, String) => DataFrame] = Map(
 
@@ -3520,497 +3249,6 @@ object SparkEntry {
         .select("media_id", "frame_idx", "offset")
         .orderBy("media_id", "frame_idx")),
 
-    // §7.6 — Structured Streaming gate: the SAME events data as a
-    // file-source stream through watermarked dedup (bounded state), run to
-    // completion with a memory sink. All part files fit one micro-batch
-    // (maxFilesPerTrigger=1000 ≫ part count), so no row is ever late
-    // against the watermark and the surviving key set is exactly
-    // SELECT DISTINCT — giving a streaming operator a full value oracle.
-    "stream_dedup" -> ((s, dir) => {
-      import graft.streaming.Streams
-      // eventsStream lists the sf DIRECTORY (the streaming file source
-      // demands a directory basePath) glob-filtered to events.parquet,
-      // with the same ts-unit resolution as the batch read
-      val src = eventsStream(s, dir)
-      val deduped = Streams.dedupWithinWatermark(
-        Streams.withEventTime(src, "ts"),
-        "event_time", "30 minutes", Seq("user_id", "event_type"))
-        .select("user_id", "event_type")
-      val name = "stream_dedup_" + java.lang.Long.toHexString(System.nanoTime())
-      Streams.runToMemory(deduped, name, statePartitions = Some(8))
-        .orderBy("user_id", "event_type")
-    }),
-
-    // §7.6 — streaming NEAR-dup: MinHash-LSH candidate detection as
-    // per-bucket flatMapGroupsWithState (state = the banded index
-    // itself), batch-side exact-Jaccard verify over the streamed
-    // candidate set. Run-to-completion makes the candidate set exactly
-    // the batch lshCandidates' — so the whole operator hash-matches
-    // dedup_minhash's ALL-PAIRS exact-jaccard oracle (candidate
-    // completeness across the stream/state path verified, not assumed).
-    "stream_neardup" -> ((s, dir) => {
-      import graft.streaming.Streams
-      val cands = Streams.neardupCandidates(docsStream(s, dir), "doc_id", "text", n = 3)
-      val name = "stream_neardup_" + java.lang.Long.toHexString(System.nanoTime())
-      val sunk = Streams.runToMemory(cands.toDF(), name, statePartitions = Some(8))
-      val signed = t(s, dir, "documents").select(
-        col("doc_id"),
-        graft.functions.shingle_hash_set(col("text"), 3).as("__shingles"))
-      Dedup.verifyJaccard(sunk.distinct(), signed, "doc_id", "__shingles")
-        .filter(col("jaccard") >= 0.8)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // stream_neardup on the transformWithState tier (round 13):
-    // ListState bucket membership on the RocksDB provider, same
-    // candidate semantics run-to-completion — so the whole TWS path
-    // (list append, RocksDB store, provider scoping) hash-matches the
-    // SAME all-pairs exact-jaccard oracle as the legacy gate.
-    "stream_neardup_tws" -> ((s, dir) => {
-      import graft.streaming.Streams
-      val cands = Streams.neardupCandidatesTws(docsStream(s, dir), "doc_id", "text", n = 3)
-      val name = "stream_neardup_tws_" + java.lang.Long.toHexString(System.nanoTime())
-      val sunk = Streams.withRocksDbProvider(s) {
-        Streams.runToMemory(cands.toDF(), name, statePartitions = Some(8))
-      }
-      val signed = t(s, dir, "documents").select(
-        col("doc_id"),
-        graft.functions.shingle_hash_set(col("text"), 3).as("__shingles"))
-      Dedup.verifyJaccard(sunk.distinct(), signed, "doc_id", "__shingles")
-        .filter(col("jaccard") >= 0.8)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // stream_neardup_et: the LSH bucket lease on the DATA's clock,
-    // hash-gated (r15 verdict #3). Documents replay over 12 synthetic
-    // ts days (constant ts within a day — see etDocsReplayStream); a
-    // bucket whose latest member is > 30 h of EVENT time behind the
-    // watermark is evicted mid-stream, so a pair of near-dups arriving
-    // ≥ 4 replay days apart pairs with NOTHING (its shared buckets died
-    // in between) while pairs ≤ 3 days apart emit. Exact-Jaccard verify
-    // over the streamed candidates makes the final answer the ≥0.8 pair
-    // set FILTERED by bucket-lease survival — which the oracle replays
-    // EXACTLY per bucket from the Verify band dump (NeardupBandsDump):
-    // member-day timelines under the same wm/lease arithmetic as the
-    // other _et oracles, INCLUDING bucket bridging — a third member
-    // renewing a shared bucket mid-silence keeps a pair alive across a
-    // day gap no pairwise window covers (2 of the 134 surviving sf0.1
-    // pairs exist only through such a bridge, so the hash compare
-    // exercises the chain semantics too). Validated engine-vs-oracle at
-    // sf0.001/0.01/0.1 (r16).
-    "stream_neardup_et" -> ((s, dir) => {
-      import graft.streaming.Streams
-      val cands = Streams.neardupCandidatesEventTime(
-        etDocsReplayStream(s, dir), "doc_id", "text", "ts",
-        eventTimeTtl = java.time.Duration.ofMillis(EtDocLeaseMs), n = 3)
-      val name = "stream_neardup_et_" + java.lang.Long.toHexString(System.nanoTime())
-      val sunk = Streams.runToMemory(cands.toDF(), name,
-        statePartitions = Some(2), availableNow = true)
-      val signed = t(s, dir, "documents").select(
-        col("doc_id"),
-        graft.functions.shingle_hash_set(col("text"), 3).as("__shingles"))
-      Dedup.verifyJaccard(sunk.distinct(), signed, "doc_id", "__shingles")
-        .filter(col("jaccard") >= 0.8)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // §7.6 — fourth streaming gate: stream-static join. The incoming
-    // document stream is flagged against the STATIC history split —
-    // stateless on the stream side, deterministic run-to-completion, so
-    // the result is exactly the batch dedup_incremental and shares its
-    // oracle shape.
-    // §7.6 — stream-STREAM watermarked interval join: view→click
-    // attribution (clicks within 6 h of a same-user view), both sides
-    // fed from the file-source event stream. Exact event-id pairs with
-    // µs delays — the batch inequality join is the full oracle.
-    "stream_join" -> ((s, dir) => {
-      import graft.streaming.Streams
-      val ev = Streams.withEventTime(eventsStream(s, dir), "ts")
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("event_id").as("view_id"),
-          col("event_time").as("view_time"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("event_id").as("click_id"),
-          col("event_time").as("click_time"))
-      val joined = Streams.intervalJoinStreams(
-        views, clicks, Seq("user_id"), "view_time", "click_time",
-        watermark = "1 hour", within = "6 hours")
-        .select(col("l.user_id").as("user_id"), col("view_id"), col("click_id"),
-          (unix_micros(col("click_time")) - unix_micros(col("view_time")))
-            .as("delay_us"))
-      val name = "stream_join_" + java.lang.Long.toHexString(System.nanoTime())
-      Streams.runToMemory(joined, name, statePartitions = Some(8))
-        .orderBy("view_id", "click_id")
-    }),
-
-    // §7.6 — stream-static POINT-IN-TIME enrichment (the streaming twin
-    // of pit_lookup): the click stream is as-of joined to a static
-    // dedup'd view-history dim via the broadcast as-of path — stateless
-    // on the stream, no watermark needed, dim re-planned per batch. Same
-    // DuckDB ASOF oracle shape as the batch asof_join gate.
-    "stream_asof" -> ((s, dir) => {
-      import graft.streaming.Streams
-      val clicks = eventsStream(s, dir).filter(col("event_type") === "click")
-        .select("event_id", "user_id", "ts")
-      val views = Cleaners.dedupKeepFirst(
-          events(s, dir).filter(col("event_type") === "view")
-            .select("user_id", "ts", "value", "event_id"),
-          Seq("user_id", "ts"), Seq(col("event_id")))
-        .select(col("user_id"), col("ts").as("vts"), col("value").as("view_value"))
-      val enriched = Streams.asofEnrichStatic(
-        clicks, views, Seq("user_id"), "ts", "vts", Seq("view_value"))
-        .select(col("event_id"), col("user_id"), col("ts").as("ts_us"),
-          col("view_value"))
-      val name = "stream_asof_" + java.lang.Long.toHexString(System.nanoTime())
-      Streams.runToMemory(enriched, name, statePartitions = Some(8))
-        .orderBy("event_id")
-    }),
-
-    // §7.6 — STREAMING bulk-FHIR ingest at corpus scale: the 5k-bundle
-    // directory through the streaming reader in bounded micro-batches
-    // (maxFilesPerTrigger=1000 → 5 batches) under Trigger.AvailableNow
-    // (ONE source listing for the whole backlog — the bulk-backfill
-    // trigger; the default trigger re-lists 5k files per batch and that
-    // listing, not the parse, dominated the gate), Complete-mode
-    // per-type counts. The oracle is the GENERATOR's literal entry-count
-    // prediction — micro-batching must not lose or duplicate a bundle.
-    "stream_fhir" -> ((s, _) => {
-      import graft.streaming.Streams
-      val entries = Streams.readBundleStream(s, graft.fhir.FhirCorpus.corpusDir)
-      val counts = entries
-        .groupBy(col("resource.resourceType").as("resource_type"))
-        .agg(count(lit(1)).as("n_entries"))
-      val name = "stream_fhir_" + java.lang.Long.toHexString(System.nanoTime())
-      Streams.runToMemory(counts, name,
-          org.apache.spark.sql.streaming.OutputMode.Complete(),
-          statePartitions = Some(8), availableNow = true)
-        .orderBy("resource_type")
-    }),
-
-    // §7.6 — stateful streaming LOCF: every event emitted with its key's
-    // last non-null value (flatMapGroupsWithState; per-key state = one
-    // double). First ORACLE gate over the custom-state surface — the
-    // single-file source runs in one batch, where the op is exactly the
-    // batch IGNORE NULLS carry window.
-    "stream_locf" -> ((s, dir) => {
-      import graft.streaming.Streams
-      import s.implicits._
-      val ev = eventsStream(s, dir)
-        .filter(col("user_id").isNotNull && col("ts").isNotNull)
-        .select(col("user_id"), col("event_id"), col("ts"),
-          col("value").cast("double").as("value"))
-        .as[Streams.ObsEvent]
-      val name = "stream_locf_" + java.lang.Long.toHexString(System.nanoTime())
-      Streams.runToMemory(Streams.locfEnrich(ev).toDF(), name,
-          statePartitions = Some(8))
-        .select(col("event_id"), col("user_id"), col("ts").as("ts_us"),
-          col("value"), col("carried"))
-        .orderBy("event_id")
-    }),
-
-    // §7.6 — streaming CDC state table: latest row per key upserted in
-    // state (mapGroupsWithState, Update output) — the stream side of
-    // cdc_upsert, where the state store is the base table and each
-    // micro-batch emits only changed keys. Single-batch run-to-
-    // completion makes the sink exactly the batch latest-per-key rank.
-    "stream_cdc" -> ((s, dir) => {
-      import graft.streaming.Streams
-      import s.implicits._
-      val ev = eventsStream(s, dir)
-        .filter(col("user_id").isNotNull && col("ts").isNotNull)
-        .select(col("user_id"), col("event_id"), col("ts"),
-          col("value").cast("double").as("value"))
-        .as[Streams.ObsEvent]
-      val name = "stream_cdc_" + java.lang.Long.toHexString(System.nanoTime())
-      Streams.runToMemory(Streams.latestState(ev).toDF(), name,
-          org.apache.spark.sql.streaming.OutputMode.Update(),
-          statePartitions = Some(8))
-        .select(col("user_id"), col("ts").as("ts_us"), col("event_id"),
-          col("value"))
-        .orderBy("user_id")
-    }),
-
-    // stream_cdc on the transformWithState tier (round 13): the same
-    // latest-wins upsert held in a typed ValueState on RocksDB —
-    // identical single-batch answer, so the legacy gate's rank oracle
-    // verifies the whole new-API path end to end.
-    "stream_cdc_tws" -> ((s, dir) => {
-      import graft.streaming.Streams
-      import s.implicits._
-      val ev = eventsStream(s, dir)
-        .filter(col("user_id").isNotNull && col("ts").isNotNull)
-        .select(col("user_id"), col("event_id"), col("ts"),
-          col("value").cast("double").as("value"))
-        .as[Streams.ObsEvent]
-      val name = "stream_cdc_tws_" + java.lang.Long.toHexString(System.nanoTime())
-      Streams.withRocksDbProvider(s) {
-        Streams.runToMemory(Streams.latestStateTws(ev).toDF(), name,
-          org.apache.spark.sql.streaming.OutputMode.Update(),
-          statePartitions = Some(8))
-      }
-        .select(col("user_id"), col("ts").as("ts_us"), col("event_id"),
-          col("value"))
-        .orderBy("user_id")
-    }),
-
-    // stream_locf on the transformWithState tier (round 14): the carry
-    // in a typed ValueState on RocksDB — identical single-batch answer,
-    // so the legacy gate's IGNORE NULLS window oracle verifies the
-    // new-API carry path end to end.
-    "stream_locf_tws" -> ((s, dir) => {
-      import graft.streaming.Streams
-      import s.implicits._
-      val ev = eventsStream(s, dir)
-        .filter(col("user_id").isNotNull && col("ts").isNotNull)
-        .select(col("user_id"), col("event_id"), col("ts"),
-          col("value").cast("double").as("value"))
-        .as[Streams.ObsEvent]
-      val name = "stream_locf_tws_" + java.lang.Long.toHexString(System.nanoTime())
-      Streams.withRocksDbProvider(s) {
-        Streams.runToMemory(Streams.locfEnrichTws(ev).toDF(), name,
-          statePartitions = Some(8))
-      }
-        .select(col("event_id"), col("user_id"), col("ts").as("ts_us"),
-          col("value"), col("carried"))
-        .orderBy("event_id")
-    }),
-
-    // Round 15 — the EVENT-TIME EVICTION gates (r14 verdict #1): the
-    // event-time lease tier's defining behavior — state expiring on the
-    // DATA's clock — exercised mid-stream and hash-compared against a
-    // DuckDB replay of the data-clock rule. The input is the events
-    // table staged as a deterministic backlog replay (one file per ts
-    // DAY, one micro-batch per file under AvailableNow — see
-    // stageEventTimeReplay), which pins the micro-batch partitioning
-    // and with it every watermark value and timer firing. The replay is
-    // the first EtReplayDays=9 ts-days (etReplayCutoffUs:
-    // per-micro-batch overhead is a fixed floor, and 9 days already
-    // evicts 68 leases / flips 37 carries at sf0.01 — simulator-sized,
-    // scripts/et_sim.py), and statePartitions=2 (10 micro-batches pay
-    // per-partition commit 10×, unlike the single-drain gates' 8). A
-    // 6 h lease against per-user
-    // day-scale silences evicts leases mid-stream, so a wrong watermark
-    // floor, a wrong strictness on the timer compare, or a lease
-    // regressing on a late batch all hash-mismatch.
-    //
-    // stream_locf_et: eviction observed through the CARRY — a key quiet
-    // past the lease forgets its last observation, so the first rows
-    // after a long-enough silence carry null (or only in-batch values)
-    // instead of the stale pre-silence carry. value is deterministically
-    // nulled on event_id % 3 = 0 (both sides) so the carry is load-
-    // bearing; the oracle replays watermark/lease/segment arithmetic in
-    // window SQL (validated against the exact engine-semantics simulator
-    // at sf0.001/0.01/0.1 before being pinned here).
-    "stream_locf_et" -> ((s, dir) => {
-      import graft.streaming.Streams
-      import s.implicits._
-      val ev = etReplayStream(s, dir, nullifyThirds = true)
-      val name = "stream_locf_et_" + java.lang.Long.toHexString(System.nanoTime())
-      Streams.runToMemory(
-          Streams.locfEnrich(ev,
-            eventTimeTtl = Some(java.time.Duration.ofHours(6))).toDF(),
-          name, statePartitions = Some(2), availableNow = true)
-        .select(col("event_id"), col("user_id"), col("ts").as("ts_us"),
-          col("value"), col("carried"))
-        .orderBy("event_id")
-    }),
-
-    // stream_locf_et_tws: the same event-time eviction on the
-    // transformWithState tier — a real per-key event-time timer on
-    // RocksDB whose firing CLEARS the carry (handleExpiredTimer), so a
-    // key quiet past the lease forgets its carry exactly like the
-    // flatMapGroupsWithState op. Same staged replay, same data-clock
-    // oracle: the TWS timer path gets the hash-grade evidence the
-    // legacy tier got (r14 verdict: "the TWS timer path deserves the
-    // same").
-    "stream_locf_et_tws" -> ((s, dir) => {
-      import graft.streaming.Streams
-      import s.implicits._
-      val ev = etReplayStream(s, dir, nullifyThirds = true)
-      val name = "stream_locf_et_tws_" + java.lang.Long.toHexString(System.nanoTime())
-      Streams.withRocksDbProvider(s) {
-        Streams.runToMemory(
-          Streams.locfEnrichTws(ev,
-            eventTimeTtl = Some(java.time.Duration.ofHours(6))).toDF(),
-          name, statePartitions = Some(2), availableNow = true)
-      }
-        .select(col("event_id"), col("user_id"), col("ts").as("ts_us"),
-          col("value"), col("carried"))
-        .orderBy("event_id")
-    }),
-
-    // stream_locf_et_tws_restart: the SAME op and staged replay as
-    // stream_locf_et_tws, but the query is KILLED after the first half
-    // of the replay days and a new incarnation recovers from the
-    // checkpoint (RocksDB state + armed event-time timers + watermark)
-    // before the remaining days arrive — through the fault-tolerant
-    // file sink, since the memory sink doesn't survive a restart
-    // (r17 verdict #5: the restart was spec-pinned but never
-    // oracle-gated). The oracle is stream_locf_et's lease replay PLUS
-    // the one semantic a restart adds: the dying incarnation's final
-    // AvailableNow batch is a key-silent watermark sweep that fires any
-    // lease strictly below the first half's max-ts watermark with no
-    // data to re-arm it — modeled as an extra segment boundary at the
-    // split ordinal, so recovery fidelity AND the sweep's lease
-    // arithmetic are both hashed.
-    "stream_locf_et_tws_restart" -> ((s, dir) => {
-      import graft.streaming.Streams
-      import s.implicits._
-      val chunks = etReplayChunkDir(s, dir, nullifyThirds = true)
-      val schema = StructType(Seq(
-        StructField("user_id", LongType), StructField("event_id", LongType),
-        StructField("ts", LongType), StructField("value", DoubleType)))
-      Streams.withRocksDbProvider(s) {
-        Streams.drainWithCheckpointRestart(s, chunks, schema,
-            statePartitions = 2) { df =>
-          Streams.locfEnrichTws(df.as[Streams.ObsEvent],
-            eventTimeTtl = Some(java.time.Duration.ofHours(6))).toDF()
-        }
-      }
-        .select(col("event_id"), col("user_id"), col("ts").as("ts_us"),
-          col("value"), col("carried"))
-        .orderBy("event_id")
-    }),
-
-    // stream_cdc_et: eviction observed DIRECTLY — latestStateChanges
-    // emits a DELETE tombstone carrying the dying winner when a key's
-    // event-time lease expires (the Kafka-compaction/TTL-stream record
-    // shape), so the eviction set itself is hashed, not inferred. The
-    // oracle replays upserts as the per-(key, day) argmax (in-order
-    // delivery makes every data bucket strictly advance the winner) and
-    // deletes by the lease rule between consecutive data buckets plus
-    // the final-watermark sweep (Spark's extra post-backlog batch).
-    "stream_cdc_et" -> ((s, dir) => {
-      import graft.streaming.Streams
-      val ev = etReplayStream(s, dir, nullifyThirds = false)
-      val name = "stream_cdc_et_" + java.lang.Long.toHexString(System.nanoTime())
-      Streams.runToMemory(
-          Streams.latestStateChanges(ev, java.time.Duration.ofHours(6)).toDF(),
-          name,
-          org.apache.spark.sql.streaming.OutputMode.Update(),
-          statePartitions = Some(2), availableNow = true)
-        .select(col("user_id"), col("ts").as("ts_us"), col("event_id"),
-          col("value"), col("op"))
-        .orderBy("user_id", "ts_us", "event_id", "op")
-    }),
-
-    // stream_cdc_et_tws: the same tombstone feed on the
-    // transformWithState tier — a real per-key event-time timer on
-    // RocksDB whose firing EMITS the dying winner as a DELETE tombstone
-    // (latestStateChangesTws.handleExpiredTimer), completing the TWS
-    // event-time matrix's timer-EMITS-tombstone cell (r15 verdict #1).
-    // Same staged replay, same oracle: the eviction set itself is
-    // hashed on both state tiers.
-    "stream_cdc_et_tws" -> ((s, dir) => {
-      import graft.streaming.Streams
-      import s.implicits._
-      val ev = etReplayStream(s, dir, nullifyThirds = false)
-      val name = "stream_cdc_et_tws_" + java.lang.Long.toHexString(System.nanoTime())
-      Streams.withRocksDbProvider(s) {
-        Streams.runToMemory(
-          Streams.latestStateChangesTws(ev, java.time.Duration.ofHours(6)).toDF(),
-          name,
-          org.apache.spark.sql.streaming.OutputMode.Update(),
-          statePartitions = Some(2), availableNow = true)
-      }
-        .select(col("user_id"), col("ts").as("ts_us"), col("event_id"),
-          col("value"), col("op"))
-        .orderBy("user_id", "ts_us", "event_id", "op")
-    }),
-
-    // stream_cdc_et_tws_restart: the CDC changelog killed mid-backlog
-    // and recovered — the third restart cell (r18 verdict #3), covering
-    // the production-critical case the locf/episodes cells don't: state
-    // expiry that EMITS a tombstone ROW across the seam. Unlike
-    // episodes (where the seam sweep is provably output-neutral), the
-    // dying incarnation's key-silent final-watermark sweep here FIRES
-    // any armed lease strictly below the first half's max-ts watermark,
-    // emitting that key's winner as an EXTRA delete the single-run feed
-    // never produces (the following upsert re-arms fresh state) — so
-    // the oracle is stream_cdc_et's replay plus one extra sweep term at
-    // the split ordinal. Matching it proves both directions: leases the
-    // seam spares must survive recovery verbatim (lost state ⇒ missing
-    // later tombstones), and the seam sweep itself must fire per the
-    // lease rule (over-resurrected state ⇒ missing seam tombstones).
-    // Append operator mode: every CdcChange row is an append-only
-    // change RECORD, the changelog-into-a-log-sink production shape.
-    "stream_cdc_et_tws_restart" -> ((s, dir) => {
-      import graft.streaming.Streams
-      import s.implicits._
-      val chunks = etReplayChunkDir(s, dir, nullifyThirds = false)
-      val schema = StructType(Seq(
-        StructField("user_id", LongType), StructField("event_id", LongType),
-        StructField("ts", LongType), StructField("value", DoubleType)))
-      Streams.withRocksDbProvider(s) {
-        Streams.drainWithCheckpointRestart(s, chunks, schema,
-            statePartitions = 2) { df =>
-          Streams.latestStateChangesTws(df.as[Streams.ObsEvent],
-            java.time.Duration.ofHours(6),
-            outputMode = org.apache.spark.sql.streaming.OutputMode.Append()).toDF()
-        }
-      }
-        .select(col("user_id"), col("ts").as("ts_us"), col("event_id"),
-          col("value"), col("op"))
-        .orderBy("user_id", "ts_us", "event_id", "op")
-    }),
-
-    // stream_transitions_et: eviction observed through the CHAIN — a key
-    // quiet past the lease forgets its previous-event marker, so the
-    // first event after a long-enough silence starts a fresh chain
-    // (emits NO pair) instead of pairing with the stale predecessor.
-    // Raw (user_id, from_type, to_type) pairs are hashed (a
-    // deterministic multiset under the driver's sort-and-hash); at
-    // sf0.01 the 6 h lease suppresses ~92 pairs vs a no-eviction run
-    // (scripts/et_sim.py), so a wrong timer compare or a lease
-    // regressing on a late batch hash-mismatches. Oracle: same segment
-    // arithmetic as stream_locf_et minus the non-null clause (the
-    // marker exists after ANY batch), pairs = in-segment lag.
-    "stream_transitions_et" -> ((s, dir) => {
-      import graft.streaming.Streams
-      import s.implicits._
-      val ev = etTypedReplayStream(s, dir)
-      val name = "stream_transitions_et_" + java.lang.Long.toHexString(System.nanoTime())
-      Streams.runToMemory(
-          Streams.transitionsStateful(ev,
-            eventTimeTtl = Some(java.time.Duration.ofHours(6))).toDF(),
-          name, statePartitions = Some(2), availableNow = true)
-        .select(col("user_id"), col("from_type"), col("to_type"))
-        .orderBy("user_id", "from_type", "to_type")
-    }),
-
-    // stream_transitions_et_tws: the same marker eviction on the
-    // transformWithState tier — a real per-key event-time timer on
-    // RocksDB whose firing CLEARS the previous-event marker
-    // (TransitionsProcessor.handleExpiredTimer), completing the TWS
-    // event-time matrix's marker-clear-on-the-typed-path cell (r15
-    // verdict #1). Same staged typed replay, same data-clock oracle.
-    "stream_transitions_et_tws" -> ((s, dir) => {
-      import graft.streaming.Streams
-      import s.implicits._
-      val ev = etTypedReplayStream(s, dir)
-      val name = "stream_transitions_et_tws_" + java.lang.Long.toHexString(System.nanoTime())
-      Streams.withRocksDbProvider(s) {
-        Streams.runToMemory(
-          Streams.transitionsStatefulTws(ev,
-            eventTimeTtl = Some(java.time.Duration.ofHours(6))).toDF(),
-          name, statePartitions = Some(2), availableNow = true)
-      }
-        .select(col("user_id"), col("from_type"), col("to_type"))
-        .orderBy("user_id", "from_type", "to_type")
-    }),
-
-    "stream_seen" -> ((s, dir) => {
-      import graft.streaming.Streams
-      val src = docsStream(s, dir)
-        .filter(pmod(col("doc_id"), lit(7)) === 0)
-      val history = t(s, dir, "documents").filter(pmod(col("doc_id"), lit(7)) =!= 0)
-      val flagged = Streams.flagSeenInStatic(src, "text", history, "text")
-        .select("doc_id", "in_history")
-      val name = "stream_seen_" + java.lang.Long.toHexString(System.nanoTime())
-      Streams.runToMemory(flagged, name, statePartitions = Some(8))
-        .orderBy("doc_id")
-    }),
-
     // §2.11 — payload "resize" (stride decimation): scalar stats carry a
     // full hex-reconstruction oracle; identity below the target size.
     "multimodal_resize" -> ((s, dir) =>
@@ -4020,116 +3258,6 @@ object SparkEntry {
         .toDF()
         .select("media_id", "n_bytes", "resized_n", "resized_sum")
         .orderBy("media_id")),
-
-    // §7.6 — second streaming gate: watermarked tumbling-window counts
-    // over the file-source event stream, run to completion in Complete
-    // mode (every window emitted regardless of the final watermark), so
-    // the result is exactly the batch GROUP BY — full value oracle.
-    "stream_windows" -> ((s, dir) => {
-      import graft.streaming.Streams
-      val counts = Streams.windowedCounts(
-        Streams.withEventTime(eventsStream(s, dir), "ts"),
-        "event_time", "30 minutes", "1 hour", Seq("event_type"))
-        .select(
-          unix_micros(col("window.start")).as("win_start_us"),
-          col("event_type"), col("n_events"))
-      val name = "stream_windows_" + java.lang.Long.toHexString(System.nanoTime())
-      Streams.runToMemory(counts, name,
-          org.apache.spark.sql.streaming.OutputMode.Complete(),
-          statePartitions = Some(8))
-        .orderBy("win_start_us", "event_type")
-    }),
-
-    // The UPDATE-output twin of stream_windows (the same
-    // 100×-cardinality argument as stream_topk_update: per trigger,
-    // only windows whose count CHANGED are emitted — Complete rewrites
-    // every window ever seen). Window counts are monotone under
-    // accumulation, so the max-per-window fold on the update stream is
-    // the KV-sink upsert and converges to the Complete-mode table.
-    "stream_windows_update" -> ((s, dir) => {
-      import graft.streaming.Streams
-      val counts = Streams.windowedCounts(
-        Streams.withEventTime(eventsStream(s, dir), "ts"),
-        "event_time", "30 minutes", "1 hour", Seq("event_type"))
-        .select(
-          unix_micros(col("window.start")).as("win_start_us"),
-          col("event_type"), col("n_events"))
-      val name = "stream_winu_" + java.lang.Long.toHexString(System.nanoTime())
-      Streams.runToMemory(counts, name,
-          org.apache.spark.sql.streaming.OutputMode.Update(),
-          statePartitions = Some(8))
-        .groupBy(col("win_start_us"), col("event_type"))
-        .agg(max(col("n_events")).as("n_events"))
-        .orderBy("win_start_us", "event_type")
-    }),
-
-    // §7.6 — third streaming gate: gap-based session windows over the
-    // event stream (Complete mode). session_window's merge semantics
-    // (events within the gap coalesce) are exactly the batch sessionize
-    // grouping, so per-session (user, start, n) hash-matches the same
-    // lag-gap SQL the batch gate uses — streaming/batch sessionization
-    // parity, value-checked.
-    "stream_sessions" -> ((s, dir) => {
-      import graft.streaming.Streams
-      val sessions = Streams.sessionWindows(
-        Streams.withEventTime(eventsStream(s, dir), "ts"),
-        "event_time", "30 minutes", "30 minutes", Seq("user_id"))
-        .select(
-          col("user_id"),
-          unix_micros(col("session_window.start")).as("start_us"),
-          col("n_events"))
-      val name = "stream_sessions_" + java.lang.Long.toHexString(System.nanoTime())
-      Streams.runToMemory(sessions, name,
-          org.apache.spark.sql.streaming.OutputMode.Complete(),
-          statePartitions = Some(8))
-        .orderBy("user_id", "start_us")
-    }),
-
-    // §7.6 — fifth streaming gate: windowed corpus-quality monitor over
-    // a document stream (event time synthesized from doc_id, one doc a
-    // minute → hourly windows). Per (window × lang): doc count, exact
-    // token sum, Gopher-keep count — the crawl-drift alarm, value-parity
-    // with the batch GROUP BY oracle because every aggregate is an exact
-    // int64 sum of deterministic kernel metrics.
-    "stream_quality" -> ((s, dir) => {
-      import graft.streaming.Streams
-      val src = docsStream(s, dir)
-        .filter(col("doc_id").isNotNull)
-        .withColumn("event_time", timestamp_micros(col("doc_id") * lit(60000000L)))
-      val prof = Streams.windowedQualityProfile(
-        src, "event_time", "30 minutes", "1 hour", Seq("lang"), "text")
-        .select(
-          unix_micros(col("window.start")).as("win_start_us"),
-          col("lang"), col("n_docs"), col("n_tokens"), col("n_keep"))
-      val name = "stream_quality_" + java.lang.Long.toHexString(System.nanoTime())
-      Streams.runToMemory(prof, name,
-          org.apache.spark.sql.streaming.OutputMode.Complete(),
-          statePartitions = Some(8))
-        .orderBy("win_start_us", "lang")
-    }),
-
-    // §7.6 — streaming drift monitor: per-day windowed value histogram
-    // (stateful state = windows × bins+2 rows, data-independent) scored
-    // as PSI against the whole-corpus reference batch-side — the
-    // streaming twin of drift_psi. Counting is exact int64 in the
-    // stream; the score arithmetic runs on the windows×bins sink table.
-    "stream_drift" -> ((s, dir) => {
-      import graft.streaming.Streams
-      val (lo, hi, bins) = (0.0, 500.0, 20)
-      val counts = Streams.windowedValueHistogram(
-        Streams.withEventTime(eventsStream(s, dir), "ts"),
-        "event_time", "1 hour", "1 day", "value", lo, hi, bins)
-        .select(
-          unix_micros(col("window.start")).as("win_start_us"),
-          col("bin"), col("n"))
-      val name = "stream_drift_" + java.lang.Long.toHexString(System.nanoTime())
-      val sink = Streams.runToMemory(counts, name,
-        org.apache.spark.sql.streaming.OutputMode.Complete(),
-        statePartitions = Some(8))
-      val ref = graft.ops.Profiling.histogram(events(s, dir), "value", lo, hi, bins)
-      graft.ops.Profiling.psiFromCounts(sink, ref, Seq("win_start_us"), bins)
-        .orderBy("win_start_us", "bin")
-    }),
 
     // §2.11 — stubbed decode / feature extraction over binary payloads.
     // Scalar columns only: the driver's pandas comparator cannot sort/hash
@@ -4451,117 +3579,6 @@ object SparkEntry {
         .select(col("user_id"), sH.as("ivs"), (sH + durH).as("ive"))
       graft.ops.Intervals.mergeIntervals(iv, "user_id", "ivs", "ive", gap = 2L)
         .orderBy("user_id", "island")
-    }),
-
-    // Interval algebra §D-stream — the same episode construction as a
-    // stateful stream (one open episode per key in state; Append emits
-    // only CLOSED episodes). Oracle = the batch merge minus each key's
-    // trailing island.
-    "stream_episodes" -> ((s, dir) => {
-      import graft.streaming.Streams
-      import s.implicits._
-      val durH = lit(1L) + (abs(floor(col("value"))).cast("long") % lit(6L))
-      val sH = expr("ts DIV 3600000000")
-      val iv = eventsStream(s, dir)
-        .filter(col("user_id").isNotNull && col("ts").isNotNull &&
-          col("value").isNotNull)
-        .select(col("user_id"), sH.as("ivs"), (sH + durH).as("ive"))
-        .as[Streams.IntervalRow]
-      val name = "stream_episodes_" + java.lang.Long.toHexString(System.nanoTime())
-      Streams.runToMemory(Streams.episodeState(iv, gap = 2L).toDF(), name,
-          statePartitions = Some(8))
-        .orderBy("user_id", "mstart")
-    }),
-
-    // stream_episodes on the transformWithState tier (round 13): same
-    // fold in a ValueState on RocksDB, timer machinery dormant (no
-    // idleFlush) — Append emits exactly the legacy gate's closed
-    // episodes, so the merge-minus-trailing oracle verifies the path.
-    "stream_episodes_tws" -> ((s, dir) => {
-      import graft.streaming.Streams
-      import s.implicits._
-      val durH = lit(1L) + (abs(floor(col("value"))).cast("long") % lit(6L))
-      val sH = expr("ts DIV 3600000000")
-      val iv = eventsStream(s, dir)
-        .filter(col("user_id").isNotNull && col("ts").isNotNull &&
-          col("value").isNotNull)
-        .select(col("user_id"), sH.as("ivs"), (sH + durH).as("ive"))
-        .as[Streams.IntervalRow]
-      val name = "stream_episodes_tws_" + java.lang.Long.toHexString(System.nanoTime())
-      Streams.withRocksDbProvider(s) {
-        Streams.runToMemory(Streams.episodeStateTws(iv, gap = 2L).toDF(), name,
-          statePartitions = Some(8))
-      }
-        .orderBy("user_id", "mstart")
-    }),
-
-    // Round 15 — event-time SESSIONIZATION, hash-gated (the r14
-    // verdict's sanctioned growth): episodeState's eventTimeIdleFlush is
-    // the subtlest event-time semantics — the flush produces OUTPUT, so
-    // wall-clock flushing changes the result set, not just state size.
-    // Intervals are FIXED-LENGTH (ivs = ts, ive = ts + 2 h) so per-key
-    // delivery is ivs- AND ive-monotone under the ive-day-bucket replay,
-    // which gives the flush rule a closed-form window oracle: break the
-    // per-key sequence at gap breaks OR silent-batch flushes (lease on
-    // the previous interval's reach — fixed length makes reach =
-    // lag(ive)), emit every episode except each key's trailing one,
-    // which emits iff the final watermark flushes it (340 watermark
-    // flushes at sf0.01 — simulator-sized like its siblings). A flush
-    // firing one batch early/late, a lease regressing, or the trailing
-    // open episode leaking all hash-mismatch.
-    "stream_episodes_et" -> ((s, dir) => {
-      import graft.streaming.Streams
-      val iv = etEpisodeReplayStream(s, dir)
-      val name = "stream_episodes_et_" + java.lang.Long.toHexString(System.nanoTime())
-      Streams.runToMemory(
-          Streams.episodeState(iv, gap = 7_200_000_000L,
-            eventTimeIdleFlush = Some(java.time.Duration.ofHours(6))).toDF(),
-          name, statePartitions = Some(2), availableNow = true)
-        .orderBy("user_id", "mstart")
-    }),
-
-    // stream_episodes_et_tws: the same event-time flush on the
-    // transformWithState tier — the timer-EMITS expiry behavior
-    // (handleExpiredTimer flushes the open episode downstream), so the
-    // fired-timer output itself is hashed against the same data-clock
-    // oracle. With stream_locf_et_tws (the timer-CLEARS behavior) this
-    // hash-gates both expiry shapes of the TWS event-time timer path.
-    "stream_episodes_et_tws" -> ((s, dir) => {
-      import graft.streaming.Streams
-      val iv = etEpisodeReplayStream(s, dir)
-      val name = "stream_episodes_et_tws_" + java.lang.Long.toHexString(System.nanoTime())
-      Streams.withRocksDbProvider(s) {
-        Streams.runToMemory(
-          Streams.episodeStateTws(iv, gap = 7_200_000_000L,
-            eventTimeIdleFlush = Some(java.time.Duration.ofHours(6))).toDF(),
-          name, statePartitions = Some(2), availableNow = true)
-      }
-        .orderBy("user_id", "mstart")
-    }),
-
-    // stream_episodes_et_tws_restart: the timer-EMITS twin of
-    // stream_locf_et_tws_restart — the query is killed after half the
-    // replay days and recovered from the checkpoint, and the dying
-    // incarnation's key-silent final-watermark sweep FIRES the flush
-    // timers it covers, emitting those episodes truncated at the seam
-    // (content = exactly the phase-1 merges — the recovered state must
-    // carry the open episode's mstart/mend/count verbatim). Oracle =
-    // stream_episodes_et's segment replay plus the seam break at the
-    // split ordinal; together with the locf restart cell this hash-
-    // gates BOTH expiry behaviors across a real recovery.
-    "stream_episodes_et_tws_restart" -> ((s, dir) => {
-      import graft.streaming.Streams
-      import s.implicits._
-      val chunks = etEpisodeChunkDir(s, dir)
-      Streams.withRocksDbProvider(s) {
-        Streams.drainWithCheckpointRestart(s, chunks, etEpisodeSchema,
-            statePartitions = 2) { df =>
-          Streams.episodeStateTws(df.as[Streams.IntervalRow],
-            gap = 7_200_000_000L,
-            eventTimeIdleFlush = Some(java.time.Duration.ofHours(6))).toDF()
-        }
-      }
-        .orderBy("user_id", "mstart")
     }),
 
     // Interval algebra §E — readmission profile over the §D episodes:
@@ -5085,22 +4102,6 @@ object SparkEntry {
         86400L * 1000000L)
         .orderBy("cohort", "offset")),
 
-    // Streaming twin of anomaly_zscore: profile trained batch-side,
-    // stream scored via a STATELESS stream-static join through the
-    // shared scoring definition — ingestion order cannot matter, so the
-    // oracle is literally the batch gate's SQL.
-    "stream_anomaly" -> ((s, dir) => {
-      import graft.streaming.Streams
-      val profile = graft.ops.Profiling.groupStats(
-        events(s, dir), "user_id", "value")
-      val scored = Streams.zscoreEnrichStatic(
-        eventsStream(s, dir), "user_id", "value", profile)
-        .select("event_id", "user_id", "value", "group_n", "zscore")
-      val name = "stream_anomaly_" + java.lang.Long.toHexString(System.nanoTime())
-      Streams.runToMemory(scored, name, statePartitions = Some(8))
-        .orderBy("event_id")
-    }),
-
     // §2.11 — bigram continuation table (count-based Markov
     // autocomplete): per frequent prefix, the argmax successor with its
     // exact conditional probability; ties break lexicographically.
@@ -5175,56 +4176,6 @@ object SparkEntry {
         "user_id", "ts", "event_type", "event_id")
         .orderBy("from_type", "to_type")),
 
-    // Stateful-streaming twin: per-key previous-event state emits the
-    // transition pairs incrementally (flatMapGroupsWithState, in-batch
-    // (ts, event_id) sort), batch-side fold to the same matrix — the
-    // event_transitions oracle verbatim.
-    "stream_transitions" -> ((s, dir) => {
-      import graft.streaming.Streams
-      import s.implicits._
-      val ev = eventsStream(s, dir)
-        .filter(col("user_id").isNotNull && col("ts").isNotNull &&
-          col("event_type").isNotNull)
-        .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
-        .as[Streams.TypedEvent]
-      val name = "stream_transitions_" + java.lang.Long.toHexString(System.nanoTime())
-      val sink = Streams.runToMemory(
-        Streams.transitionsStateful(ev).toDF(), name, statePartitions = Some(8))
-      val wFrom = Window.partitionBy(col("from_type"))
-      sink.groupBy(col("from_type"), col("to_type"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("n_from", sum(col("n")).over(wFrom))
-        .withColumn("p",
-          round(col("n").cast("double") / col("n_from").cast("double"), 6))
-        .orderBy("from_type", "to_type")
-    }),
-
-    // stream_transitions on the transformWithState tier (round 14): the
-    // previous-event marker in a typed ValueState on RocksDB — identical
-    // single-batch answer, so the legacy gate's lag-window oracle
-    // verifies the new-API marker path end to end.
-    "stream_transitions_tws" -> ((s, dir) => {
-      import graft.streaming.Streams
-      import s.implicits._
-      val ev = eventsStream(s, dir)
-        .filter(col("user_id").isNotNull && col("ts").isNotNull &&
-          col("event_type").isNotNull)
-        .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
-        .as[Streams.TypedEvent]
-      val name = "stream_transitions_tws_" + java.lang.Long.toHexString(System.nanoTime())
-      val sink = Streams.withRocksDbProvider(s) {
-        Streams.runToMemory(
-          Streams.transitionsStatefulTws(ev).toDF(), name, statePartitions = Some(8))
-      }
-      val wFrom = Window.partitionBy(col("from_type"))
-      sink.groupBy(col("from_type"), col("to_type"))
-        .agg(count(lit(1)).as("n"))
-        .withColumn("n_from", sum(col("n")).over(wFrom))
-        .withColumn("p",
-          round(col("n").cast("double") / col("n_from").cast("double"), 6))
-        .orderBy("from_type", "to_type")
-    }),
-
     // Stride-interleaved mixture order: per-source mix60 shuffle, then
     // round-robin across sources via the distributed prefix-sum rank —
     // consecutive same-source runs bounded by the live-source count.
@@ -5258,44 +4209,6 @@ object SparkEntry {
       graft.ops.Profiling.robustZscores(t(s, dir, "events"), "user_id", "value")
         .select(col("event_id"), col("user_id"), col("value"), col("robust_z"))
         .orderBy("event_id")),
-
-    // Streaming heavy hitters: Complete-mode running counts per user in
-    // the stream, top-10 taken batch-side — the streaming twin of
-    // heavy_hitters, sharing its oracle verbatim.
-    "stream_topk" -> ((s, dir) => {
-      import graft.streaming.Streams
-      val counts = eventsStream(s, dir)
-        .groupBy(col("user_id")).agg(count(lit(1)).as("n_events"))
-      val name = "stream_topk_" + java.lang.Long.toHexString(System.nanoTime())
-      Streams.runToMemory(counts, name,
-          org.apache.spark.sql.streaming.OutputMode.Complete(),
-          statePartitions = Some(8))
-        .orderBy(col("n_events").desc, col("user_id")).limit(10)
-    }),
-
-    // The UPDATE-output twin of stream_topk — the 100×-cardinality-safe
-    // shape: Complete mode rewrites the ENTIRE result table every
-    // trigger (fine at 2.5k users, hostile at 250M keys), Update mode
-    // emits only the keys whose count changed in that micro-batch.
-    // State is identical (one count per key, bounded by distinct keys);
-    // what shrinks is the per-trigger OUTPUT. A per-key running count is
-    // monotonically nondecreasing, so the final total = max over the
-    // emitted updates — the fold the memory-sink readback applies here,
-    // and exactly the upsert a real KV/Delta sink would perform per
-    // update row. Oracle: the same batch SQL as stream_topk — output
-    // mode must not change what the totals converge to.
-    "stream_topk_update" -> ((s, dir) => {
-      import graft.streaming.Streams
-      val counts = eventsStream(s, dir)
-        .groupBy(col("user_id")).agg(count(lit(1)).as("n_events"))
-      val name = "stream_topku_" + java.lang.Long.toHexString(System.nanoTime())
-      Streams.runToMemory(counts, name,
-          org.apache.spark.sql.streaming.OutputMode.Update(),
-          statePartitions = Some(8))
-        .groupBy(col("user_id"))
-        .agg(max(col("n_events")).as("n_events"))
-        .orderBy(col("n_events").desc, col("user_id")).limit(10)
-    }),
 
     // Two-proportion A/B readout: user-level conversion (any purchase)
     // under a parity assignment, exact counts → rates/lift/pooled z
@@ -5335,7 +4248,7 @@ object SparkEntry {
       |), sz AS (SELECT doc_id, len(s) AS n FROM sh)""".stripMargin
 
   /** [[shingleInvCte]] + the within-corpus (a < b) pair intersection. */
-  private val shingleCte =
+  private[graft] val shingleCte =
     shingleInvCte +
       """, pair_inter AS (
         |  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS i
@@ -5367,7 +4280,77 @@ object SparkEntry {
         |SELECT a AS doc_id, CAST(min(b) AS BIGINT) AS cluster
         |FROM reach GROUP BY a""".stripMargin
 
-  private def jaccardSql(threshold: Double): String =
+  /** Batch oracles a streaming twin in [[graft.streaming.StreamGates]]
+    * shares verbatim: streaming must not change the answer.
+    */
+  private[graft] val asofJoinSql: String =
+    """WITH vd AS (
+      |  SELECT user_id, epoch_us(ts) AS vts, value AS view_value,
+      |    row_number() OVER (PARTITION BY user_id, epoch_us(ts) ORDER BY event_id) AS rn
+      |  FROM events WHERE event_type = 'view'
+      |), v AS (SELECT user_id, vts, view_value FROM vd WHERE rn = 1),
+      |c AS (
+      |  SELECT event_id, user_id, epoch_us(ts) AS ts_us
+      |  FROM events WHERE event_type = 'click')
+      |SELECT c.event_id, c.user_id, c.ts_us, v.view_value
+      |FROM c ASOF LEFT JOIN v
+      |  ON c.user_id = v.user_id AND v.vts <= c.ts_us
+      |ORDER BY c.event_id""".stripMargin
+
+  private[graft] val dedupIncrementalSql: String =
+    """SELECT i.doc_id,
+      |  coalesce(md5(i.text) IN (
+      |    SELECT md5(text) FROM documents
+      |    WHERE doc_id % 7 <> 0 AND text IS NOT NULL), false) AS in_history
+      |FROM documents i WHERE i.doc_id % 7 = 0
+      |ORDER BY doc_id""".stripMargin
+
+  private[graft] val anomalyZscoreSql: String =
+    """WITH x AS (
+      |  SELECT event_id, user_id, value,
+      |    CAST(round(value * 100, 0) AS BIGINT) AS xv
+      |  FROM events WHERE user_id IS NOT NULL),
+      |s AS (
+      |  SELECT user_id, CAST(count(value) AS BIGINT) AS group_n,
+      |    sum(CAST(xv AS HUGEINT)) AS sx,
+      |    sum(CAST(xv AS HUGEINT) * xv) AS qx
+      |  FROM x GROUP BY user_id)
+      |SELECT x.event_id, x.user_id, x.value, s.group_n,
+      |  CASE WHEN s.group_n >= 2 AND x.value IS NOT NULL
+      |        AND (s.group_n * s.qx - s.sx * s.sx) > 0
+      |       THEN round(CAST(x.xv * s.group_n - s.sx AS DOUBLE)
+      |         / sqrt(CAST((s.group_n * s.qx - s.sx * s.sx) * s.group_n
+      |                     AS DOUBLE)
+      |                / CAST(s.group_n - 1 AS DOUBLE)), 6) END AS zscore
+      |FROM x JOIN s ON s.user_id = x.user_id
+      |ORDER BY event_id""".stripMargin
+
+  private[graft] val heavyHittersSql: String =
+    """SELECT user_id, CAST(count(*) AS BIGINT) AS n_events
+      |FROM events GROUP BY user_id
+      |ORDER BY n_events DESC, user_id LIMIT 10""".stripMargin
+
+  private[graft] val eventTransitionsSql: String =
+    """WITH e AS (
+      |  SELECT user_id, epoch_us(ts) AS tus, event_id, event_type
+      |  FROM events
+      |  WHERE user_id IS NOT NULL AND ts IS NOT NULL
+      |    AND event_type IS NOT NULL),
+      |p AS (
+      |  SELECT event_type AS from_type,
+      |    lead(event_type) OVER (PARTITION BY user_id
+      |      ORDER BY tus, event_id) AS to_type
+      |  FROM e),
+      |g AS (
+      |  SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n
+      |  FROM p WHERE to_type IS NOT NULL GROUP BY 1, 2)
+      |SELECT from_type, to_type, n,
+      |  CAST(sum(n) OVER (PARTITION BY from_type) AS BIGINT) AS n_from,
+      |  round(CAST(n AS DOUBLE)
+      |    / CAST(sum(n) OVER (PARTITION BY from_type) AS DOUBLE), 6) AS p
+      |FROM g ORDER BY from_type, to_type""".stripMargin
+
+  private[graft] def jaccardSql(threshold: Double): String =
     shingleCte +
       s"""SELECT id_a, id_b,
          |  round(i * 1.0 / (sa.n + sb.n - i), 6) AS jaccard
@@ -5492,13 +4475,13 @@ object SparkEntry {
   private val ntokSql = s"""len(string_split_regex($strippedSql, '\\s+'))"""
   // true token count: split of an empty string yields [''] (len 1), the
   // Spark side yields 0 — guard like TextStats does
-  private val tok0Sql = s"CASE WHEN length($strippedSql) = 0 THEN 0 ELSE $ntokSql END"
+  private[graft] val tok0Sql = s"CASE WHEN length($strippedSql) = 0 THEN 0 ELSE $ntokSql END"
   /** The Gopher rule battery as one SQL predicate — shared by the
     * gopher_filter / stream_quality / corpus_pipeline oracles so they
     * cannot drift from each other (and must stay in lock-step with
     * TextStats.gopherKeep).
     */
-  private lazy val gopherKeepSql: String =
+  private[graft] lazy val gopherKeepSql: String =
     s"""$tok0Sql BETWEEN 50 AND 100000
        |  AND 3 * $tok0Sql <= length(text) AND length(text) <= 10 * $tok0Sql
        |  AND 5 * $punctSql <= length(text)
@@ -5763,38 +4746,6 @@ object SparkEntry {
   def oracleSql: Map[String, String] = {
     val base = oracleSqlMain
     Gate.merge(base ++ Map(
-      // the transformWithState gates answer the SAME question as their
-      // legacy twins on a different state backend (round 13) — one
-      // oracle body each, aliased rather than duplicated
-      "stream_cdc_tws" -> base("stream_cdc"),
-      "stream_neardup_tws" -> base("stream_neardup"),
-      "stream_episodes_tws" -> base("stream_episodes"),
-      // round-14 twins completing the TWS tier
-      "stream_locf_tws" -> base("stream_locf"),
-      "stream_transitions_tws" -> base("stream_transitions"),
-      // round-15 event-time eviction twins: the TWS timer path answers
-      // the same data-clock question as the flatMapGroupsWithState tier
-      // — timer-CLEARS (locf carry forgotten) and timer-EMITS (episode
-      // flushed) both hashed against the one validated replay oracle
-      "stream_locf_et_tws" -> base("stream_locf_et"),
-      "stream_episodes_et_tws" -> base("stream_episodes_et"),
-      // round-16 twins completing the TWS event-time matrix: the
-      // timer-EMITS-tombstone (CDC) and marker-clear (typed transitions)
-      // cells answer the same data-clock question as their
-      // flatMapGroupsWithState twins over the same staged replay
-      "stream_cdc_et_tws" -> base("stream_cdc_et"),
-      "stream_transitions_et_tws" -> base("stream_transitions_et"),
-      // round-18 timer-EMITS restart cell: killed after half the replay
-      // days and recovered mid-backlog. Unlike locf, the restart's seam
-      // sweep is PROVABLY output-neutral here: a flush lease can only
-      // expire at the seam if the key's next interval is > gap away
-      // (flush 6 h >= gap 2 h + 2 x interval 2 h forces
-      // ivs - lag(ive) > 4 h > gap), so every seam-flushable pair is
-      // already a gap break — the single-run oracle holds verbatim, and
-      // matching it proves the recovered RocksDB state carries every
-      // seam-straddling open episode's mstart/mend/count bit-exactly (a
-      // lost or mangled episode would split or miscount)
-      "stream_episodes_et_tws_restart" -> base("stream_episodes_et"),
       // r19: the ranged-tail census answers the SAME question as the
       // full-payload census over the SAME staged files — one DuckDB
       // replay, aliased: the tail path must not change one field
@@ -6131,21 +5082,7 @@ object SparkEntry {
         |FROM base b LEFT JOIN reb r ON r.doc_id = b.doc_id
         |ORDER BY b.doc_id NULLS FIRST""".stripMargin),
 
-    "stream_seen" ->
-      """SELECT i.doc_id,
-        |  coalesce(md5(i.text) IN (
-        |    SELECT md5(text) FROM documents
-        |    WHERE doc_id % 7 <> 0 AND text IS NOT NULL), false) AS in_history
-        |FROM documents i WHERE i.doc_id % 7 = 0
-        |ORDER BY doc_id""".stripMargin,
-
-    "dedup_incremental" ->
-      """SELECT i.doc_id,
-        |  coalesce(md5(i.text) IN (
-        |    SELECT md5(text) FROM documents
-        |    WHERE doc_id % 7 <> 0 AND text IS NOT NULL), false) AS in_history
-        |FROM documents i WHERE i.doc_id % 7 = 0
-        |ORDER BY doc_id""".stripMargin,
+    "dedup_incremental" -> dedupIncrementalSql,
 
     "source_quota" ->
       s"""SELECT doc_id, source
@@ -6519,34 +5456,6 @@ object SparkEntry {
         |        0.5 * q * ln(q / ((p + q) / 2)), 6) AS jsd_term
         |FROM shares ORDER BY bin""".stripMargin,
 
-    "stream_drift" ->
-      """WITH ev AS (
-        |  SELECT (epoch_us(ts) // 86400000000) * 86400000000 AS win_start_us,
-        |    CASE WHEN value < 0.0 THEN -1 WHEN value >= 500.0 THEN 20
-        |      ELSE least(CAST(floor(value / 25.0) AS BIGINT), 19) END AS bin
-        |  FROM events WHERE value IS NOT NULL),
-        |wb AS (SELECT win_start_us, bin, count(*) AS n FROM ev GROUP BY 1, 2),
-        |ref AS (SELECT bin, count(*) AS n FROM ev GROUP BY 1),
-        |wins AS (SELECT DISTINCT win_start_us FROM wb),
-        |grid AS (
-        |  SELECT w.win_start_us, b.bin FROM wins w
-        |  CROSS JOIN (SELECT unnest(range(-1, 21)) AS bin) b),
-        |wt AS (SELECT win_start_us, sum(n) AS wt FROM wb GROUP BY 1),
-        |rt AS (SELECT sum(n) AS rt FROM ref),
-        |shares AS (
-        |  SELECT g.win_start_us, g.bin,
-        |    CAST(coalesce(r.n, 0) + 1 AS DOUBLE) / (CAST(rt.rt AS DOUBLE) + 22) AS p,
-        |    CAST(coalesce(wb.n, 0) + 1 AS DOUBLE) / (CAST(wt.wt AS DOUBLE) + 22) AS q
-        |  FROM grid g
-        |  LEFT JOIN wb ON wb.win_start_us = g.win_start_us AND wb.bin = g.bin
-        |  LEFT JOIN ref r ON r.bin = g.bin
-        |  JOIN wt ON wt.win_start_us = g.win_start_us
-        |  CROSS JOIN rt)
-        |SELECT win_start_us, bin, round(p, 6) AS base_share,
-        |  round(q, 6) AS cur_share,
-        |  round((q - p) * ln(q / p), 6) AS psi_term
-        |FROM shares ORDER BY win_start_us, bin""".stripMargin,
-
     "ks_drift" ->
       """WITH bv AS (
         |  SELECT value AS v FROM events WHERE user_id % 2 = 0 AND value IS NOT NULL),
@@ -6856,19 +5765,7 @@ object SparkEntry {
         |  round(count(conv.user_id) * 100.0 / greatest(count(*), 1), 4) AS conversion_pct
         |FROM vu LEFT JOIN conv ON vu.user_id = conv.user_id""".stripMargin,
 
-    "asof_join" ->
-      """WITH vd AS (
-        |  SELECT user_id, epoch_us(ts) AS vts, value AS view_value,
-        |    row_number() OVER (PARTITION BY user_id, epoch_us(ts) ORDER BY event_id) AS rn
-        |  FROM events WHERE event_type = 'view'
-        |), v AS (SELECT user_id, vts, view_value FROM vd WHERE rn = 1),
-        |c AS (
-        |  SELECT event_id, user_id, epoch_us(ts) AS ts_us
-        |  FROM events WHERE event_type = 'click')
-        |SELECT c.event_id, c.user_id, c.ts_us, v.view_value
-        |FROM c ASOF LEFT JOIN v
-        |  ON c.user_id = v.user_id AND v.vts <= c.ts_us
-        |ORDER BY c.event_id""".stripMargin,
+    "asof_join" -> asofJoinSql,
 
     "asof_forward" ->
       """WITH vd AS (
@@ -6932,10 +5829,7 @@ object SparkEntry {
         |  round(quantile_cont(value, 0.95), 6) AS p95
         |FROM events""".stripMargin,
 
-    "heavy_hitters" ->
-      """SELECT user_id, CAST(count(*) AS BIGINT) AS n_events
-        |FROM events GROUP BY user_id
-        |ORDER BY n_events DESC, user_id LIMIT 10""".stripMargin,
+    "heavy_hitters" -> heavyHittersSql,
 
     "extract_first" ->
       """SELECT vec_id, CAST(embedding[1] AS DOUBLE) AS first_dim,
@@ -7179,14 +6073,6 @@ object SparkEntry {
         |    / greatest(len(lines), 1), 4) AS dup_line_frac
         |FROM l ORDER BY doc_id""".stripMargin,
 
-    "stream_quality" ->
-      s"""SELECT (doc_id // 60) * 3600000000 AS win_start_us, lang,
-         |  CAST(count(*) AS BIGINT) AS n_docs,
-         |  CAST(sum($tok0Sql) AS BIGINT) AS n_tokens,
-         |  CAST(sum(CASE WHEN $gopherKeepSql THEN 1 ELSE 0 END) AS BIGINT) AS n_keep
-         |FROM documents WHERE doc_id IS NOT NULL
-         |GROUP BY 1, 2 ORDER BY win_start_us, lang NULLS FIRST""".stripMargin,
-
     "gopher_filter" ->
       s"""SELECT doc_id, lang, source, n_chars FROM documents
          |WHERE $gopherKeepSql
@@ -7288,490 +6174,6 @@ object SparkEntry {
       """SELECT event_id, user_id, coalesce(value, 0.0) AS value
         |FROM events WHERE user_id IS NOT NULL
         |ORDER BY event_id""".stripMargin,
-
-    "stream_dedup" ->
-      """SELECT DISTINCT user_id, event_type FROM events
-        |ORDER BY user_id NULLS FIRST, event_type NULLS FIRST""".stripMargin,
-
-    "stream_sessions" ->
-      """WITH g AS (
-        |  SELECT user_id, epoch_us(ts) AS tus, event_id,
-        |    lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS prev_us
-        |  FROM events
-        |), marked AS (
-        |  SELECT user_id, tus,
-        |    CASE WHEN prev_us IS NULL OR tus - prev_us > 1800000000 THEN 1 ELSE 0 END AS new_session,
-        |    event_id
-        |  FROM g
-        |), sessions AS (
-        |  SELECT user_id, tus,
-        |    sum(new_session) OVER (PARTITION BY user_id ORDER BY tus, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-        |  FROM marked)
-        |SELECT user_id, CAST(min(tus) AS BIGINT) AS start_us,
-        |  CAST(count(*) AS BIGINT) AS n_events
-        |FROM sessions GROUP BY user_id, session_id
-        |ORDER BY user_id, start_us""".stripMargin,
-
-    // DuckDB ts is already µs-truncated and the engine's canonical ts is
-    // epoch-µs (event_time = timestamp_micros(ts), no division) —
-    // µs-exact on both sides, so delays compare exactly.
-    "stream_join" ->
-      """SELECT v.user_id, v.event_id AS view_id, c.event_id AS click_id,
-        |  epoch_us(c.ts) - epoch_us(v.ts) AS delay_us
-        |FROM events v JOIN events c ON c.user_id = v.user_id
-        |  AND v.event_type = 'view' AND c.event_type = 'click'
-        |  AND c.ts >= v.ts AND c.ts <= v.ts + INTERVAL 6 HOUR
-        |ORDER BY view_id, click_id""".stripMargin,
-
-    // generator-predicted literals — no parquet, no JSON parse anywhere
-    // on the oracle side
-    "stream_fhir" -> {
-      val rows = graft.fhir.FhirCorpus
-        .expectedEntryCounts(graft.fhir.FhirCorpus.DefaultPatients)
-        .map { case (t, n) => s"('$t', CAST($n AS BIGINT))" }.mkString(", ")
-      s"""SELECT * FROM (VALUES $rows) AS t(resource_type, n_entries)
-         |ORDER BY resource_type""".stripMargin
-    },
-
-    "stream_cdc" ->
-      """SELECT user_id, ts_us, event_id, value FROM (
-        |  SELECT user_id, epoch_us(ts) AS ts_us, event_id, value,
-        |    row_number() OVER (PARTITION BY user_id
-        |      ORDER BY epoch_us(ts) DESC, event_id DESC) AS rn
-        |  FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL)
-        |WHERE rn = 1 ORDER BY user_id""".stripMargin,
-
-    "stream_locf" ->
-      """SELECT event_id, user_id, epoch_us(ts) AS ts_us, value,
-        |  last_value(value IGNORE NULLS) OVER (
-        |    PARTITION BY user_id ORDER BY epoch_us(ts), event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS carried
-        |FROM events WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |ORDER BY event_id""".stripMargin,
-
-    // Event-time EVICTION replay (round 15). Shared arithmetic with the
-    // engine run (validated against the exact-semantics simulator,
-    // scripts/et_sim.py + et_oracle_check.py, at sf0.001/0.01/0.1):
-    //   - delivered batch = ts day (86400000000 us), in event-time order;
-    //   - wm during batch k = floor(max event-us of batches < k / 1000),
-    //     0 before any data (delay "0 seconds");
-    //   - lease after a key's data batch = greatest(latest-ts-ms + ttl,
-    //     wm-at-that-batch + 1), ttl = 6 h = 21600000 ms;
-    //   - eviction fires in the first KEY-SILENT batch whose wm STRICTLY
-    //     exceeds the lease — between consecutive key rows that means
-    //     "next batch is >= 2 ordinals later AND wm at (next ordinal - 1)
-    //     > lease" (wm is monotone, and a batch where the key HAS data
-    //     re-arms the lease above the wm before any timer could fire).
-    // stream_locf_et: an evicted key forgets its carry — segment the
-    // per-key row sequence at evictions, then LOCF within segments. The
-    // "some non-null seen" clause mirrors "state exists iff a carry
-    // does": a carry-less key arms no lease (and a spurious boundary on
-    // a carry-less stretch provably cuts nothing — no non-null can sit
-    // between a real eviction and the next carry, else state would
-    // exist).
-    "stream_locf_et" ->
-      s"""WITH t0 AS (
-        |  SELECT min(epoch_us(ts)) // 86400000000 AS d0 FROM events
-        |  WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |),
-        |ev AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS tsu,
-        |         CASE WHEN event_id % 3 = 0 THEN NULL ELSE value END AS val,
-        |         epoch_us(ts) // 86400000000 AS b
-        |  FROM events, t0 WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |    AND epoch_us(ts) // 86400000000 < t0.d0 + $EtReplayDays
-        |),
-        |bk AS (
-        |  SELECT b, row_number() OVER (ORDER BY b) AS ord, max(tsu) AS bmax
-        |  FROM ev GROUP BY b
-        |),
-        |wm0 AS (
-        |  SELECT ord,
-        |    coalesce(max(bmax) OVER (ORDER BY ord
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) // 1000, 0) AS wm
-        |  FROM bk
-        |),
-        |wmt AS (
-        |  SELECT ord, wm, lag(wm) OVER (ORDER BY ord) AS wmm1 FROM wm0
-        |),
-        |r AS (
-        |  SELECT ev.user_id, ev.event_id, ev.tsu, ev.val, bk.ord, w.wm, w.wmm1
-        |  FROM ev JOIN bk USING (b) JOIN wmt w USING (ord)
-        |),
-        |flag AS (
-        |  SELECT r.*,
-        |    CASE WHEN lag(ord) OVER k IS NOT NULL
-        |          AND ord >= lag(ord) OVER k + 2
-        |          AND wmm1 > greatest(lag(tsu) OVER k // 1000 + 21600000,
-        |                              lag(wm) OVER k + 1)
-        |          AND count(val) OVER (PARTITION BY user_id ORDER BY tsu, event_id
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) > 0
-        |         THEN 1 ELSE 0 END AS boundary
-        |  FROM r
-        |  WINDOW k AS (PARTITION BY user_id ORDER BY tsu, event_id)
-        |),
-        |seg AS (
-        |  SELECT *, sum(boundary) OVER (PARTITION BY user_id
-        |    ORDER BY tsu, event_id) AS sg
-        |  FROM flag
-        |)
-        |SELECT event_id, user_id, tsu AS ts_us, val AS value,
-        |       last_value(val IGNORE NULLS) OVER (PARTITION BY user_id, sg
-        |         ORDER BY tsu, event_id
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS carried
-        |FROM seg ORDER BY event_id""".stripMargin,
-
-    // stream_locf_et_tws_restart: the SAME replay and lease arithmetic
-    // as stream_locf_et, plus the ONE thing a mid-backlog checkpoint
-    // restart adds — the dying incarnation's final AvailableNow batch
-    // is a KEY-SILENT watermark sweep (wm = max ts of the first half's
-    // buckets) in which any armed lease strictly below that wm fires
-    // with no data to re-arm it. The extra boundary term models exactly
-    // that sweep at the split ordinal (count(buckets)//2, the engine
-    // helper's split), so the hash proves BOTH directions: state/timers
-    // the sweep spares must survive recovery (missing state ⇒ extra
-    // boundaries ⇒ mismatch), and the sweep itself must fire per the
-    // lease rule (a resurrected-too-much checkpoint ⇒ missing
-    // boundaries ⇒ mismatch).
-    "stream_locf_et_tws_restart" ->
-      s"""WITH t0 AS (
-        |  SELECT min(epoch_us(ts)) // 86400000000 AS d0 FROM events
-        |  WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |),
-        |ev AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS tsu,
-        |         CASE WHEN event_id % 3 = 0 THEN NULL ELSE value END AS val,
-        |         epoch_us(ts) // 86400000000 AS b
-        |  FROM events, t0 WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |    AND epoch_us(ts) // 86400000000 < t0.d0 + $EtReplayDays
-        |),
-        |bk AS (
-        |  SELECT b, row_number() OVER (ORDER BY b) AS ord, max(tsu) AS bmax
-        |  FROM ev GROUP BY b
-        |),
-        |sp AS (SELECT count(*) // 2 AS s FROM bk),
-        |wmseam AS (
-        |  SELECT max(bmax) // 1000 AS wms FROM bk, sp WHERE ord <= sp.s
-        |),
-        |wm0 AS (
-        |  SELECT ord,
-        |    coalesce(max(bmax) OVER (ORDER BY ord
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) // 1000, 0) AS wm
-        |  FROM bk
-        |),
-        |wmt AS (
-        |  SELECT ord, wm, lag(wm) OVER (ORDER BY ord) AS wmm1 FROM wm0
-        |),
-        |r AS (
-        |  SELECT ev.user_id, ev.event_id, ev.tsu, ev.val, bk.ord, w.wm, w.wmm1
-        |  FROM ev JOIN bk USING (b) JOIN wmt w USING (ord)
-        |),
-        |flag AS (
-        |  SELECT r.*,
-        |    CASE WHEN lag(ord) OVER k IS NOT NULL
-        |          AND count(val) OVER (PARTITION BY user_id ORDER BY tsu, event_id
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) > 0
-        |          AND (
-        |            (ord >= lag(ord) OVER k + 2
-        |             AND wmm1 > greatest(lag(tsu) OVER k // 1000 + 21600000,
-        |                                 lag(wm) OVER k + 1))
-        |            OR
-        |            (lag(ord) OVER k <= sp.s AND ord >= sp.s + 1
-        |             AND wmseam.wms > greatest(lag(tsu) OVER k // 1000 + 21600000,
-        |                                       lag(wm) OVER k + 1))
-        |          )
-        |         THEN 1 ELSE 0 END AS boundary
-        |  FROM r, sp, wmseam
-        |  WINDOW k AS (PARTITION BY user_id ORDER BY tsu, event_id)
-        |),
-        |seg AS (
-        |  SELECT *, sum(boundary) OVER (PARTITION BY user_id
-        |    ORDER BY tsu, event_id) AS sg
-        |  FROM flag
-        |)
-        |SELECT event_id, user_id, tsu AS ts_us, val AS value,
-        |       last_value(val IGNORE NULLS) OVER (PARTITION BY user_id, sg
-        |         ORDER BY tsu, event_id
-        |         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS carried
-        |FROM seg ORDER BY event_id""".stripMargin,
-
-    // stream_cdc_et: the latestStateChanges feed — upserts are the
-    // per-(key, day) argmax (in-order delivery strictly advances the
-    // winner every data bucket, evicted or not: any admissible
-    // post-eviction arrival is above the watermark and hence above the
-    // dead winner + ttl, which is why NO state simulation is needed);
-    // deletes fire by the lease rule between consecutive data buckets,
-    // plus the final-watermark sweep for Spark's extra post-backlog
-    // batch (final wm = floor(global max ts / 1000), delay 0).
-    "stream_cdc_et" ->
-      s"""WITH t0 AS (
-        |  SELECT min(epoch_us(ts)) // 86400000000 AS d0 FROM events
-        |  WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |),
-        |ev AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS tsu, value,
-        |         epoch_us(ts) // 86400000000 AS b
-        |  FROM events, t0 WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |    AND epoch_us(ts) // 86400000000 < t0.d0 + $EtReplayDays
-        |),
-        |bk AS (
-        |  SELECT b, row_number() OVER (ORDER BY b) AS ord, max(tsu) AS bmax
-        |  FROM ev GROUP BY b
-        |),
-        |wmt AS (
-        |  SELECT ord,
-        |    coalesce(max(bmax) OVER (ORDER BY ord
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) // 1000, 0) AS wm
-        |  FROM bk
-        |),
-        |fin AS (SELECT max(bmax) // 1000 AS final_wm FROM bk),
-        |stp AS (
-        |  SELECT user_id, ord, wm, tsu, event_id, value FROM (
-        |    SELECT ev.user_id, bk.ord, w.wm, ev.tsu, ev.event_id, ev.value,
-        |           row_number() OVER (PARTITION BY ev.user_id, bk.ord
-        |             ORDER BY ev.tsu DESC, ev.event_id DESC) AS rn
-        |    FROM ev JOIN bk USING (b) JOIN wmt w USING (ord)
-        |  ) WHERE rn = 1
-        |),
-        |nxt AS (
-        |  SELECT *, lead(ord) OVER (PARTITION BY user_id ORDER BY ord) AS next_ord
-        |  FROM stp
-        |),
-        |ups AS (
-        |  SELECT user_id, tsu AS ts_us, event_id, value, 'upsert' AS op FROM nxt
-        |),
-        |dels AS (
-        |  SELECT n.user_id, n.tsu AS ts_us, n.event_id, n.value, 'delete' AS op
-        |  FROM nxt n
-        |  CROSS JOIN fin
-        |  LEFT JOIN wmt wprev ON wprev.ord = n.next_ord - 1
-        |  WHERE CASE WHEN n.next_ord IS NULL
-        |             THEN fin.final_wm > greatest(n.tsu // 1000 + 21600000, n.wm + 1)
-        |             ELSE n.next_ord >= n.ord + 2
-        |                  AND wprev.wm > greatest(n.tsu // 1000 + 21600000, n.wm + 1)
-        |        END
-        |)
-        |SELECT * FROM (SELECT * FROM ups UNION ALL SELECT * FROM dels)
-        |ORDER BY user_id, ts_us, event_id, op""".stripMargin,
-
-    // stream_cdc_et_tws_restart: stream_cdc_et's replay plus the ONE
-    // thing a mid-backlog restart adds to a changelog — the dying
-    // incarnation's final AvailableNow batch is a KEY-SILENT watermark
-    // sweep at wms (max ts of the first half's buckets) that fires any
-    // armed lease strictly below it, emitting that winner as an EXTRA
-    // delete (the next data bucket's upsert then re-arms fresh state).
-    // The seam term only MATTERS for winner/next-data pairs straddling
-    // the split where the regular rule stays silent (next_ord = s+1, or
-    // wm(next_ord-1) still below the lease): for next_ord >= s+2 the
-    // regular wprev.wm >= wms already fires the identical row, and for
-    // keys with no next data the final sweep (final_wm >= wms) does —
-    // the OR keeps those single-row cases single. Upserts are unchanged:
-    // the restart repartitions batches across incarnations but the
-    // per-(key, day) argmax and the watermark sequence are pure
-    // functions of the staged data.
-    "stream_cdc_et_tws_restart" ->
-      s"""WITH t0 AS (
-        |  SELECT min(epoch_us(ts)) // 86400000000 AS d0 FROM events
-        |  WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |),
-        |ev AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS tsu, value,
-        |         epoch_us(ts) // 86400000000 AS b
-        |  FROM events, t0 WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |    AND epoch_us(ts) // 86400000000 < t0.d0 + $EtReplayDays
-        |),
-        |bk AS (
-        |  SELECT b, row_number() OVER (ORDER BY b) AS ord, max(tsu) AS bmax
-        |  FROM ev GROUP BY b
-        |),
-        |sp AS (SELECT count(*) // 2 AS s FROM bk),
-        |wmseam AS (
-        |  SELECT max(bmax) // 1000 AS wms FROM bk, sp WHERE ord <= sp.s
-        |),
-        |wmt AS (
-        |  SELECT ord,
-        |    coalesce(max(bmax) OVER (ORDER BY ord
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) // 1000, 0) AS wm
-        |  FROM bk
-        |),
-        |fin AS (SELECT max(bmax) // 1000 AS final_wm FROM bk),
-        |stp AS (
-        |  SELECT user_id, ord, wm, tsu, event_id, value FROM (
-        |    SELECT ev.user_id, bk.ord, w.wm, ev.tsu, ev.event_id, ev.value,
-        |           row_number() OVER (PARTITION BY ev.user_id, bk.ord
-        |             ORDER BY ev.tsu DESC, ev.event_id DESC) AS rn
-        |    FROM ev JOIN bk USING (b) JOIN wmt w USING (ord)
-        |  ) WHERE rn = 1
-        |),
-        |nxt AS (
-        |  SELECT *, lead(ord) OVER (PARTITION BY user_id ORDER BY ord) AS next_ord
-        |  FROM stp
-        |),
-        |ups AS (
-        |  SELECT user_id, tsu AS ts_us, event_id, value, 'upsert' AS op FROM nxt
-        |),
-        |dels AS (
-        |  SELECT n.user_id, n.tsu AS ts_us, n.event_id, n.value, 'delete' AS op
-        |  FROM nxt n
-        |  CROSS JOIN fin CROSS JOIN sp CROSS JOIN wmseam
-        |  LEFT JOIN wmt wprev ON wprev.ord = n.next_ord - 1
-        |  WHERE CASE WHEN n.next_ord IS NULL
-        |             THEN fin.final_wm > greatest(n.tsu // 1000 + 21600000, n.wm + 1)
-        |             ELSE (n.next_ord >= n.ord + 2
-        |                   AND wprev.wm > greatest(n.tsu // 1000 + 21600000, n.wm + 1))
-        |               OR (n.ord <= sp.s AND n.next_ord >= sp.s + 1
-        |                   AND wmseam.wms > greatest(n.tsu // 1000 + 21600000, n.wm + 1))
-        |        END
-        |)
-        |SELECT * FROM (SELECT * FROM ups UNION ALL SELECT * FROM dels)
-        |ORDER BY user_id, ts_us, event_id, op""".stripMargin,
-
-    // stream_transitions_et: an evicted key forgets its previous-event
-    // marker — same boundary arithmetic as stream_locf_et WITHOUT the
-    // "some non-null seen" clause (the marker exists after any batch);
-    // pairs are the in-segment lag (in-order day-bucket delivery makes
-    // the stored marker exactly the key's previous row). Validated
-    // against the exact engine-semantics simulator (scripts/et_sim.py)
-    // at sf0.001/0.01/0.1 before being pinned here.
-    "stream_transitions_et" ->
-      s"""WITH t0 AS (
-        |  SELECT min(epoch_us(ts)) // 86400000000 AS d0 FROM events
-        |  WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |),
-        |ev AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS tsu, event_type,
-        |         epoch_us(ts) // 86400000000 AS b
-        |  FROM events, t0
-        |  WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |    AND event_type IS NOT NULL
-        |    AND epoch_us(ts) // 86400000000 < t0.d0 + $EtReplayDays
-        |),
-        |bk AS (
-        |  SELECT b, row_number() OVER (ORDER BY b) AS ord, max(tsu) AS bmax
-        |  FROM ev GROUP BY b
-        |),
-        |wm0 AS (
-        |  SELECT ord,
-        |    coalesce(max(bmax) OVER (ORDER BY ord
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) // 1000, 0) AS wm
-        |  FROM bk
-        |),
-        |wmt AS (
-        |  SELECT ord, wm, lag(wm) OVER (ORDER BY ord) AS wmm1 FROM wm0
-        |),
-        |r AS (
-        |  SELECT ev.user_id, ev.event_id, ev.tsu, ev.event_type, bk.ord,
-        |         w.wm, w.wmm1
-        |  FROM ev JOIN bk USING (b) JOIN wmt w USING (ord)
-        |),
-        |p AS (
-        |  SELECT r.user_id, r.event_type AS to_type,
-        |    lag(event_type) OVER k AS from_type,
-        |    CASE WHEN lag(ord) OVER k IS NOT NULL
-        |          AND ord >= lag(ord) OVER k + 2
-        |          AND wmm1 > greatest(lag(tsu) OVER k // 1000 + 21600000,
-        |                              lag(wm) OVER k + 1)
-        |         THEN 1 ELSE 0 END AS evicted
-        |  FROM r
-        |  WINDOW k AS (PARTITION BY user_id ORDER BY tsu, event_id)
-        |)
-        |SELECT user_id, from_type, to_type
-        |FROM p WHERE from_type IS NOT NULL AND evicted = 0
-        |ORDER BY user_id, from_type, to_type""".stripMargin,
-
-    // stream_episodes_et: event-time sessionization replay — fixed 2 h
-    // intervals, 2 h merge gap, 6 h idle flush, ive-day buckets. Break
-    // the per-key sequence at gap breaks OR silent-batch flushes (lease
-    // = greatest(reach-ms + flush, wm + 1) on the PREVIOUS interval;
-    // fixed length makes reach = lag(ive)), group to episodes, emit all
-    // but each key's trailing episode, which emits iff the final
-    // watermark flushes it (trailing OPEN episodes stay in state).
-    "stream_episodes_et" ->
-      s"""WITH t0 AS (
-        |  SELECT min(epoch_us(ts)) // 86400000000 AS d0 FROM events
-        |  WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |),
-        |ev AS (
-        |  SELECT user_id, epoch_us(ts) AS ivs, epoch_us(ts) + 7200000000 AS ive,
-        |         (epoch_us(ts) + 7200000000) // 86400000000 AS b
-        |  FROM events, t0 WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |    AND epoch_us(ts) // 86400000000 < t0.d0 + $EtReplayDays
-        |),
-        |bk AS (
-        |  SELECT b, row_number() OVER (ORDER BY b) AS ord, max(ive) AS bmax
-        |  FROM ev GROUP BY b
-        |),
-        |wm0 AS (
-        |  SELECT ord,
-        |    coalesce(max(bmax) OVER (ORDER BY ord
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) // 1000, 0) AS wm
-        |  FROM bk
-        |),
-        |wmt AS (SELECT ord, wm, lag(wm) OVER (ORDER BY ord) AS wmm1 FROM wm0),
-        |fin AS (SELECT max(bmax) // 1000 AS final_wm FROM bk),
-        |r AS (
-        |  SELECT ev.user_id, ev.ivs, ev.ive, bk.ord, w.wm, w.wmm1
-        |  FROM ev JOIN bk USING (b) JOIN wmt w USING (ord)
-        |),
-        |flag AS (
-        |  SELECT r.*,
-        |    CASE WHEN lag(ive) OVER k IS NULL THEN 1
-        |         WHEN (ord >= lag(ord) OVER k + 2
-        |               AND wmm1 > greatest(lag(ive) OVER k // 1000 + 21600000,
-        |                                   lag(wm) OVER k + 1))
-        |           OR ivs > lag(ive) OVER k + 7200000000
-        |         THEN 1 ELSE 0 END AS brk
-        |  FROM r WINDOW k AS (PARTITION BY user_id ORDER BY ivs, ive)
-        |),
-        |seg AS (
-        |  SELECT *, sum(brk) OVER (PARTITION BY user_id ORDER BY ivs, ive) AS eid
-        |  FROM flag
-        |),
-        |ep AS (
-        |  SELECT user_id, eid, min(ivs) AS mstart, max(ive) AS mend,
-        |         count(*) AS n_merged, max(ord) AS last_ord
-        |  FROM seg GROUP BY user_id, eid
-        |),
-        |mx AS (SELECT user_id, max(eid) AS last_eid FROM ep GROUP BY user_id)
-        |SELECT e.user_id, e.mstart, e.mend, e.n_merged
-        |FROM ep e
-        |JOIN mx USING (user_id)
-        |JOIN wmt wl ON wl.ord = e.last_ord
-        |CROSS JOIN fin
-        |WHERE e.eid < mx.last_eid
-        |   OR fin.final_wm > greatest(e.mend // 1000 + 21600000, wl.wm + 1)
-        |ORDER BY user_id, mstart""".stripMargin,
-
-    // identical ASOF shape to the batch asof_join oracle — streaming
-    // must change nothing about the answer
-    "stream_asof" ->
-      """WITH vd AS (
-        |  SELECT user_id, epoch_us(ts) AS vts, value AS view_value,
-        |    row_number() OVER (PARTITION BY user_id, epoch_us(ts) ORDER BY event_id) AS rn
-        |  FROM events WHERE event_type = 'view'
-        |), v AS (SELECT user_id, vts, view_value FROM vd WHERE rn = 1),
-        |c AS (
-        |  SELECT event_id, user_id, epoch_us(ts) AS ts_us
-        |  FROM events WHERE event_type = 'click')
-        |SELECT c.event_id, c.user_id, c.ts_us, v.view_value
-        |FROM c ASOF LEFT JOIN v
-        |  ON c.user_id = v.user_id AND v.vts <= c.ts_us
-        |ORDER BY c.event_id""".stripMargin,
-
-    "stream_windows" ->
-      """SELECT (epoch_us(ts) // 3600000000) * 3600000000 AS win_start_us,
-        |  event_type, CAST(count(*) AS BIGINT) AS n_events
-        |FROM events GROUP BY 1, 2
-        |ORDER BY win_start_us, event_type NULLS FIRST""".stripMargin,
-
-    // Identical window totals under Update output: per-trigger emission
-    // of changed windows only must not change what they converge to.
-    "stream_windows_update" ->
-      """SELECT (epoch_us(ts) // 3600000000) * 3600000000 AS win_start_us,
-        |  event_type, CAST(count(*) AS BIGINT) AS n_events
-        |FROM events GROUP BY 1, 2
-        |ORDER BY win_start_us, event_type NULLS FIRST""".stripMargin,
 
     "dedup_first" ->
       """SELECT event_id, user_id, event_type FROM (
@@ -8134,74 +6536,7 @@ object SparkEntry {
   private def oracleSqlRest: Map[String, String] = Map(
 
     "dedup_minhash" -> jaccardSql(0.8),
-    // the streaming candidate path must land on the same verified pairs
-    "stream_neardup" -> jaccardSql(0.8),
     "ngram_jaccard" -> jaccardSql(0.5),
-
-    // stream_neardup_et: the ≥0.8 pair set FILTERED by event-time bucket
-    // survival, replayed EXACTLY per bucket from the Verify band dump
-    // (NeardupBandsDump — the same banded explode the op runs; the
-    // kernel stays spec-pinned). Same wm/ord/lease arithmetic as the
-    // other _et oracles, applied to each bucket's member-DAY timeline:
-    // with constant-per-day doc ts (see etDocsReplayStream), a bucket's
-    // lease after a data day is greatest((d+1)*day_ms + lease, wm + 1),
-    // a gap between consecutive member days dies iff ≥1 full intervening
-    // batch exists AND the wm during the batch before the later day
-    // strictly exceeds that lease, and a pair is alive iff SOME shared
-    // bucket has no dead gap between the two docs' days — which replays
-    // bucket BRIDGING (a third member renewing a bucket mid-silence)
-    // that no pairwise day-window can express (observed at sf0.1: 2 of
-    // 134 surviving pairs exist only through a bridge doc). The replay
-    // day `d` is READ from the band dump (the engine's own wrapped-mod
-    // expression, etDocDay) rather than re-derived in SQL: DuckDB
-    // errors on the int64 product where Spark wraps. The day SET (dd)
-    // comes from bd too — sound because every replayed doc has non-null
-    // text and therefore bands (the day timeline would only diverge if
-    // an entire replay day held nothing but band-less docs).
-    "stream_neardup_et" ->
-      (shingleCte +
-        s""", bd AS (
-           |  SELECT band_idx, band_hash, doc_id, d
-           |  FROM read_parquet('${NeardupBandsDump.dir(verifySfDir)}/*.parquet')
-           |), dd AS (
-           |  SELECT DISTINCT d FROM bd
-           |), ords AS (
-           |  SELECT d, row_number() OVER (ORDER BY d) AS ord FROM dd
-           |), wmt AS (
-           |  SELECT d, ord,
-           |    coalesce(max((d + 1) * 86400000) OVER (ORDER BY ord
-           |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS wm
-           |  FROM ords
-           |), badgaps AS (
-           |  SELECT g.band_idx, g.band_hash, g.d1, g.d2
-           |  FROM (SELECT band_idx, band_hash, d AS d1,
-           |          lead(d) OVER (PARTITION BY band_idx, band_hash ORDER BY d) AS d2
-           |        FROM (SELECT DISTINCT band_idx, band_hash, d FROM bd)) g
-           |  JOIN wmt w1 ON w1.d = g.d1
-           |  JOIN wmt w2 ON w2.d = g.d2
-           |  LEFT JOIN wmt wp ON wp.ord = w2.ord - 1
-           |  WHERE w2.ord >= w1.ord + 2
-           |    AND wp.wm > greatest((g.d1 + 1) * 86400000 + $EtDocLeaseMs,
-           |                         w1.wm + 1)
-           |), alive AS (
-           |  SELECT DISTINCT s.id_a, s.id_b FROM (
-           |    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           |           a.band_idx, a.band_hash,
-           |           least(a.d, b.d) AS dlo, greatest(a.d, b.d) AS dhi
-           |    FROM bd a JOIN bd b ON a.band_idx = b.band_idx
-           |      AND a.band_hash = b.band_hash AND a.doc_id < b.doc_id) s
-           |  WHERE NOT EXISTS (SELECT 1 FROM badgaps g
-           |    WHERE g.band_idx = s.band_idx AND g.band_hash = s.band_hash
-           |      AND g.d1 >= s.dlo AND g.d2 <= s.dhi)
-           |)
-           |SELECT id_a, id_b,
-           |  round(i * 1.0 / (sa.n + sb.n - i), 6) AS jaccard
-           |FROM pair_inter
-           |JOIN sz sa ON sa.doc_id = id_a
-           |JOIN sz sb ON sb.doc_id = id_b
-           |JOIN alive USING (id_a, id_b)
-           |WHERE round(i * 1.0 / (sa.n + sb.n - i), 6) >= 0.8
-           |ORDER BY id_a, id_b""".stripMargin),
 
     // Source copy matrix: threshold pairs joined to source labels,
     // names sorted per pair.
@@ -9507,25 +7842,7 @@ object SparkEntry {
          |FROM p JOIN m1 ON m1.w1 = p.w1 JOIN m2 ON m2.w2 = p.w2 CROSS JOIN nb
          |ORDER BY lift DESC, p.w1, p.w2 LIMIT 50""".stripMargin,
 
-    "anomaly_zscore" ->
-      """WITH x AS (
-        |  SELECT event_id, user_id, value,
-        |    CAST(round(value * 100, 0) AS BIGINT) AS xv
-        |  FROM events WHERE user_id IS NOT NULL),
-        |s AS (
-        |  SELECT user_id, CAST(count(value) AS BIGINT) AS group_n,
-        |    sum(CAST(xv AS HUGEINT)) AS sx,
-        |    sum(CAST(xv AS HUGEINT) * xv) AS qx
-        |  FROM x GROUP BY user_id)
-        |SELECT x.event_id, x.user_id, x.value, s.group_n,
-        |  CASE WHEN s.group_n >= 2 AND x.value IS NOT NULL
-        |        AND (s.group_n * s.qx - s.sx * s.sx) > 0
-        |       THEN round(CAST(x.xv * s.group_n - s.sx AS DOUBLE)
-        |         / sqrt(CAST((s.group_n * s.qx - s.sx * s.sx) * s.group_n
-        |                     AS DOUBLE)
-        |                / CAST(s.group_n - 1 AS DOUBLE)), 6) END AS zscore
-        |FROM x JOIN s ON s.user_id = x.user_id
-        |ORDER BY event_id""".stripMargin,
+    "anomaly_zscore" -> anomalyZscoreSql,
 
     "gap_profile" ->
       """WITH e AS (
@@ -9985,39 +8302,6 @@ object SparkEntry {
         |  CAST(count(*) AS BIGINT) AS n_merged
         |FROM g GROUP BY user_id, island
         |ORDER BY user_id, island""".stripMargin,
-
-    // The §D merge (gap 7) MINUS each user's trailing island — the
-    // stream's open episode never emitted in Append mode.
-    "stream_episodes" ->
-      """WITH iv AS (
-        |  SELECT user_id,
-        |    epoch_us(ts) // 3600000000 AS ivs,
-        |    epoch_us(ts) // 3600000000 + 1 + (CAST(abs(floor(value)) AS BIGINT) % 6) AS ive
-        |  FROM events
-        |  WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL),
-        |m AS (
-        |  SELECT user_id, ivs, ive,
-        |    max(ive) OVER (PARTITION BY user_id ORDER BY ivs, ive
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pmax
-        |  FROM iv),
-        |g AS (
-        |  SELECT user_id, ivs, ive,
-        |    sum(CASE WHEN pmax IS NULL OR ivs > pmax + 2 THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY user_id ORDER BY ivs, ive
-        |        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-        |  FROM m),
-        |isl AS (
-        |  SELECT user_id, island, min(ivs) AS mstart, max(ive) AS mend,
-        |    count(*) AS n_merged
-        |  FROM g GROUP BY user_id, island),
-        |mx AS (SELECT user_id, max(island) AS mi FROM isl GROUP BY user_id)
-        |SELECT isl.user_id,
-        |  CAST(mstart AS BIGINT) AS mstart,
-        |  CAST(mend AS BIGINT) AS mend,
-        |  CAST(n_merged AS BIGINT) AS n_merged
-        |FROM isl JOIN mx ON mx.user_id = isl.user_id
-        |WHERE isl.island < mx.mi
-        |ORDER BY isl.user_id, mstart""".stripMargin,
 
     // Episodes (gap 7) then lead(mstart) per user: index cases are
     // episodes with a successor; readmitted iff next start is within
@@ -11351,28 +9635,6 @@ object SparkEntry {
         |  round(CAST(n_active AS DOUBLE) / CAST(n_cohort AS DOUBLE), 6) AS retention
         |FROM w ORDER BY cohort, "offset"""".stripMargin,
 
-    // The batch anomaly_zscore SQL verbatim: the stream path is a
-    // stateless static-profile join, so batch ≡ stream by construction.
-    "stream_anomaly" ->
-      """WITH x AS (
-        |  SELECT event_id, user_id, value,
-        |    CAST(round(value * 100, 0) AS BIGINT) AS xv
-        |  FROM events WHERE user_id IS NOT NULL),
-        |s AS (
-        |  SELECT user_id, CAST(count(value) AS BIGINT) AS group_n,
-        |    sum(CAST(xv AS HUGEINT)) AS sx,
-        |    sum(CAST(xv AS HUGEINT) * xv) AS qx
-        |  FROM x GROUP BY user_id)
-        |SELECT x.event_id, x.user_id, x.value, s.group_n,
-        |  CASE WHEN s.group_n >= 2 AND x.value IS NOT NULL
-        |        AND (s.group_n * s.qx - s.sx * s.sx) > 0
-        |       THEN round(CAST(x.xv * s.group_n - s.sx AS DOUBLE)
-        |         / sqrt(CAST((s.group_n * s.qx - s.sx * s.sx) * s.group_n
-        |                     AS DOUBLE)
-        |                / CAST(s.group_n - 1 AS DOUBLE)), 6) END AS zscore
-        |FROM x JOIN s ON s.user_id = x.user_id
-        |ORDER BY event_id""".stripMargin,
-
     "ngram_next" ->
       s"""WITH toks AS (
          |  SELECT doc_id, unnest(l) AS token, generate_subscripts(l, 1) AS pos
@@ -11470,46 +9732,8 @@ object SparkEntry {
          |FROM read_parquet('${graft.fhir.FhirCorpus.charlsonDumpDir}/*.parquet')
          |ORDER BY patient_id""".stripMargin,
 
-    "event_transitions" ->
-      """WITH e AS (
-        |  SELECT user_id, epoch_us(ts) AS tus, event_id, event_type
-        |  FROM events
-        |  WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |    AND event_type IS NOT NULL),
-        |p AS (
-        |  SELECT event_type AS from_type,
-        |    lead(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY tus, event_id) AS to_type
-        |  FROM e),
-        |g AS (
-        |  SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n
-        |  FROM p WHERE to_type IS NOT NULL GROUP BY 1, 2)
-        |SELECT from_type, to_type, n,
-        |  CAST(sum(n) OVER (PARTITION BY from_type) AS BIGINT) AS n_from,
-        |  round(CAST(n AS DOUBLE)
-        |    / CAST(sum(n) OVER (PARTITION BY from_type) AS DOUBLE), 6) AS p
-        |FROM g ORDER BY from_type, to_type""".stripMargin,
+    "event_transitions" -> eventTransitionsSql,
 
-        // single-batch file source: stateful pairing == the batch lag window.
-    "stream_transitions" ->
-      """WITH e AS (
-        |  SELECT user_id, epoch_us(ts) AS tus, event_id, event_type
-        |  FROM events
-        |  WHERE user_id IS NOT NULL AND ts IS NOT NULL
-        |    AND event_type IS NOT NULL),
-        |p AS (
-        |  SELECT event_type AS from_type,
-        |    lead(event_type) OVER (PARTITION BY user_id
-        |      ORDER BY tus, event_id) AS to_type
-        |  FROM e),
-        |g AS (
-        |  SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n
-        |  FROM p WHERE to_type IS NOT NULL GROUP BY 1, 2)
-        |SELECT from_type, to_type, n,
-        |  CAST(sum(n) OVER (PARTITION BY from_type) AS BIGINT) AS n_from,
-        |  round(CAST(n AS DOUBLE)
-        |    / CAST(sum(n) OVER (PARTITION BY from_type) AS DOUBLE), 6) AS p
-        |FROM g ORDER BY from_type, to_type""".stripMargin,
 
 
     "interleave_order" ->
@@ -11523,20 +9747,6 @@ object SparkEntry {
          |      ORDER BY pos, source ASC NULLS FIRST, doc_id ASC NULLS FIRST) - 1
          |    AS BIGINT) AS interleave_rank
          |FROM p ORDER BY interleave_rank""".stripMargin,
-
-    // The batch heavy_hitters SQL verbatim: Complete-mode streaming
-    // counts converge to the same totals regardless of batching.
-    "stream_topk" ->
-      """SELECT user_id, CAST(count(*) AS BIGINT) AS n_events
-        |FROM events GROUP BY user_id
-        |ORDER BY n_events DESC, user_id LIMIT 10""".stripMargin,
-
-    // Identical totals under Update output: emitting only changed keys
-    // per trigger must not change what the counts converge to.
-    "stream_topk_update" ->
-      """SELECT user_id, CAST(count(*) AS BIGINT) AS n_events
-        |FROM events GROUP BY user_id
-        |ORDER BY n_events DESC, user_id LIMIT 10""".stripMargin,
 
     "weighted_sample" ->
       s"""SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars

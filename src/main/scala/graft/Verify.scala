@@ -20,6 +20,9 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // Dev-loop filter: SPARK_GRAFT_ONLY=name1,name2 runs a subset without
+    // paying for the full registry. Unset (driver runs) = everything.
+    val only = Gate.onlyFromEnv("Verify", SparkEntry.queries.contains)
     val spark = Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     // Pin the SF-scoped oracle paths to THIS run's input before anything
@@ -38,9 +41,6 @@ object Verify {
     // the public-suffix algorithm against the SAME rules the engine uses.
     graft.ops.Domains.pslRulesFrame(spark)
       .coalesce(1).write.mode("overwrite").parquet(SparkEntry.PslDumpDir)
-    // Dev-loop filter: SPARK_GRAFT_ONLY=name1,name2 runs a subset without
-    // paying for the full registry. Unset (driver runs) = everything.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     def selected(gate: String) = only.forall(_.contains(gate))
     // ... and every SF-keyed frame an oracle reads (trained codebooks,
     // kernel outputs DuckDB cannot recompute), for the selected gates

@@ -43,9 +43,4 @@ object Validators {
   /** Inclusive ranges (`data_quality_checker.py:74-79`). */
   def isValidLatitude(c: Column): Column = c.between(-90d, 90d)
   def isValidLongitude(c: Column): Column = c.between(-180d, 180d)
-
-  /** Generic inclusive range check (the engine-level generalization of
-    * lat/lon: any bounded measure column).
-    */
-  def inRange(c: Column, lo: Double, hi: Double): Column = c.between(lo, hi)
 }

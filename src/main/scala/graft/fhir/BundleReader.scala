@@ -83,14 +83,6 @@ object BundleReader {
     when(col("resource.resourceType") === "Patient", col("resource.id"))
       .otherwise(stripUrnUuid(col("resource.subject.reference")))
 
-  /** The engine's preferred enrichment key: works for every resource type
-    * (`coalesce` over subject/patient references).
-    */
-  def patientIdCoalesced: Column =
-    when(col("resource.resourceType") === "Patient", col("resource.id"))
-      .otherwise(stripUrnUuid(coalesce(
-        col("resource.subject.reference"), col("resource.patient.reference"))))
-
   /** F2 router — one filter per resource type over the shared entry scan.
     * Route over [[withParsedEntries]]' persisted frame, so the six routed
     * tables read memory and the JSON parse happens once.

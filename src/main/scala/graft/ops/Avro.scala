@@ -348,14 +348,6 @@ object Avro {
     out.toByteArray
   }
 
-  def syntheticAvroTable(df: DataFrame, idCol: String): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(col(s"`$idCol`").cast("long")).as[Long]
-      .mapPartitions(it => it.map(id => (id, syntheticAvro(id))))
-      .toDF("media_id", "payload")
-  }
-
   /** The same layout written by the REAL Apache Avro `DataFileWriter`
     * (on Spark's runtime classpath) — the gate fixture, so the census
     * gate is a genuine cross-implementation differential (the ZIP

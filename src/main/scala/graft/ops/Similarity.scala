@@ -448,6 +448,12 @@ object Similarity {
     * division at the end) — deterministic under any aggregation order and
     * replayed bit-exactly by the DuckDB oracle.
     */
+  /** The calling thread's job description as a `"<desc> / "` prefix for
+    * the jobs a trainer submits, or "" when it has none.
+    */
+  private def callerPrefix(sc: org.apache.spark.SparkContext): String =
+    Option(sc.getLocalProperty("spark.job.description")).fold("")(_ + " / ")
+
   private[graft] def ivfTrainCentroids(
       c0: DataFrame, numCentroids: Int, iters: Int): DataFrame = {
     val spark = c0.sparkSession
@@ -460,7 +466,7 @@ object Similarity {
     // each step's jobs carry "<caller's description> / lloyd <step>", so
     // a profile names the round (and, under pqTrain, the subspace)
     val sc = spark.sparkContext
-    val caller = Option(sc.getLocalProperty("spark.job.description")).fold("")(_ + " / ")
+    val caller = callerPrefix(sc)
     def step[T](name: String)(body: => T): T =
       graft.FanOut.described(sc, s"${caller}lloyd $name")(body)
     try {
@@ -716,8 +722,11 @@ object Similarity {
     // output order is the subspace index, not completion order.
     // Bounded failure (graft.FanOut): the first failed subspace cancels
     // every sibling's jobs before the call rethrows.
-    graft.FanOut(df.sparkSession.sparkContext, "pqTrain")((0 until numSubspaces).map { s =>
-      s"pqTrain subspace $s" -> { () =>
+    // each subspace's jobs carry "<caller's description> / pqTrain subspace s"
+    val sc = df.sparkSession.sparkContext
+    val caller = callerPrefix(sc)
+    graft.FanOut(sc, "pqTrain")((0 until numSubspaces).map { s =>
+      s"${caller}pqTrain subspace $s" -> { () =>
         val c = df
           .filter(col(s"`$idCol`").isNotNull && col(s"`$vecCol`").isNotNull &&
             size(col(s"`$vecCol`")) === dim)
@@ -876,11 +885,17 @@ object Similarity {
     */
   def ivfpqTrain(df: DataFrame, idCol: String, vecCol: String,
       dim: Int, numSubspaces: Int, numCentroids: Int,
-      coarse: DataFrame, iters: Int = 2): DataFrame =
-    pqTrain(
-      ivfResiduals(
-        df.filter(size(col(s"`$vecCol`")) === dim), idCol, vecCol, coarse),
-      idCol, "__rv", dim, numSubspaces, numCentroids, iters)
+      coarse: DataFrame, iters: Int = 2): DataFrame = {
+    // its jobs carry "<caller's description> / ivfpqTrain / pqTrain …",
+    // apart from a plain PQ training's
+    val sc = df.sparkSession.sparkContext
+    graft.FanOut.described(sc, callerPrefix(sc) + "ivfpqTrain") {
+      pqTrain(
+        ivfResiduals(
+          df.filter(size(col(s"`$vecCol`")) === dim), idCol, vecCol, coarse),
+        idCol, "__rv", dim, numSubspaces, numCentroids, iters)
+    }
+  }
 
   /** Approximate NN via IVFADC — the canonical billion-vector layout
     * (FAISS `IVFx,PQy`): coarse IVF cells bound the search to `nProbe`

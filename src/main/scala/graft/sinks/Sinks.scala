@@ -46,9 +46,6 @@ object Sinks {
     spark.read.schema(schema).option("header", true)
       .option("escape", "\"").csv(path)
 
-  def writeAllCsv(tables: Map[String, DataFrame], baseDir: String): Unit =
-    tables.foreach { case (name, df) => writeCsv(df, s"$baseDir/$name") }
-
   /** S5+S6 — JDBC load: Spark creates the table from the DataFrame schema
     * and appends partition-parallel batches. `batchsize` matches the
     * psycopg2 `execute_values` batching intent; `columnTypes` carries the

@@ -1744,9 +1744,18 @@ object Streams {
       .parquet(out)
   }
 
+  /** Suffixes [[runToMemory]]'s query names apart. */
+  private val memorySinks = new java.util.concurrent.atomic.AtomicLong()
+
   /** Convenience: run a streaming DataFrame to an in-memory table until
     * all currently-available data is processed; returns the result. Used
     * by tests and smoke checks (not a production sink).
+    *
+    * The query is named `label` plus a unique suffix, so two runs of one
+    * label never share a sink. The memory sink registers a temporary view
+    * of that name holding every output row; the returned frame is
+    * resolved first, then the view is dropped, so the rows live only as
+    * long as the frame does.
     *
     * `statePartitions`: state-store instance count for stateful streams —
     * baked into the checkpoint at the FIRST micro-batch from
@@ -1756,11 +1765,12 @@ object Streams {
     * instance: delta file + snapshot + maintenance each); a 100 TB
     * production stream wants hundreds. None = session setting.
     */
-  def runToMemory(df: DataFrame, name: String,
+  def runToMemory(df: DataFrame, label: String,
       outputMode: OutputMode = OutputMode.Append(),
       statePartitions: Option[Int] = None,
       availableNow: Boolean = false): DataFrame = {
     val spark = df.sparkSession
+    val name = s"${label}_${memorySinks.incrementAndGet()}"
     withConfs(spark, NoAqe +:
         statePartitions.map(n => "spark.sql.shuffle.partitions" -> n.toString).toSeq: _*) {
       val w = df.writeStream
@@ -1782,6 +1792,8 @@ object Streams {
         if (availableNow) q.awaitTermination() else q.processAllAvailable()
       } finally if (q.isActive) q.stop()
     }
-    spark.table(name)
+    val out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    out
   }
 }

@@ -20,13 +20,22 @@ class GateSpec extends AnyFunSuite {
   }
 
   test("no moved gate is also left in SparkEntry, and the registry keeps its 298 names") {
-    val moved = graft.ops.SimilarityGates.all.map(_.name)
-    assert(moved.size == 21 && moved.distinct == moved)
+    val ann = graft.ops.SimilarityGates.all.map(_.name)
+    val streaming = graft.streaming.StreamGates.all.map(_.name)
+    assert(ann.size == 21 && streaming.size == 35)
+    assert(streaming.forall(_.startsWith("stream_")))
+    val moved = ann ++ streaming
+    assert(moved.distinct == moved)
     // the merge throws if SparkEntry's own map still defines a moved name
     val queries = SparkEntry.queries
     val oracles = SparkEntry.oracleSql
     assert(queries.size == 298 && oracles.keySet == queries.keySet)
     assert(moved.forall(n => queries.contains(n) && oracles.contains(n)))
+    // the whole streaming family is records, and each transformWithState
+    // twin is checked against its legacy base's oracle
+    assert(queries.keySet.filter(_.startsWith("stream_")) == streaming.toSet)
+    val twins = streaming.filter(_.endsWith("_tws"))
+    assert(twins.size == 9 && twins.forall(n => oracles(n) == oracles(n.stripSuffix("_tws"))))
   }
 
   test("a record's oracle SQL is built when read, against the current verifySfDir") {

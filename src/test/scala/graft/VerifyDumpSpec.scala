@@ -60,12 +60,12 @@ class VerifyDumpSpec extends SparkSpec {
 
   test("band dump day d ≡ the staged replay's delivered ts bucket, doc by doc") {
     assume(new java.io.File(sfDir, "documents.parquet").exists(), s"$sfDir missing")
-    val bandDays = SparkEntry.neardupBandFrame(spark, sfDir)
+    val bandDays = graft.streaming.StreamGates.neardupBandFrame(spark, sfDir)
       .select(col("doc_id"), col("d")).distinct()
     // drain the actual staged replay (the files the streaming gate
     // reads) and recover each doc's day from its delivered ts
     val name = "verify_dump_spec_etdocs"
-    val q = SparkEntry.etDocsReplayStream(spark, sfDir)
+    val q = graft.streaming.StreamGates.etDocsReplayStream(spark, sfDir)
       .writeStream.format("memory").queryName(name).start()
     try q.processAllAvailable() finally q.stop()
     val replayDays = spark.table(name)

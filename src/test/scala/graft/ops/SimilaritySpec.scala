@@ -288,6 +288,23 @@ class SimilaritySpec extends SparkSpec {
     } finally profiler.close()
   }
 
+  test("ivfpqTrain: its jobs are named under the caller's description, apart from plain PQ's") {
+    val emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    val coarse = Similarity.ivfCodebook(emb, "vec_id", "embedding", k = 4, iters = 1)
+    val profiler = new graft.Profiler(spark)
+    val sc = spark.sparkContext
+    try {
+      val t0 = System.currentTimeMillis()
+      graft.FanOut.described(sc, "caller") {
+        Similarity.ivfpqTrain(emb, "vec_id", "embedding", dim = 64, numSubspaces = 2,
+          numCentroids = 4, coarse = coarse, iters = 1).collect()
+      }
+      val jobs = profiler.take(t0, System.currentTimeMillis()).jobs
+      for (s <- 0 until 2; step <- Seq("seed", "round 1"))
+        assert(jobs.contains(s"caller / ivfpqTrain / pqTrain subspace $s / lloyd $step"), jobs)
+    } finally profiler.close()
+  }
+
   test("pqTrain: one failed subspace fails the call, and no sibling job starts after it") {
     // element 0 is not a number, so only subspace 0's slice fails its
     // (ANSI) cast; subspaces 1-3 would otherwise keep training

@@ -926,10 +926,9 @@ class StreamsSpec extends SparkSpec {
       (3L, us(9), None)))        // key absent from the dim
     // a second batch arriving later still enriches (stateless re-plan)
     in.addData((1L, us(11)))
-    Streams.runToMemory(
+    val again = Streams.runToMemory(
       Streams.asofEnrichStatic(stream, dim, Seq("user_id"), "ts", "valid_from", Seq("d_state")),
-      "asof_out2")
-    val again = spark.table("asof_out2").select("user_id", "ts", "d_state")
+      "asof_out2").select("user_id", "ts", "d_state")
       .as[(Long, Long, Option[String])].collect().toSet
     assert(again.contains((1L, us(11), Some("v2"))))
   }
@@ -1026,8 +1025,7 @@ class StreamsSpec extends SparkSpec {
     // batch 2: the carried state (b for user 1, x for user 2) pairs with
     // the new arrivals
     in.addData((1L, 102L, 30L, "c"), (2L, 201L, 9L, "y"))
-    Streams.runToMemory(Streams.transitionsStateful(ds).toDF(), "trans_out2")
-    val r2 = spark.table("trans_out2").as[(Long, String, String)].collect().toSet
+    val r2 = Streams.runToMemory(Streams.transitionsStateful(ds).toDF(), "trans_out2").as[(Long, String, String)].collect().toSet
     assert(r2.contains((1L, "b", "c")) && r2.contains((2L, "x", "y")),
       s"cross-batch carry: $r2")
   }
@@ -1219,6 +1217,19 @@ class StreamsSpec extends SparkSpec {
     val noise = seen.toArray.map(_.toString).filter(m => Seq("Failed to cancel job group",
       "spark.sql.adaptive.enabled is not supported", "Disabling AQE").exists(m.contains))
     assert(noise.isEmpty, noise.mkString("\n"))
+  }
+
+  test("runToMemory: two runs of one label keep their own rows and leave no view or query behind") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    def tempViews = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    val before = tempViews
+    val in = MemoryStream[Long]
+    in.addData(3L, 1L, 2L)
+    val outs = Seq.fill(2)(Streams.runToMemory(in.toDF(), "same_label"))
+    assert(outs.map(_.as[Long].collect().toSeq.sorted) == Seq.fill(2)(Seq(1L, 2L, 3L)))
+    assert(tempViews == before, s"left behind: ${tempViews -- before}")
+    assert(spark.streams.active.isEmpty)
   }
 
   test("latestStateChanges: expiry emits a DELETE tombstone carrying the dying winner") {
@@ -1705,8 +1716,7 @@ class StreamsSpec extends SparkSpec {
       val r1 = out1.as[(Long, String, String)].collect().toSet
       assert(r1 == Set((1L, "a", "b")), s"batch 1: $r1")
       in.addData((1L, 102L, 30L, "c"), (2L, 201L, 9L, "y"))
-      Streams.runToMemory(Streams.transitionsStatefulTws(ds).toDF(), "trans_tws_out2")
-      val r2 = spark.table("trans_tws_out2").as[(Long, String, String)].collect().toSet
+      val r2 = Streams.runToMemory(Streams.transitionsStatefulTws(ds).toDF(), "trans_tws_out2").as[(Long, String, String)].collect().toSet
       assert(r2.contains((1L, "b", "c")) && r2.contains((2L, "x", "y")),
         s"cross-batch carry: $r2")
     }
@@ -1729,8 +1739,7 @@ class StreamsSpec extends SparkSpec {
     // second pass replays all data plus extenders/breakers: (16,20)
     // extends user 1's open (12,15); (30,31) closes the extended run
     in.addData((1L, 16L, 20L), (1L, 30L, 31L))
-    Streams.runToMemory(Streams.episodeState(ds, gap = 1L).toDF(), "epi_out2")
-    val r2 = spark.table("epi_out2").as[(Long, Long, Long, Long)].collect().toSet
+    val r2 = Streams.runToMemory(Streams.episodeState(ds, gap = 1L).toDF(), "epi_out2").as[(Long, Long, Long, Long)].collect().toSet
     assert(r2 == Set((1L, 0L, 10L, 2L), (1L, 12L, 20L, 2L)), s"after batch 2: $r2")
   }
 }
